@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
 import graft.analysis.CodeTokenizer
-import graft.checkpoint.{Manifest, StageRecord}
+import graft.checkpoint.{Manifest, Snapshot, StageRecord}
 import graft.codec.PostingCodec
+import graft.io.TableIO
 import graft.model._
 
 /** Index layout + build configuration.
@@ -65,14 +66,26 @@ final case class IndexConfig(
     // historical partition count). Deployment knobs, not per-query tuning.
     rangeTargetBytes: Long = 32L * 1024 * 1024,
     encodeTargetBytes: Long = 6L * 1024 * 1024) {
-  def keymapPath: String = s"$indexDir/keymap"
-  def forwardPath: String = s"$indexDir/forward"
-  def vocabPath: String = s"$indexDir/vocab"
-  def docsPath: String = s"$indexDir/docs"
-  def postingsPath: String = s"$indexDir/postings"
-  def lexiconPath: String = s"$indexDir/lexicon"
-  def metricsPath: String = s"$indexDir/metrics"
-  def positionsPath: String = s"$indexDir/positions"
+  // Each structure's directory as the committed manifest names it (a
+  // structure not committed yet: its default name), so every reader sees
+  // the committed state.
+  def keymapPath: String = path(dir("keymap"))
+  def forwardPath: String = path(dir("forward"))
+  def vocabPath: String = path(dir("postings", "vocabDir", "vocab"))
+  def docsPath: String = path(dir("docs"))
+  def postingsPath: String = path(dir("postings"))
+  def lexiconPath: String = path(dir("lexicon"))
+  def metricsPath: String = path("metrics")
+  def positionsPath: String = path(dir("positions"))
+
+  /** Committed directory of `stage`'s record extra `key`, relative to
+    * `indexDir`. */
+  private[index] def dir(stage: String, key: String = "dir",
+      default: String = ""): String =
+    new Manifest(indexDir).get(stage).flatMap(_.extra.get(key))
+      .getOrElse(if (default.nonEmpty) default else stage)
+
+  private[index] def path(rel: String): String = s"$indexDir/$rel"
 }
 
 object IndexConfig {
@@ -109,8 +122,9 @@ final case class PartitionMetric(
 
 /** Distributed inverted-index builder.
   *
-  * Stages (each checkpointed in manifest.json; resume skips completed stages
-  * whose input fingerprint matches):
+  * Stages (each writes its directory, then commits its record as one
+  * manifest version; resume skips completed stages whose input
+  * fingerprint matches, and a crashed stage reruns over its own output):
   *
   *   0. keymap   — keys-ONLY scan (repo, path, commit — content column
   *                 pruned at the parquet reader, so content bytes are never
@@ -151,11 +165,10 @@ object IndexBuilder {
 
   /** Bumped whenever the on-disk index layout or stage semantics change:
     * part of every stage fingerprint, so resume never reuses output written
-    * by an incompatible builder version. (v5: distributed termId assignment
-    * — multi-file vocab with advisory df column; crash-safe append merge
-    * with per-step manifest records; keymap stage stores docId directly in
-    * the forward index — no persist of the tokenized corpus.) */
-  val FormatVersion = 5
+    * by an incompatible builder version. (v6: one manifest commit per
+    * build stage, append and compaction; the manifest names each
+    * structure's directory. Older indexes must be rebuilt.) */
+  val FormatVersion = 6
 
   /** Scale-adaptive partition count (optimization guide §2.2/§6.1): derive
     * the partition count from the DATA size — `ceil(bytes / targetBytes)`,
@@ -177,21 +190,17 @@ object IndexBuilder {
     * multi-partition stages keep the distributed count. */
   private[index] def parquetRowCount(spark: SparkSession, dir: String): Long = {
     val hconf = spark.sessionState.newHadoopConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(hconf)
-    fs.listStatus(d)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+    Manifest.io(dir).list(dir).filter(_.startsWith("part-")).map { n =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(s"$dir/$n"), hconf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** Plan-estimated size of a dataset's source (parquet file bytes for a
     * table scan); Long.MaxValue when the estimate is unusable. */
-  private def planBytes(df: org.apache.spark.sql.DataFrame): Long = {
+  private[index] def planBytes(df: org.apache.spark.sql.DataFrame): Long = {
     val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (s.isValidLong && s.toLong > 0L) s.toLong else Long.MaxValue
   }
@@ -212,12 +221,13 @@ object IndexBuilder {
   def build(spark: SparkSession, corpus: Dataset[SourceFile],
       cfg: IndexConfig, fingerprint: String = ""): CorpusStats = {
     import spark.implicits._
+    // an index of an older format is rebuilt from scratch, never migrated
+    if (Manifest.olderFormat(cfg.indexDir))
+      Manifest.io(cfg.indexDir).deleteRecursively(cfg.indexDir)
     val manifest = new Manifest(cfg.indexDir)
     val fp = s"v$FormatVersion:" +
       (if (fingerprint.nonEmpty) fingerprint else "corpus")
-    val parts =
-      if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sparkContext.defaultParallelism
+    val parts = partitions(spark, cfg)
     val metricsAcc: CollectionAccumulator[PartitionMetric] =
       spark.sparkContext.collectionAccumulator[PartitionMetric]("graft.metrics")
 
@@ -225,8 +235,7 @@ object IndexBuilder {
     // The content column is pruned at the parquet reader: this pass reads
     // and shuffles three short strings per row, so a range-boundary
     // sampling job over it is essentially free. docId = dense lexicographic
-    // rank via the same offset-rank assignment as termIds (VERDICT r1 fix
-    // #5: no persist of the tokenized corpus, no re-tokenization).
+    // rank via the same offset-rank assignment as termIds.
     // stage partition sizing derives from the corpus' estimated bytes
     // (scale-adaptive — see sizedParts): a ~MB corpus runs 1-partition
     // range stages instead of `parts`-wide ones
@@ -281,7 +290,7 @@ object IndexBuilder {
       }
       manifest.commit(StageRecord("keymap", "complete", fp, acc,
         (System.nanoTime() - t0) / 1000000,
-        Map("partitions" -> rangeParts.toString)))
+        Map("partitions" -> rangeParts.toString, "dir" -> cfg.dir("keymap"))))
     }
 
     // ---- stage 1: forward index -------------------------------------------
@@ -319,13 +328,13 @@ object IndexBuilder {
       manifest.commit(StageRecord("forward", "complete", fp, nDocs0,
         (System.nanoTime() - t0) / 1000000,
         Map("partitions" -> parts.toString,
-            "totalTokens" -> totalToks.toString)))
+            "totalTokens" -> totalToks.toString, "dir" -> cfg.dir("forward"))))
     }
 
     val numDocs = manifest.get("forward").get.rows
     val totalTokens = manifest.get("forward").get.extra("totalTokens").toLong
     val avgDl = totalTokens.toDouble / math.max(numDocs, 1L)
-    def forwardWithIds = loadForward(spark, cfg)
+    def forwardWithIds = spark.read.parquet(cfg.forwardPath)
 
     // ---- stage 2: docs (projection; terms/tfs pruned at the reader) --------
     // `shard` is MATERIALIZED here (not recomputed at query time): the shard
@@ -341,7 +350,7 @@ object IndexBuilder {
         .write.mode("overwrite").parquet(cfg.docsPath)
       manifest.commit(StageRecord("docs", "complete", fp, numDocs,
         (System.nanoTime() - t0) / 1000000,
-        Map("totalTokens" -> totalTokens.toString)))
+        Map("totalTokens" -> totalTokens.toString, "dir" -> cfg.dir("docs"))))
     }
 
     // ---- stage 3: vocab + postings ------------------------------------------
@@ -363,22 +372,11 @@ object IndexBuilder {
           .as[(String, Long)],
         parts, cfg.vocabPath, baseId = 0L, targetBytes = cfg.rangeTargetBytes)
 
-      // Salt the top-df terms above threshold: bounded at maxHeavyTerms
-      // (≤4096), so THIS collect is scale-safe by construction. Ties at the
-      // cutoff break by term (deterministic across parallelism). Skipped
-      // without a job when the vocab's max df (from writeRanked's one agg)
-      // can't cross the threshold — every small/micro-batch build.
-      val heavy: java.util.HashSet[Integer] = {
-        val s = new java.util.HashSet[Integer]()
-        if (maxDf > cfg.heavyDfThreshold)
-          spark.read.parquet(cfg.vocabPath)
-            .filter($"df" > cfg.heavyDfThreshold)
-            .orderBy($"df".desc, $"term".asc)
-            .limit(cfg.maxHeavyTerms)
-            .select($"termId").as[Int].collect()
-            .foreach(id => s.add(id))
-        s
-      }
+      // skipped without a job when the vocab's max df (from writeRanked's
+      // one agg) can't cross the threshold — every small/micro-batch build
+      val heavy =
+        if (maxDf > cfg.heavyDfThreshold) heavyTerms(spark, cfg.vocabPath, cfg)
+        else new java.util.HashSet[Integer]()
 
       val nb = encodePostings(spark, forwardWithIds, heavy, numDocs, avgDl,
         cfg, parts, totalTokens, metricsAcc, cfg.postingsPath)
@@ -389,7 +387,9 @@ object IndexBuilder {
             "numShards" -> cfg.numShards.toString,
             // block-max metadata was computed with THIS avgdl; queries after
             // appends scale UBs by avgdlNow/min(avgDlAtBuild) to stay exact
-            "avgDlAtBuild" -> avgDl.toString)))
+            "avgDlAtBuild" -> avgDl.toString,
+            "dir" -> cfg.dir("postings"),
+            "vocabDir" -> cfg.dir("postings", "vocabDir", "vocab"))))
     }
 
     // ---- stage 4: lexicon + stats ------------------------------------------
@@ -398,38 +398,50 @@ object IndexBuilder {
       writeLexicon(spark, cfg.postingsPath, cfg.vocabPath,
         cfg.lexiconPath, parts, cfg.rangeTargetBytes)
       // one lexicon row per vocab term (see writeLexicon) — the count is
-      // stage 3's vocabSize, no job needed; a legacy postings record
-      // without the key (resumed old index) falls back to one count
-      val vocabN = manifest.get("postings")
-        .flatMap(_.extra.get("vocabSize")).map(_.toLong)
-        .getOrElse(spark.read.parquet(cfg.lexiconPath).count())
+      // stage 3's vocabSize, no job needed
+      val vocabN = manifest.get("postings").get.extra("vocabSize").toLong
       manifest.commit(StageRecord("lexicon", "complete", fp, vocabN,
         (System.nanoTime() - t0) / 1000000,
         Map("numDocs" -> numDocs.toString, "avgDl" -> avgDl.toString,
-            "totalTokens" -> totalTokens.toString)))
+            "totalTokens" -> totalTokens.toString,
+            "dir" -> cfg.dir("lexicon"))))
     }
 
-    // ---- metrics sink -------------------------------------------------------
-    val collected = metricsAcc.value
-    if (!collected.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      // driver-local list — one task / one file (coalesce: no shuffle),
-      // not defaultParallelism tiny files per build
-      spark.createDataset(collected.asScala.toSeq).coalesce(1)
-        .write.mode("append").parquet(cfg.metricsPath)
-    }
-
-    val lex = manifest.get("lexicon").get
-    CorpusStats(numDocs, avgDl, totalTokens, lex.rows)
+    writeMetrics(spark, metricsAcc, cfg)
+    CorpusStats(numDocs, avgDl, totalTokens, manifest.get("lexicon").get.rows)
   }
 
-  /** The forward index (docId is stored directly since the keymap stage
-    * assigns it before the forward write). */
-  def loadForward(spark: SparkSession, cfg: IndexConfig)
-      : org.apache.spark.sql.DataFrame = {
-    if (new Manifest(cfg.indexDir).get("forward").isEmpty)
-      throw new IllegalStateException(s"forward stage missing in ${cfg.indexDir}")
-    spark.read.parquet(cfg.forwardPath)
+  /** Append an accumulator's per-partition metrics rows to the metrics
+    * table: one task and one file (coalesce: no shuffle). */
+  private def writeMetrics(spark: SparkSession,
+      acc: CollectionAccumulator[PartitionMetric], cfg: IndexConfig): Unit = {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val collected = acc.value
+    if (!collected.isEmpty)
+      spark.createDataset(collected.asScala.toSeq).coalesce(1)
+        .write.mode("append").parquet(cfg.metricsPath)
+  }
+
+  private[index] def partitions(spark: SparkSession, cfg: IndexConfig): Int =
+    if (cfg.buildPartitions > 0) cfg.buildPartitions
+    else spark.sparkContext.defaultParallelism
+
+  /** The terms to salt: the top-df ones above the threshold, at most
+    * maxHeavyTerms (≤4096), so the collect is scale-safe by construction;
+    * ties at the cutoff break by term (deterministic across parallelism).
+    * `path` holds a vocab or a lexicon (both carry term, termId, df). */
+  private def heavyTerms(spark: SparkSession, path: String,
+      cfg: IndexConfig): java.util.HashSet[Integer] = {
+    import spark.implicits._
+    val s = new java.util.HashSet[Integer]()
+    spark.read.parquet(path)
+      .filter($"df" > cfg.heavyDfThreshold)
+      .orderBy($"df".desc, $"term".asc)
+      .limit(cfg.maxHeavyTerms)
+      .select($"termId").as[Int].collect()
+      .foreach(id => s.add(id))
+    s
   }
 
   /** The salted postings-encode pipeline (build stage 3 and compact share
@@ -480,19 +492,15 @@ object IndexBuilder {
       .join(vocabIds, "term")
       .select($"termId", saltExpr.as("salt"), $"docId", $"tf", $"dl")
 
-    // ---- packed-run shuffle (round 3; cfg.packRuns toggle round 4) --------
-    // The postings shuffle is the build's dominant data movement: one
-    // ~48-byte Tungsten row per posting, external-sorted reduce-side.
-    // Instead, each map partition locally sorts its postings ONCE and packs
-    // them into delta+VByte runs of ≤ RunPackCap postings — the shuffle
-    // then moves ~4-6 bytes per posting and the reduce side k-way-merges
-    // run streams (a trivial sort of run headers) instead of sorting rows.
-    // The merged per-(termId,salt) stream is docId-sorted exactly like the
-    // old sorter output, so the emitted blocks are identical.
-    // cfg.packRuns = false skips the pack (raw-row shuffle + reduce-side
-    // sort): the right choice where the shuffle is local-disk-bound rather
-    // than network-bound — see the IndexConfig field doc. Both paths emit
-    // bit-identical blocks (IndexSpec pins it).
+    // ---- packed-run shuffle ------------------------------------------------
+    // The postings shuffle is the build's dominant data movement. Each map
+    // partition locally sorts its postings ONCE and packs them into
+    // delta+VByte runs of ≤ RunPackCap postings — the shuffle moves ~4-6
+    // bytes per posting instead of a ~48-byte row, and the reduce side
+    // k-way-merges run streams instead of sorting rows. cfg.packRuns =
+    // false skips the pack (raw-row shuffle + reduce-side sort) for
+    // local-disk-bound shuffles — see the IndexConfig field doc. Both paths
+    // emit bit-identical blocks (IndexSpec pins it).
     //
     // 4× tasks per core in both paths: finer skew smoothing — the same
     // sizing rule a cluster deployment uses; heavy terms are salted so one
@@ -506,42 +514,32 @@ object IndexBuilder {
           encodeSortedPostings(it, nDocs, nShards, blockSize, bm25, avgDlV,
             metricsAcc)
         }
-      // ---- final layout: RANGE-partitioned on termId (round 6) ------------
+      // ---- final layout: RANGE-partitioned on termId ------------------------
       // The encode shuffle hash-partitions on (termId, salt), so every
-      // output file would span the whole termId range and a term lookup
-      // must open every file. One extra pass over the encoded blocks
-      // rewrites them range-partitioned and sorted on (termId, shard,
-      // blockIdx). Two-phase because repartitionByRange samples its child:
-      // sampling the written parquet costs one cheap scan, sampling the
-      // un-materialized encode lineage would re-run the whole
-      // explode+join map side. (The packed path below avoids the extra
-      // pass entirely — this raw-row path is the non-default deployment
-      // toggle.)
+      // output file would span the whole termId range. One extra pass
+      // rewrites the blocks range-partitioned and sorted on (termId, shard,
+      // blockIdx) — from the written parquet, because repartitionByRange's
+      // sampling of the un-materialized lineage would re-run the whole
+      // explode+join map side.
       val unranged = s"$outPath.unranged"
       blocks.write.mode("overwrite").parquet(unranged)
       spark.read.parquet(unranged)
         .repartitionByRange(encodeParts, $"termId", $"shard", $"blockIdx")
         .sortWithinPartitions($"termId", $"shard", $"blockIdx")
         .write.mode("overwrite").parquet(outPath)
-      val hconf = spark.sessionState.newHadoopConf()
-      val up = new org.apache.hadoop.fs.Path(unranged)
-      up.getFileSystem(hconf).delete(up, true)
+      Manifest.io(unranged).deleteRecursively(unranged)
     } else {
       // ---- packed path: ONE range-placed shuffle, final layout directly ---
-      // The packed runs are persisted (executor block-manager cache — the
-      // ~5 B/posting footprint the old design wrote to a staging parquet
-      // dir), so repartitionByRange's sampling job materializes the
-      // explode+join+pack lineage exactly once and the shuffle re-reads the
-      // cache. Range placement on (termId, salt) keeps every reduce group
-      // whole (equal keys map to one range partition) while making each
-      // output file a narrow contiguous termId slice — the file-level
-      // IndexScan layout (postingsFilesFor) with NO second pass over the
-      // data: round 6's staged rewrite (write + re-read + re-shuffle +
-      // re-write of all packed bytes) was parallelism-independent IO that
-      // measurably dragged the N→4N scaling ratio, so the layout now comes
-      // from the one shuffle the encode already needs. blockIdx resets per
-      // (termId, salt) group — placement-independent, so the raw-row path
-      // above emits bit-identical rows (IndexSpec pins it).
+      // The packed runs are persisted (executor block-manager cache), so
+      // repartitionByRange's sampling job materializes the explode+join+pack
+      // lineage exactly once and the shuffle re-reads the cache. Range
+      // placement on (termId, salt) keeps every reduce group whole while
+      // making each output file a narrow contiguous termId slice — the
+      // file-level IndexScan layout (postingsFilesFor) with no second pass
+      // over the data (a second pass is parallelism-independent IO that
+      // drags the N→4N scaling ratio). blockIdx resets per (termId, salt)
+      // group — placement-independent, so the raw-row path above emits
+      // bit-identical rows (IndexSpec pins it).
       // a single-partition range exchange runs no sampling job, so the
       // packed-run lineage executes exactly once in the write — persisting
       // it would only add cache churn
@@ -753,22 +751,14 @@ object IndexBuilder {
   }
 
   /** Per-term stats aggregated from block metadata → lexicon parquet,
-    * range-partitioned and sorted by termId. Returns nothing: the lexicon
-    * row count equals the vocab size by construction (every vocab term
-    * has >= 1 posting block — terms come from forward rows; the append
-    * path already relies on this for termId base assignment) and the
-    * block total is the caller's postings count — both already in hand,
-    * so the old trailing count/sum job over the output is gone. */
+    * range-partitioned and sorted by termId. Returns nothing: the row
+    * count is the vocab size by construction (every vocab term has >= 1
+    * posting block) and the block total is the caller's postings count. */
   private def writeLexicon(spark: SparkSession, postingsPath: String,
       vocabPath: String, outPath: String, parts: Int,
       targetBytes: Long = 32L * 1024 * 1024): Unit = {
     import spark.implicits._
     val vocab = spark.read.parquet(vocabPath).select($"termId", $"term")
-    // one lexicon row per vocab term: size the range exchange from the
-    // vocab's real file bytes (scale-adaptive — see sizedParts), capped at
-    // the old core-derived parts/4
-    val lexParts = sizedParts(planBytes(vocab), targetBytes,
-      math.max(parts / 4, 1))
     val agg = spark.read.parquet(postingsPath)
       .groupBy($"termId")
       .agg(sum($"count").as("df"), sum($"sumTf").as("cf"),
@@ -776,26 +766,36 @@ object IndexBuilder {
         max($"maxTfNorm").as("maxTfNorm"))
       .join(vocab, "termId") // AQE broadcasts when the vocab is small
       .select($"term", $"termId", $"df", $"cf", $"nBlocks", $"maxTfNorm")
-    if (lexParts == 1) {
+    // one lexicon row per vocab term: size the range exchange from the
+    // vocab's real file bytes (scale-adaptive — see sizedParts), capped at
+    // the old core-derived parts/4
+    writeByTermId(agg, sizedParts(planBytes(vocab), targetBytes,
+      math.max(parts / 4, 1)), outPath)
+  }
+
+  /** Write lexicon rows range-partitioned into `nParts` files, each sorted
+    * by termId. */
+  private def writeByTermId(rows: org.apache.spark.sql.DataFrame, nParts: Int,
+      outPath: String): Unit =
+    if (nParts == 1) {
       // single output partition: coalesce instead of a range exchange —
       // identical single sorted partition, no exchange to materialize
-      // (the map-side partial agg keeps its parallelism; only the
+      // (a map-side partial agg keeps its parallelism; only the
       // vocab-sized final agg+join+sort runs in the one task)
-      agg.coalesce(1).sortWithinPartitions($"termId")
+      rows.coalesce(1).sortWithinPartitions("termId")
         .write.mode("overwrite").parquet(outPath)
     } else {
       // persist before the multi-partition range exchange: its sampling
-      // job would otherwise execute the full block-metadata aggregation
-      // twice (same one-pass fix as writeRanked)
-      val src = agg
+      // job would otherwise execute the input lineage twice (same
+      // one-pass fix as writeRanked)
+      val src = rows
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        src.repartitionByRange(lexParts, $"termId")
-          .sortWithinPartitions($"termId")
+        src.repartitionByRange(nParts, col("termId"))
+          .sortWithinPartitions("termId")
           .write.mode("overwrite").parquet(outPath)
       } finally { src.unpersist(); () }
     }
-  }
 
   /** Compact a multi-segment index back to the single-segment layout.
     *
@@ -807,165 +807,64 @@ object IndexBuilder {
     * unchanged (still the global dense ranks), the shard mapping is
     * recomputed over the merged doc space, heavy terms are re-detected
     * from the authoritative lexicon df, and block-max bounds are recomputed
-    * with the merged avgdl. Every record carrying a stale `avgDlAtBuild`
-    * (append segments, the base postings record) is re-stamped with the
-    * merged avgdl, so the Searcher's ubScale correction actually returns
-    * to 1. The Lucene/terrier segment-merge shape (SURVEY.md §7.4).
+    * with the merged avgdl. The Lucene/terrier segment-merge shape
+    * (SURVEY.md §7.4).
     *
-    * Crash safety: the three output dirs are fully staged first and a
-    * `compact-N-staged` record committed; each delete→move swap then
-    * commits its own `compact-N-swap-*` record, and `compact()` starts by
-    * finishing any interrupted swap sequence (the same idempotent-retry
-    * discipline as append's merge steps) — so a crash at ANY point leaves
-    * an index that the next compact() call repairs before proceeding. */
+    * Crash safety: the three structures go to fresh `-vN` directories (N =
+    * the version the commit creates) and ONE manifest commit publishes
+    * them, sets every segment record's `avgDlAtBuild` to the merged avgdl
+    * (so the Searcher's ubScale is exactly 1 again) and drops the replaced
+    * directories. A crash before it leaves the index untouched; a retry
+    * rewrites the same directories. Per-partition metrics land in the
+    * index's metrics table, as a build's do. */
   def compact(spark: SparkSession, cfg: IndexConfig): CorpusStats = {
     import spark.implicits._
     val manifest = new Manifest(cfg.indexDir)
-
-    // ---- recovery: finish an interrupted swap sequence from a previous
-    // compact before reading anything (the live dirs may be missing/mixed)
-    val doneIdx = manifest.read().keys.count(_.matches("compact-\\d+"))
-    manifest.get(s"compact-$doneIdx-staged").foreach { staged =>
-      // compact never changes numDocs, so a numDocs drift means an append
-      // ran after the crash (only possible once the swaps had completed):
-      // finish the bookkeeping without clobbering the append's newer
-      // records, then fall through to a fresh compact over everything
-      val intact = stats(cfg).numDocs == staged.extra("numDocs").toLong
-      finishCompactSwaps(manifest, cfg, doneIdx, staged,
-        refreshRecords = intact)
-      // the swaps deleted/replaced live dirs: re-list any cached plan
-      // rooted here so later readers aren't substituted a stale listing
-      // over dead files (see append step 5)
-      spark.catalog.refreshByPath(cfg.indexDir)
-      if (intact) {
-        val st0 = stats(cfg)
-        return CorpusStats(st0.numDocs, st0.avgDl, st0.totalTokens,
-          staged.extra("vocabN").toLong)
-      }
-    }
-
-    val st = stats(cfg)
+    val base = manifest.snapshot()
+    val recs = base.records
+    val st = statsOf(recs("lexicon"))
     val metricsAcc: CollectionAccumulator[PartitionMetric] =
       spark.sparkContext.collectionAccumulator[PartitionMetric]("graft.metrics")
-    val parts = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sparkContext.defaultParallelism
-    val t0 = System.nanoTime()
-    val compactIdx = manifest.read().keys.count(_.matches("compact-\\d+"))
-    val cfp = s"v$FormatVersion:compact$compactIdx"
+    val parts = partitions(spark, cfg)
 
     // union of forward indexes with global docIds (segment forwards are
     // 0-based; shift by each segment's recorded docIdBase)
-    val appends = manifest.read().toSeq
-      .filter(_._1.matches("append-\\d+"))
-      .sortBy(_._1.stripPrefix("append-").toInt)
-    var fw = spark.read.parquet(cfg.forwardPath)
-    appends.foreach { case (name, rec) =>
-      val idx = name.stripPrefix("append-").toInt
-      val base = rec.extra("docIdBase").toLong
-      fw = fw.unionByName(
-        spark.read.parquet(s"${cfg.indexDir}/segments/seg$idx/forward")
-          .withColumn("docId", $"docId" + base))
+    val segs = recs.values.filter(_.stage.startsWith("append-")).toSeq
+    val fw = segs.foldLeft(spark.read.parquet(cfg.forwardPath)) { (df, r) =>
+      df.unionByName(spark.read.parquet(
+        cfg.copy(indexDir = cfg.path(r.extra("dir"))).forwardPath)
+        .withColumn("docId", $"docId" + r.extra("docIdBase").toLong))
     }
 
     // fresh global shard mapping + docs table
+    val v = base.version + 1
+    val (docsDir, postingsDir, lexiconDir) =
+      (s"docs-v$v", s"postings-v$v", s"lexicon-v$v")
     val nDocsV = st.numDocs; val nShardsV = cfg.numShards
     val shardUdf = udf((d: Long) => shardOf(d, nDocsV, nShardsV))
-    val docsNew = s"${cfg.indexDir}/docs_compact"
     fw.select($"docId", $"repo", $"path", $"commit", $"lang", $"dl", $"sha",
         shardUdf($"docId").as("shard"))
-      .write.mode("overwrite").parquet(docsNew)
+      .write.mode("overwrite").parquet(cfg.path(docsDir))
 
     // heavy terms from the authoritative (merged) lexicon df
-    val heavy: java.util.HashSet[Integer] = {
-      val s = new java.util.HashSet[Integer]()
-      spark.read.parquet(cfg.lexiconPath)
-        .filter($"df" > cfg.heavyDfThreshold)
-        .orderBy($"df".desc, $"term".asc)
-        .limit(cfg.maxHeavyTerms)
-        .select($"termId").as[Int].collect()
-        .foreach(id => s.add(id))
-      s
-    }
-    val postingsNew = s"${cfg.indexDir}/postings_compact"
-    val nb = encodePostings(spark, fw, heavy, st.numDocs, st.avgDl, cfg,
-      parts, st.totalTokens, metricsAcc, postingsNew)
-    val lexiconNew = s"${cfg.indexDir}/lexicon_compact"
-    writeLexicon(spark, postingsNew, cfg.vocabPath,
-      lexiconNew, parts, cfg.rangeTargetBytes)
-    // compact never changes the vocabulary, so the merged vocabN is the
-    // pre-compact lexicon record's row count (one row per vocab term)
-    val vocabN = manifest.get("lexicon").get.rows
+    val nb = encodePostings(spark, fw, heavyTerms(spark, cfg.lexiconPath, cfg),
+      st.numDocs, st.avgDl, cfg, parts, st.totalTokens, metricsAcc,
+      cfg.path(postingsDir))
+    // compact never changes the vocabulary: the lexicon's row count stays
+    writeLexicon(spark, cfg.path(postingsDir), cfg.vocabPath,
+      cfg.path(lexiconDir), parts, cfg.rangeTargetBytes)
 
-    // all three staged dirs are complete and mutually consistent: from here
-    // the swap sequence is recoverable step-by-step (records below)
-    manifest.commit(StageRecord(s"compact-$compactIdx-staged", "complete",
-      cfp, nb, (System.nanoTime() - t0) / 1000000,
-      Map("numDocs" -> st.numDocs.toString,
-          "avgDl" -> st.avgDl.toString,
-          "totalTokens" -> st.totalTokens.toString,
-          "vocabN" -> vocabN.toString,
-          "nBlocks" -> nb.toString,
-          "compactedSegments" -> (appends.size + 1).toString)))
-    finishCompactSwaps(manifest, cfg, compactIdx,
-      manifest.get(s"compact-$compactIdx-staged").get)
-    // post-swap re-list, same reason as the recovery path above
+    val avgDl = st.avgDl.toString
+    def restamp(r: StageRecord) = r.copy(extra = r.extra + ("avgDlAtBuild" -> avgDl))
+    def moved(r: StageRecord, dir: String) = r.copy(extra = r.extra + ("dir" -> dir))
+    val updated = segs.map(restamp) ++ Seq(
+      moved(recs("docs"), docsDir),
+      moved(restamp(recs("postings")).copy(rows = nb), postingsDir),
+      moved(recs("lexicon"), lexiconDir))
+    manifest.commit(base, recs ++ updated.map(r => r.stage -> r))
+    writeMetrics(spark, metricsAcc, cfg)
     spark.catalog.refreshByPath(cfg.indexDir)
-    CorpusStats(st.numDocs, st.avgDl, st.totalTokens, vocabN)
-  }
-
-  /** The recoverable tail of compact(): swap each staged dir into place
-    * (delete live → move staged, each step idempotent under retry and
-    * recorded in the manifest), then re-stamp every stale `avgDlAtBuild`,
-    * refresh the authoritative `postings`/`lexicon` records, and commit the
-    * final `compact-N` record. Safe to call again at any point after a
-    * crash: completed steps are skipped, half-done swaps are finished
-    * (staged dir still present → redo delete+move; staged dir gone → the
-    * move already happened). */
-  private def finishCompactSwaps(manifest: Manifest, cfg: IndexConfig,
-      idx: Int, staged: StageRecord, refreshRecords: Boolean = true): Unit = {
-    val cfp = staged.inputFingerprint
-    def swapStep(name: String, tmp: String, live: String): Unit = {
-      if (!manifest.isComplete(s"compact-$idx-swap-$name", cfp)) {
-        if (new java.io.File(tmp).exists()) {
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(live))
-          java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-            java.nio.file.Paths.get(live))
-        } // else: a previous attempt crashed after the move — already live
-        manifest.commit(StageRecord(s"compact-$idx-swap-$name", "complete",
-          cfp, 0L, 0L, Map.empty))
-      }
-    }
-    swapStep("docs", s"${cfg.indexDir}/docs_compact", cfg.docsPath)
-    swapStep("postings", s"${cfg.indexDir}/postings_compact", cfg.postingsPath)
-    swapStep("lexicon", s"${cfg.indexDir}/lexicon_compact", cfg.lexiconPath)
-
-    val avgDl = staged.extra("avgDl")
-    val nb = staged.extra("nBlocks").toLong
-    if (refreshRecords) {
-      // every live block's bounds were just recomputed with the merged
-      // avgdl: re-stamp stale per-segment avgDlAtBuild records so
-      // Searcher.ubScale returns to exactly 1 (it minimizes over ALL
-      // records)
-      manifest.read().foreach { case (_, rec) =>
-        if (rec.extra.contains("avgDlAtBuild") &&
-            rec.extra("avgDlAtBuild") != avgDl)
-          manifest.commit(rec.copy(extra = rec.extra + ("avgDlAtBuild" -> avgDl)))
-      }
-      // refresh the authoritative postings record (block count + avgdl) so
-      // the Searcher's localServe/cache budgets see the true size
-      manifest.get("postings").foreach { rec =>
-        manifest.commit(rec.copy(rows = nb,
-          extra = rec.extra + ("avgDlAtBuild" -> avgDl)))
-      }
-      manifest.commit(StageRecord("lexicon", "complete", cfp,
-        staged.extra("vocabN").toLong, 0L,
-        Map("numDocs" -> staged.extra("numDocs"), "avgDl" -> avgDl,
-            "totalTokens" -> staged.extra("totalTokens"))))
-    }
-    manifest.commit(StageRecord(s"compact-$idx", "complete", cfp, nb, 0L,
-      Map("numShards" -> cfg.numShards.toString,
-          "avgDlAtBuild" -> avgDl,
-          "compactedSegments" -> staged.extra("compactedSegments"))))
+    st
   }
 
   /** Dense lexicographic rank assignment WITHOUT a driver-side collect of
@@ -1039,25 +938,19 @@ object IndexBuilder {
     } finally agg.unpersist()
   }
 
-  /** Move every data file from a freshly-written staging dir into `targetDir`
-    * under deterministic `prefix`-ed names. Idempotent under retry: any
-    * previously-moved files with the same prefix are deleted first (Spark
-    * part-file names embed a fresh UUID per write, so a blind re-move would
-    * duplicate rows). */
-  private[index] def mergeParquetDir(stageDir: String, targetDir: String,
-      prefix: String): Unit = {
-    val stage = new java.io.File(stageDir)
-    val target = new java.io.File(targetDir)
-    target.mkdirs()
-    target.listFiles().filter(_.getName.startsWith(s"$prefix-"))
-      .foreach(f => f.delete())
-    stage.listFiles().filter(_.getName.startsWith("part-")).foreach { f =>
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(target, s"$prefix-${f.getName}").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
-  }
+  /** Move the part-files of a freshly written `stage` dir into `target`
+    * as `prefix-<name>`. */
+  private[index] def moveParts(io: TableIO, stage: String, target: String,
+      prefix: String): Unit =
+    io.list(stage).filter(_.startsWith("part-"))
+      .foreach(n => io.rename(s"$stage/$n", s"$target/$prefix-$n"))
+
+  /** Delete the `prefix-` files a crashed attempt moved into `dir`: Spark
+    * part-file names embed a fresh UUID per write, so a retry that moved
+    * its files in next to them would duplicate rows. */
+  private[index] def dropParts(io: TableIO, dir: String, prefix: String): Unit =
+    io.list(dir).filter(_.startsWith(s"$prefix-"))
+      .foreach(n => io.deleteIfExists(s"$dir/$n"))
 
   /** Wrap `it` so `onDone` fires once when it is exhausted. */
   private def completionHook[T](it: Iterator[T], onDone: () => Unit): Iterator[T] =
@@ -1072,386 +965,193 @@ object IndexBuilder {
     }
 
   /** Append a batch of new documents to an existing index as a new segment
-    * (batch-incremental indexing; the reference's durability model is WAL
-    * replay — ours is segment append + manifest commit, the Lucene/terrier
-    * segment-merge shape).
+    * (batch-incremental indexing; the Lucene/terrier segment-merge shape).
     *
     * Mechanics: the batch is built as a standalone sub-index under
-    * indexDir/segments/segN (full pipeline, checkpointed), then merged by
-    * OFFSET: docIds shift by the current corpus size (keeping ids dense and
-    * deterministic given batch order), stored shard ids shift into a fresh
-    * range (so per-shard WAND grouping stays exact — a doc's postings all
-    * live in its segment's shards), new terms extend the vocabulary with ids
-    * after the existing ones, and posting blocks are rebased byte-wise
-    * (PostingCodec.shiftBlockBase — no re-encoding). The lexicon is
-    * recomputed; block-max bounds from older segments stay valid via the
-    * avgdl scale correction in Searcher (manifest records avgDlAtBuild per
-    * segment).
+    * indexDir/segments/segN (full pipeline, stage-checkpointed in its own
+    * manifest), then merged by OFFSET: docIds shift by the current corpus
+    * size (keeping ids dense and deterministic given batch order), stored
+    * shard ids shift into a fresh range (so per-shard WAND grouping stays
+    * exact — a doc's postings all live in its segment's shards), new terms
+    * extend the vocabulary with ids after the existing ones, and posting
+    * blocks are rebased byte-wise (PostingCodec.shiftBlockBase — no
+    * re-encoding). The segment's vocab/docs/postings rows join those
+    * structures as `segN-` part-files. The lexicon is merged incrementally
+    * from the committed lexicon into a fresh directory; block-max bounds
+    * from older segments stay valid via the avgdl scale correction in
+    * Searcher (the `append-N` record keeps the segment's avgDlAtBuild).
     *
-    * Crash safety / idempotent retry: each merge step commits a
-    * `merge-N-{vocab,docs,postings}` manifest record on completion, and a
-    * retried append (SAME batch + fingerprint) skips completed steps.
-    * Docs/postings merge by moving staged part-files into the live dirs
-    * under deterministic `segN-` names, deleting same-prefix leftovers
-    * first — so a crash at ANY point mid-merge re-runs cleanly instead of
-    * silently doubling df/cf. The vocab swap's delete→move window is
-    * recovered explicitly at step start. */
+    * Crash safety: ONE manifest commit publishes the `append-N` record, the
+    * new global stats and the new lexicon directory together. A crash
+    * before it leaves only the sub-index checkpoints (a retry resumes them)
+    * and `segN-` files (a retry deletes and rewrites them); a retry after
+    * it, under the same fingerprint, is a no-op. */
   def append(spark: SparkSession, batch: Dataset[SourceFile],
       cfg: IndexConfig, fingerprint: String = ""): CorpusStats = {
-    import spark.implicits._
     val manifest = new Manifest(cfg.indexDir)
-    val st = stats(cfg)
-    val base = st.numDocs
-    // count only the FINAL per-append records (merge step records carry a
-    // distinct "merge-" prefix so an in-flight append doesn't bump the idx)
-    val records = manifest.read()
-    val appendIdx = records.keys.count(_.matches("append-\\d+"))
-    val shardBase = (appendIdx + 1) * cfg.numShards
-    val fp = s"v$FormatVersion:" +
-      (if (fingerprint.nonEmpty) fingerprint else s"append$appendIdx")
-    // Retry guard: a caller-identified append that already COMPLETED — the
-    // caller crashed after our final record committed but before recording
-    // its own progress (TableIndexer.refresh's commitSync) — must be a
-    // no-op. Without it the retry would count the completed record into
-    // appendIdx and append the same batch again as a fresh segment,
-    // double-indexing every row.
-    if (fingerprint.nonEmpty) records.find { case (k, r) =>
-      k.matches("append-\\d+") && r.inputFingerprint == fp
-    }.foreach { case (k, rec) =>
-      // One narrower crash window inside the no-op: the process died
-      // BETWEEN the append-N commit and the trailing lexicon-record
-      // commit, leaving the global stats (numDocs/vocabN/totalTokens)
-      // at their pre-append values — the NEXT append would then reuse
-      // the docId and termId bases, silently colliding ids. Repair the
-      // lexicon record from the append record's own fields before
-      // returning (records carry subTokens for exactly this; ones that
-      // predate the field keep the plain no-op).
-      val idx = k.stripPrefix("append-").toInt
-      val expectDocs = rec.extra("docIdBase").toLong + rec.rows
-      if (idx == appendIdx - 1 && st.numDocs != expectDocs)
-        rec.extra.get("subTokens").foreach { sub =>
-          val tokens = st.totalTokens + sub.toLong
-          val vocabN = manifest.get(s"merge-$idx-lexstage").map(_.rows)
-            .getOrElse(st.vocabSize)
-          manifest.commit(StageRecord("lexicon", "complete",
-            s"v$FormatVersion:append$idx", vocabN, 0L,
-            Map("numDocs" -> expectDocs.toString,
-              "avgDl" ->
-                (tokens.toDouble / math.max(expectDocs, 1L)).toString,
-              "totalTokens" -> tokens.toString)))
-        }
-      return stats(cfg)
+    val base = manifest.snapshot()
+    stageAppend(spark, batch, cfg, fingerprint, base).foreach { recs =>
+      manifest.commit(base, base.records ++ recs.map(r => r.stage -> r))
+      spark.catalog.refreshByPath(cfg.indexDir)
     }
+    stats(cfg)
+  }
+
+  /** Number of appended segments — also the next segment's number. */
+  private[index] def segments(records: Iterable[String]): Int =
+    records.count(_.startsWith("append-"))
+
+  /** Everything [[append]] does except the commit: writes the segment's
+    * files on top of the committed `base` and returns the records to
+    * commit, or None when an append with this `fingerprint` is already
+    * committed. */
+  private[index] def stageAppend(spark: SparkSession, batch: Dataset[SourceFile],
+      cfg: IndexConfig, fingerprint: String, base: Snapshot)
+      : Option[Seq[StageRecord]] = {
+    import spark.implicits._
+    val recs = base.records
+    val seg = segments(recs.keys)
+    val tag = if (fingerprint.nonEmpty) fingerprint else s"append$seg"
+    val fp = s"v$FormatVersion:$tag"
+    if (fingerprint.nonEmpty && recs.exists { case (k, r) =>
+        k.startsWith("append-") && r.inputFingerprint == fp })
+      return None
     val t0 = System.nanoTime()
+    val io = Manifest.io(cfg.indexDir)
+    val st = statsOf(recs("lexicon"))
+    val docBase = st.numDocs
+    val shardBase = (seg + 1) * cfg.numShards
+    val prefix = s"seg$seg"
+    val segDir = s"segments/$prefix"
+    val subCfg = cfg.copy(indexDir = cfg.path(segDir))
+    val subStats = build(spark, batch, subCfg, tag)
+    val parts = partitions(spark, cfg)
+    val (vocabDir, docsDir, postingsDir) =
+      (cfg.vocabPath, cfg.docsPath, cfg.postingsPath)
+    Seq(vocabDir, docsDir, postingsDir).foreach(dropParts(io, _, prefix))
+    val stage = s"${subCfg.indexDir}/merge"
+    // explicit schemas: no driver-side schema-inference pass (fixed
+    // overhead at micro-batch scale), and an empty stage dir reads as no rows
+    val enc = org.apache.spark.sql.Encoders
+    val vocabSchema = "termId INT, term STRING, df BIGINT"
 
-    // 1) standalone sub-index for the batch (internally checkpointed; a
-    //    retried append reuses it)
-    val subCfg = cfg.copy(indexDir = s"${cfg.indexDir}/segments/seg$appendIdx")
-    val subStats = build(spark, batch, subCfg,
-      if (fingerprint.nonEmpty) fingerprint else s"append$appendIdx")
+    // 1) new terms (anti-join on term) get dense ids after the committed
+    //    vocabulary — distributed, no driver collect; existing termIds are
+    //    immutable. O(new terms) per append.
+    val oldVocab = spark.read.schema(vocabSchema).parquet(vocabDir)
+    val (newTerms, _) = writeRanked(spark,
+      spark.read.parquet(subCfg.vocabPath).select($"term", $"df")
+        .join(oldVocab.select($"term"), Seq("term"), "left_anti")
+        .as[(String, Long)],
+      parts, s"$stage/vocab", baseId = st.vocabSize,
+      targetBytes = cfg.rangeTargetBytes)
+    val newVocab = spark.read.schema(vocabSchema).parquet(s"$stage/vocab")
 
-    // 2) merged vocabulary — distributed (no driver collect): existing
-    //    termIds are immutable; new terms (anti-join on term) get dense
-    //    ids after them via the same offset-rank assignment as the build,
-    //    and land as ADDITIONAL vocab part-files under a deterministic
-    //    segN- prefix (r7: O(new terms) per append — the same file-level
-    //    merge discipline as the docs/postings steps; the previous
-    //    whole-vocab union rewrite was an O(vocab) pass per batch, the
-    //    one append step that did not scale with the change size).
-    val vocabLive = new java.io.File(cfg.vocabPath)
-    var vocabMergedThisAttempt = false
-    if (!manifest.isComplete(s"merge-$appendIdx-vocab", fp)) {
-      vocabMergedThisAttempt = true
-      val vocabNewLegacy = s"${cfg.indexDir}/vocab_new"
-      if (!vocabLive.exists() && new java.io.File(vocabNewLegacy).exists()) {
-        // a pre-r7 builder crashed between its delete and move: finish it
-        java.nio.file.Files.move(java.nio.file.Paths.get(vocabNewLegacy),
-          vocabLive.toPath)
-      }
-      // a crashed previous attempt may already have moved some new-term
-      // files in — remove them first so the anti-join and the advisory
-      // size see exactly the pre-append vocabulary (idempotent retry)
-      Option(vocabLive.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(s"seg$appendIdx-"))
-        .foreach(f => { f.delete(); () })
-      val oldVocab = spark.read.parquet(cfg.vocabPath)
-        .select($"termId", $"term", $"df")
-      // current vocab size WITHOUT a Spark job where the manifest already
-      // carries it: the lexicon is one row per vocab term (every term has
-      // ≥1 posting block by construction — terms come from forward rows),
-      // and both build and every completed append refresh its record.
-      // Manifest missing/stale (no lexicon record) falls back to a count.
-      val oldSize = records.get("lexicon").map(_.rows)
-        .getOrElse(oldVocab.count())
-      val newRanked = s"${cfg.indexDir}/vocab_newterms"
-      val parts0 = if (cfg.buildPartitions > 0) cfg.buildPartitions
-        else spark.sparkContext.defaultParallelism
-      val (newTerms, _) = writeRanked(spark,
-        spark.read.parquet(subCfg.vocabPath).select($"term", $"df")
-          .join(oldVocab.select($"term"), Seq("term"), "left_anti")
-          .select($"term", $"df").as[(String, Long)],
-        parts0, newRanked, baseId = oldSize,
-        targetBytes = cfg.rangeTargetBytes)
-      mergeParquetDir(newRanked, cfg.vocabPath, s"seg$appendIdx")
-      // rows = the NEW term count: step 5 derives the merged lexicon size
-      // from it without re-counting anything
-      manifest.commit(StageRecord(s"merge-$appendIdx-vocab", "complete", fp,
-        newTerms, 0L, Map.empty))
-    }
+    // 2) docs: shift docId + shard
+    spark.read.parquet(subCfg.docsPath)
+      .withColumn("docId", $"docId" + docBase)
+      .withColumn("shard", $"shard" + shardBase)
+      .write.mode("overwrite").parquet(s"$stage/docs")
 
-    // 3) docs: shift docId + shard, staged write + idempotent merge
-    if (!manifest.isComplete(s"merge-$appendIdx-docs", fp)) {
-      val stage = s"${cfg.indexDir}/stage_docs_$appendIdx"
-      spark.read.parquet(subCfg.docsPath)
-        .withColumn("docId", $"docId" + base)
-        .withColumn("shard", $"shard" + shardBase)
-        .write.mode("overwrite").parquet(stage)
-      mergeParquetDir(stage, cfg.docsPath, s"seg$appendIdx")
-      manifest.commit(StageRecord(s"merge-$appendIdx-docs", "complete", fp,
-        subStats.numDocs, 0L, Map.empty))
-    }
-
-    // 4) postings: remap termId via a join on the merged vocabulary (the
+    // 3) postings: remap termId via a join on the merged vocabulary (the
     //    sub→global mapping never lands on the driver), shift shard + doc
-    //    base byte-wise, staged write + idempotent merge
-    if (!manifest.isComplete(s"merge-$appendIdx-postings", fp)) {
-      val stage = s"${cfg.indexDir}/stage_postings_$appendIdx"
-      val mapping = spark.read.parquet(subCfg.vocabPath)
-        .select($"termId".as("_1"), $"term")
-        .join(spark.read.parquet(cfg.vocabPath)
-          .select($"termId".as("_2"), $"term"), "term")
-        .select($"_1", $"_2").as[(Int, Int)]
-      val sub = spark.read.parquet(subCfg.postingsPath).as[PostingBlockRow]
-      val baseV = base; val shardBaseV = shardBase
-      sub.joinWith(mapping, sub("termId") === mapping("_1"))
-        .map { case (blk, (_, gid)) =>
-          blk.copy(
-            termId = gid,
-            shard = blk.shard + shardBaseV,
-            firstDocId = blk.firstDocId + baseV,
-            lastDocId = blk.lastDocId + baseV,
-            bytes = PostingCodec.shiftBlockBase(blk.bytes, baseV))
-        }
-        .write.mode("overwrite").parquet(stage)
-      mergeParquetDir(stage, cfg.postingsPath, s"seg$appendIdx")
-      manifest.commit(StageRecord(s"merge-$appendIdx-postings", "complete",
-        fp, 0L, 0L, Map.empty))
-    }
+    //    base byte-wise
+    val mapping = spark.read.parquet(subCfg.vocabPath)
+      .select($"termId".as("_1"), $"term")
+      .join(oldVocab.unionByName(newVocab).select($"termId".as("_2"), $"term"),
+        "term")
+      .select($"_1", $"_2").as[(Int, Int)]
+    val sub = spark.read.parquet(subCfg.postingsPath).as[PostingBlockRow]
+    val baseV = docBase; val shardBaseV = shardBase
+    sub.joinWith(mapping, sub("termId") === mapping("_1"))
+      .map { case (blk, (_, gid)) =>
+        blk.copy(
+          termId = gid,
+          shard = blk.shard + shardBaseV,
+          firstDocId = blk.firstDocId + baseV,
+          lastDocId = blk.lastDocId + baseV,
+          bytes = PostingCodec.shiftBlockBase(blk.bytes, baseV))
+      }
+      .write.mode("overwrite").parquet(s"$stage/postings")
 
-    // 5) lexicon: INCREMENTAL merge — O(batch blocks + vocab) per append
-    //    instead of a full recompute over EVERY postings block's metadata
-    //    (r7, guide §2.4/§2.1: per-batch maintenance work must scale with
-    //    the change, not the index — at web scale the block-metadata scan
-    //    was the one remaining O(index) read in the append path). Every
-    //    lexicon aggregate is associative (df/cf/nBlocks are sums over
-    //    blocks, maxTfNorm a max), so merging the pre-append lexicon with
-    //    the new segment's per-term deltas is value-identical to the full
-    //    recompute — AppendSpec pins the merged lexicon column-for-column
-    //    against the recompute formula, and against a from-scratch build's
-    //    dfs. The new segment's blocks are exactly the seg$appendIdx-
-    //    part-files step 4 just merged in; brand-new terms live only in
-    //    the seg$appendIdx- vocab part-files step 2 wrote.
-    //
-    //    Crash discipline is compact's staged+swap: the live lexicon is
-    //    replaced only AFTER the staged merge commits its record, so the
-    //    live lexicon includes segN's deltas IFF merge-N-lexicon is
-    //    committed — a retry either re-runs the stage step against the
-    //    intact pre-append lexicon or skips straight past the swap.
-    //
-    //    First, re-list cached plans rooted here: a live Searcher's
-    //    PERSISTED plans pin PRE-merge file listings, and Spark's
-    //    CacheManager substitutes cached plans into ANY matching read.
-    spark.catalog.refreshByPath(cfg.indexDir)
-    val parts = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sparkContext.defaultParallelism
-    val lexStage = s"${cfg.indexDir}/lexicon_stage_$appendIdx"
-    // ABANDONED-APPEND GUARD: a previous attempt at THIS segment index
-    // under a DIFFERENT caller fingerprint (a crashed refresh whose table
-    // moved again before the retry) may have completed its lexicon swap —
-    // the live lexicon then already contains the abandoned batch's deltas.
-    // Steps 2–4 are immune (they replace their files under the segN-
-    // prefix) but the lexicon is merged in place, so the incremental path
-    // would double-count: fall back to the idempotent full recompute over
-    // the merged postings (the pre-r7 step), staged + swapped identically.
-    val staleLexMerge = records.exists { case (k, r) =>
-      (k == s"merge-$appendIdx-lexstage" ||
-        k == s"merge-$appendIdx-lexicon") && r.inputFingerprint != fp
-    } ||
-      // a RESUMED vocab-merge record with rows == 0 is ambiguous: the
-      // legacy whole-vocab-rewrite builder always committed rows = 0 and
-      // wrote NO segN- vocab part-files, so the batch may hold new terms
-      // the incremental merge cannot see. The full recompute is correct
-      // under both readings; only a legacy crash-resume pays for it.
-      (!vocabMergedThisAttempt &&
-        manifest.get(s"merge-$appendIdx-vocab").exists(_.rows == 0L))
-    if (!manifest.isComplete(s"merge-$appendIdx-lexstage", fp)) {
-      if (staleLexMerge) {
-        writeLexicon(spark, cfg.postingsPath, cfg.vocabPath, lexStage,
-          parts, cfg.rangeTargetBytes)
-        // recount from the recomputed stage (the crashed attempt may also
-        // have refreshed the postings record, so bookkeeping-derived
-        // totals are not trustworthy here)
-        val (vn, nb2) = spark.read.parquet(lexStage)
-          .agg(count(lit(1)),
-            coalesce(sum($"nBlocks".cast("long")), lit(0L)))
-          .as[(Long, Long)].head()
-        manifest.commit(StageRecord(s"merge-$appendIdx-lexstage",
-          "complete", fp, vn, 0L, Map("mergedBlocks" -> nb2.toString)))
-      } else {
-      val segPostings = Option(new java.io.File(cfg.postingsPath).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith(s"seg$appendIdx-")).map(_.getPath).toSeq
-      val segVocab = Option(vocabLive.listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith(s"seg$appendIdx-")).map(_.getPath).toSeq
-      // explicit schemas: the layouts are fixed by the writers above, so
-      // every read here skips a driver-side footer/schema-inference pass
-      // (the lex-stage cost is pure fixed overhead at micro-batch scale)
-      val enc = org.apache.spark.sql.Encoders
-      val oldLex = spark.read.schema(enc.product[LexiconEntry].schema)
-        .parquet(cfg.lexiconPath)
-      val mergedLex =
-        if (segPostings.isEmpty)
-          // degenerate empty batch: no blocks merged, lexicon unchanged
-          oldLex.select($"term", $"termId", $"df", $"cf", $"nBlocks",
-            $"maxTfNorm")
-        else {
-          val delta0 = spark.read
-            .schema(enc.product[PostingBlockRow].schema)
-            .parquet(segPostings: _*)
-            .select($"termId", $"count", $"sumTf", $"maxTfNorm")
-            .groupBy($"termId")
-            .agg(sum($"count").as("dDf"), sum($"sumTf").as("dCf"),
-              count(lit(1)).cast("int").as("dBlocks"),
-              max($"maxTfNorm").as("dMax"))
-          // the delta is batch-vocab-sized: broadcast it below the cap so
-          // the O(vocab) old-lexicon side is joined with NO exchange (a
-          // compile-time hint — AQE's runtime conversion would still
-          // materialize both sides' shuffles as separate jobs); a
-          // mega-batch past the cap falls back to a shuffled join
-          val delta = if (subStats.vocabSize <= LexDeltaBroadcastCap)
-            broadcast(delta0) else delta0
-          // existing terms: merge the delta into their lexicon row (left
-          // join — delta rows for NEW terms match nothing here and are
-          // dropped; sums/max are associative, so this equals the full
-          // recompute exactly)
-          val updatedOld = oldLex.join(delta, Seq("termId"), "left")
-            .select($"term", $"termId",
-              ($"df" + coalesce($"dDf", lit(0L))).as("df"),
-              ($"cf" + coalesce($"dCf", lit(0L))).as("cf"),
-              ($"nBlocks" + coalesce($"dBlocks", lit(0)))
-                .cast("int").as("nBlocks"),
-              greatest($"maxTfNorm", $"dMax").as("maxTfNorm"))
-          // new terms: exactly the segment's vocab part-files; every new
-          // term has >= 1 block in this segment by construction, so the
-          // inner join against the delta is lossless
-          if (segVocab.isEmpty) updatedOld
-          else updatedOld.unionByName(
-            spark.read.schema("termId INT, term STRING, df BIGINT")
-              .parquet(segVocab: _*).select($"termId", $"term")
-              .join(delta, Seq("termId"))
-              .select($"term", $"termId", $"dDf".as("df"), $"dCf".as("cf"),
-                $"dBlocks".as("nBlocks"), $"dMax".as("maxTfNorm")))
-        }
-      // size the output layout from the vocab dir's file bytes directly —
-      // no read-and-analyze pass just for sizing (the index layer is
-      // local-FS by design; see TableIndexer's ADVICE note)
-      val vocabBytes = Option(vocabLive.listFiles())
-        .getOrElse(Array.empty[java.io.File]).map(_.length).sum
-      val lexParts = sizedParts(
-        if (vocabBytes > 0L) vocabBytes else Long.MaxValue,
-        cfg.rangeTargetBytes, math.max(parts / 4, 1))
-      if (lexParts == 1) {
-        // single output partition: coalesce instead of a range exchange —
-        // identical single sorted partition, but no exchange to
-        // materialize (one job writes the whole merge)
-        mergedLex.coalesce(1).sortWithinPartitions($"termId")
-          .write.mode("overwrite").parquet(lexStage)
-      } else {
-        // persist before a multi-partition range exchange (sampling would
-        // re-execute the merge lineage twice — same fix as writeRanked)
-        val src = mergedLex
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          src.repartitionByRange(lexParts, $"termId")
-            .sortWithinPartitions($"termId")
-            .write.mode("overwrite").parquet(lexStage)
-        } finally { src.unpersist(); () }
-      }
-      // merged totals from bookkeeping already in hand — no count job:
-      // terms = pre-append lexicon rows + step 2's new-term count (the
-      // legacy-manifest fallbacks are one tiny count each); blocks =
-      // the authoritative pre-append postings record + the sub-index's
-      // block count (step 4's remap is 1:1 on rows)
-      val newTerms = manifest.get(s"merge-$appendIdx-vocab").map(_.rows)
-        .filter(n => n > 0L || segVocab.isEmpty)
-        .getOrElse(if (segVocab.isEmpty) 0L
-          else spark.read.schema("termId INT, term STRING, df BIGINT")
-            .parquet(segVocab: _*).count())
-      val oldVocabN = records.get("lexicon").map(_.rows)
-        .getOrElse(oldLex.count())
-      val subNb = new Manifest(subCfg.indexDir).get("postings").map(_.rows)
-        .getOrElse(0L)
-      val oldNb = records.get("postings").map(_.rows).getOrElse(0L)
-      manifest.commit(StageRecord(s"merge-$appendIdx-lexstage", "complete",
-        fp, oldVocabN + newTerms, 0L,
-        Map("mergedBlocks" -> (oldNb + subNb).toString)))
-      }
-    }
-    if (!manifest.isComplete(s"merge-$appendIdx-lexicon", fp)) {
-      if (new java.io.File(lexStage).exists()) {
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(cfg.lexiconPath))
-        java.nio.file.Files.move(java.nio.file.Paths.get(lexStage),
-          java.nio.file.Paths.get(cfg.lexiconPath))
-      } // else: a previous attempt crashed after the move — already live
-      manifest.commit(StageRecord(s"merge-$appendIdx-lexicon", "complete",
-        fp, 0L, 0L, Map.empty))
-    }
-    val lexStageRec = manifest.get(s"merge-$appendIdx-lexstage").get
-    val vocabN = lexStageRec.rows
-    val mergedBlocks = lexStageRec.extra("mergedBlocks").toLong
-    // ...and again now that the swap replaced the lexicon files: a cached
-    // lexicon plan would otherwise keep later readers on dead paths.
+    // 4) lexicon: INCREMENTAL merge — O(batch blocks + vocab) per append,
+    //    not a recompute over every block. Every lexicon aggregate is
+    //    associative (df/cf/nBlocks sums, maxTfNorm a max), so merging the
+    //    committed lexicon with the segment's per-term deltas equals the
+    //    full recompute — AppendSpec pins it column-for-column.
+    val delta0 = spark.read.schema(enc.product[PostingBlockRow].schema)
+      .parquet(s"$stage/postings")
+      .select($"termId", $"count", $"sumTf", $"maxTfNorm")
+      .groupBy($"termId")
+      .agg(sum($"count").as("dDf"), sum($"sumTf").as("dCf"),
+        count(lit(1)).cast("int").as("dBlocks"),
+        max($"maxTfNorm").as("dMax"))
+    // the delta is batch-vocab-sized: broadcast it below the cap so the
+    // O(vocab) old-lexicon side joins with NO exchange (a compile-time hint:
+    // AQE's runtime conversion would still run both sides' shuffles)
+    val delta = if (subStats.vocabSize <= LexDeltaBroadcastCap)
+      broadcast(delta0) else delta0
+    val lexPath = cfg.lexiconPath
+    // existing terms: the delta merged into their row (left join); new
+    // terms: the staged vocab rows, each with >= 1 block in this segment,
+    // so their inner join against the delta is lossless
+    val mergedLex = spark.read.schema(enc.product[LexiconEntry].schema)
+      .parquet(lexPath)
+      .join(delta, Seq("termId"), "left")
+      .select($"term", $"termId",
+        ($"df" + coalesce($"dDf", lit(0L))).as("df"),
+        ($"cf" + coalesce($"dCf", lit(0L))).as("cf"),
+        ($"nBlocks" + coalesce($"dBlocks", lit(0))).cast("int").as("nBlocks"),
+        greatest($"maxTfNorm", $"dMax").as("maxTfNorm"))
+      .unionByName(newVocab.select($"termId", $"term")
+        .join(delta, Seq("termId"))
+        .select($"term", $"termId", $"dDf".as("df"), $"dCf".as("cf"),
+          $"dBlocks".as("nBlocks"), $"dMax".as("maxTfNorm")))
+    // output layout sized from the committed lexicon's own file bytes —
+    // no read-and-analyze pass just for sizing
+    val lexBytes = io.list(lexPath).filter(_.endsWith(".parquet"))
+      .map(n => io.size(s"$lexPath/$n")).sum
+    val lexDir = s"lexicon-v${base.version + 1}"
+    writeByTermId(mergedLex, sizedParts(
+      if (lexBytes > 0L) lexBytes else Long.MaxValue,
+      cfg.rangeTargetBytes, math.max(parts / 4, 1)), cfg.path(lexDir))
+
+    // 5) the segment's rows join the extended structures; cached plans
+    //    rooted here pin the old file listings (Spark's CacheManager
+    //    substitutes them into ANY matching read), so re-list them
+    moveParts(io, s"$stage/vocab", vocabDir, prefix)
+    moveParts(io, s"$stage/docs", docsDir, prefix)
+    moveParts(io, s"$stage/postings", postingsDir, prefix)
+    io.deleteRecursively(stage)
     spark.catalog.refreshByPath(cfg.indexDir)
 
-    // refresh the authoritative `postings` record with the MERGED block
-    // count (derived in the lexstage step from records in hand — no
-    // lexicon pass): the Searcher's localServe/cache budgets gate on this record,
-    // and without the refresh an append could silently grow the
-    // driver-side cache past its stated budget
-    manifest.get("postings").foreach { rec =>
-      manifest.commit(rec.copy(rows = mergedBlocks))
-    }
-
-    // 6) manifest: segment record + refreshed global stats
-    val numDocs = base + subStats.numDocs
+    val numDocs = docBase + subStats.numDocs
     val totalTokens = st.totalTokens + subStats.totalTokens
-    val avgDl = totalTokens.toDouble / math.max(numDocs, 1L)
-    // the record carries the CALLER's fingerprint — the retry guard above
-    // matches on it to make a replayed same-batch append a no-op
-    manifest.commit(StageRecord(s"append-$appendIdx", "complete",
-      fp, subStats.numDocs,
-      (System.nanoTime() - t0) / 1000000,
-      Map("docIdBase" -> base.toString, "shardBase" -> shardBase.toString,
-          "avgDlAtBuild" -> subStats.avgDl.toString,
-          "subTokens" -> subStats.totalTokens.toString)))
-    manifest.commit(StageRecord("lexicon", "complete",
-      s"v$FormatVersion:append$appendIdx", vocabN, 0L,
-      Map("numDocs" -> numDocs.toString, "avgDl" -> avgDl.toString,
-          "totalTokens" -> totalTokens.toString)))
-    CorpusStats(numDocs, avgDl, totalTokens, vocabN)
+    val postings = recs("postings")
+    val lexicon = recs("lexicon")
+    Some(Seq(
+      // the record carries the CALLER's fingerprint — the guard above
+      // matches it to make a replayed same-batch append a no-op
+      StageRecord(s"append-$seg", "complete", fp, subStats.numDocs,
+        (System.nanoTime() - t0) / 1000000,
+        Map("docIdBase" -> docBase.toString, "shardBase" -> shardBase.toString,
+          "avgDlAtBuild" -> subStats.avgDl.toString, "dir" -> segDir)),
+      // the Searcher's localServe/cache budgets gate on the block count
+      postings.copy(rows = postings.rows +
+        new Manifest(subCfg.indexDir).get("postings").get.rows),
+      lexicon.copy(rows = st.vocabSize + newTerms, extra = lexicon.extra ++ Map(
+        "numDocs" -> numDocs.toString,
+        "avgDl" -> (totalTokens.toDouble / math.max(numDocs, 1L)).toString,
+        "totalTokens" -> totalTokens.toString,
+        "dir" -> lexDir))))
   }
 
   /** Stats of an already-built index (no build triggered). */
-  def stats(cfg: IndexConfig): CorpusStats = {
-    val manifest = new Manifest(cfg.indexDir)
-    val lex = manifest.get("lexicon").getOrElse(
-      throw new IllegalStateException(s"index at ${cfg.indexDir} not built"))
-    CorpusStats(
-      lex.extra("numDocs").toLong,
-      lex.extra("avgDl").toDouble,
-      lex.extra("totalTokens").toLong,
-      lex.rows)
-  }
+  def stats(cfg: IndexConfig): CorpusStats = statsOf(
+    new Manifest(cfg.indexDir).get("lexicon").getOrElse(
+      throw new IllegalStateException(s"index at ${cfg.indexDir} not built")))
+
+  private def statsOf(lex: StageRecord): CorpusStats = CorpusStats(
+    lex.extra("numDocs").toLong, lex.extra("avgDl").toDouble,
+    lex.extra("totalTokens").toLong, lex.rows)
 }

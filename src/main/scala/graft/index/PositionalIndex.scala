@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.CodeTokenizer
@@ -47,11 +47,11 @@ final case class PosPostingRow(
   * a matching fingerprint (the same stage discipline as build()).
   *
   * Maintenance: the sidecar follows the main index's segment model.
-  * [[append]] adds one batch of freshly-appended documents as
-  * `possegN-` part files inside the same positions dir (the layout stays
-  * a union of range-sorted runs — file-level footer pruning holds per
-  * file), and [[graft.index.TableIndexer.refresh]] drives it from the
-  * same commit diff as the main append. Deletes need NO positional
+  * [[append]] adds main segment N's documents as `possegN-` part files
+  * inside the same positions dir (the layout stays a union of
+  * range-sorted runs — file-level footer pruning holds per file), and
+  * [[graft.index.TableIndexer.refresh]] publishes them in the same
+  * manifest commit as the main append. Deletes need NO positional
   * bookkeeping: searchPhrase computes phrase df and tf live from the
   * position rows and skips the MAIN index's tombstones, so phrase scores
   * after any incremental cycle equal a from-scratch rebuild of the live
@@ -91,6 +91,29 @@ object PositionalIndex {
       .select($"termId", $"docId", $"tf", $"dl", $"posBytes")
   }
 
+  /** Write position rows range-partitioned and sorted on (termId, docId)
+    * into `parts` files at `out`; returns the row count. */
+  private def write(spark: SparkSession, rows0: DataFrame, parts: Int,
+      out: String): Long = {
+    import spark.implicits._
+    // persist before a multi-partition range exchange: its sampling job
+    // would otherwise run the tokenize + two joins lineage TWICE (the
+    // writeRanked one-pass fix; a 1-partition exchange samples nothing,
+    // so the persist would be pure churn there)
+    val rows = if (parts > 1)
+      rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else rows0
+    try {
+      rows
+        .repartitionByRange(parts, $"termId", $"docId")
+        .sortWithinPartitions($"termId", $"docId")
+        .write.mode("overwrite").parquet(out)
+    } finally { if (parts > 1) rows.unpersist(); () }
+    // single-partition regime: count from the file footers driver-side
+    if (parts == 1) IndexBuilder.parquetRowCount(spark, out)
+    else spark.read.parquet(out).count()
+  }
+
   /** Build (or reuse) the positional sidecar. Returns the row count. */
   def build(spark: SparkSession, corpus: Dataset[SourceFile],
       cfg: IndexConfig, fingerprint: String = ""): Long = {
@@ -104,95 +127,74 @@ object PositionalIndex {
       return manifest.get("positions").get.rows
 
     val t0 = System.nanoTime()
-    val cap = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sparkContext.defaultParallelism
     // scale-adaptive range sizing (IndexBuilder.sizedParts): position rows
     // are ~4 B/token (VByte deltas + row overhead); the main index is
     // already built, so its token total is in the manifest
     val toks = scala.util.Try(IndexBuilder.stats(cfg).totalTokens)
       .getOrElse(Long.MaxValue / 8)
-    val parts = IndexBuilder.sizedParts(toks * 4L, cfg.rangeTargetBytes, cap)
-    // persist before a multi-partition range exchange: its sampling job
-    // would otherwise run the tokenize + two joins lineage TWICE (the
-    // writeRanked one-pass fix; a 1-partition exchange samples nothing,
-    // so the persist would be pure churn there)
-    val rows0 = positionRows(spark, corpus, cfg, baseDocId = 0L)
-    val rows = if (parts > 1)
-      rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rows0
-    try {
-      rows
-        .repartitionByRange(parts, $"termId", $"docId")
-        .sortWithinPartitions($"termId", $"docId")
-        .write.mode("overwrite").parquet(cfg.positionsPath)
-    } finally { if (parts > 1) rows.unpersist(); () }
-
-    // single-partition regime: count from the file footers driver-side
-    val n = if (parts == 1) IndexBuilder.parquetRowCount(spark, cfg.positionsPath)
-      else spark.read.parquet(cfg.positionsPath).count()
+    val n = write(spark, positionRows(spark, corpus, cfg, baseDocId = 0L),
+      IndexBuilder.sizedParts(toks * 4L, cfg.rangeTargetBytes,
+        IndexBuilder.partitions(spark, cfg)), cfg.positionsPath)
     manifest.commit(StageRecord("positions", "complete", fp, n,
-      (System.nanoTime() - t0) / 1000000, Map.empty))
+      (System.nanoTime() - t0) / 1000000,
+      Map("dir" -> cfg.dir("positions"),
+        "segments" -> IndexBuilder.segments(manifest.read().keys).toString)))
     n
   }
 
-  /** Append one batch's position rows as a new positional segment —
-    * the sidecar half of [[IndexBuilder.append]] (call it AFTER the main
-    * append: the batch's final docIds and any new termIds come from the
-    * just-merged docs table and vocabulary). `baseDocId` = the main
-    * append's docId base (corpus size before the append). Idempotent on
-    * retry: a posseg record with the same caller fingerprint short-
-    * circuits, and the staged-write → prefix-delete → move merge keys on
-    * the segment index. Returns the batch's row count. */
+  /** Append one batch's position rows as a new positional segment — the
+    * sidecar half of [[IndexBuilder.append]]: call it AFTER the main append
+    * committed with the same `fingerprint` (the batch's final docIds and any
+    * new termIds come from that append's docs and vocabulary rows).
+    * `baseDocId` = the main append's docId base (corpus size before the
+    * append). A no-op when the sidecar already covers that segment.
+    * Returns the number of position rows added. */
   def append(spark: SparkSession, batch: Dataset[SourceFile],
       cfg: IndexConfig, fingerprint: String, baseDocId: Long): Long = {
-    import spark.implicits._
     val manifest = new Manifest(cfg.indexDir)
-    require(manifest.get("positions").nonEmpty,
-      s"no positional sidecar at ${cfg.indexDir} — build() it first")
-    require(fingerprint.nonEmpty, "positional append needs a fingerprint")
-    val fp = s"v${IndexBuilder.FormatVersion}:positions:$fingerprint"
-    val existing = manifest.read()
-    val prior = existing.collectFirst {
-      case (k, r) if k.matches("posseg-\\d+") && r.inputFingerprint == fp =>
-        r.rows
-    }
-    if (prior.isDefined) return prior.get
-    val segIdx = existing.keys.count(_.matches("posseg-\\d+"))
+    val base = manifest.snapshot()
+    val pos = base.records.getOrElse("positions", throw new IllegalStateException(
+      s"no positional sidecar at ${cfg.indexDir} — build() it first"))
+    val fp = s"v${IndexBuilder.FormatVersion}:$fingerprint"
+    val seg = base.records.collectFirst {
+      case (k, r) if k.startsWith("append-") && r.inputFingerprint == fp =>
+        k.stripPrefix("append-").toInt
+    }.getOrElse(throw new IllegalStateException(
+      s"no committed append with fingerprint '$fingerprint' at ${cfg.indexDir}"))
+    if (pos.extra("segments").toInt > seg) return 0L
+    val rec = stageAppend(spark, batch, cfg, baseDocId, seg, pos)
+    manifest.commit(base, base.records + ("positions" -> rec))
+    spark.catalog.refreshByPath(cfg.indexDir)
+    rec.rows - pos.rows
+  }
 
+  /** Write main segment `seg`'s position rows into the positions dir as
+    * `possegN-` part-files (replacing a crashed attempt's) and return the
+    * `positions` record to commit with it. */
+  private[index] def stageAppend(spark: SparkSession, batch: Dataset[SourceFile],
+      cfg: IndexConfig, baseDocId: Long, seg: Int, pos: StageRecord): StageRecord = {
+    import spark.implicits._
     val t0 = System.nanoTime()
-    val cap = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sparkContext.defaultParallelism
+    val io = Manifest.io(cfg.indexDir)
+    val prefix = s"posseg$seg"
+    val live = cfg.positionsPath
+    IndexBuilder.dropParts(io, live, prefix)
+    val stage = cfg.path(s"segments/seg$seg/merge/positions")
     // size the segment's range exchange from the batch's estimated bytes
     // (positions are a fraction of content size; the cap keeps the old
     // core-derived behavior when the estimate is unusable)
-    val parts = {
-      val s = batch.toDF().queryExecution.optimizedPlan.stats.sizeInBytes
-      val bytes = if (s.isValidLong && s.toLong > 0L) s.toLong else Long.MaxValue
-      IndexBuilder.sizedParts(bytes, cfg.rangeTargetBytes, cap)
-    }
-    val stage = s"${cfg.indexDir}/stage_positions_$segIdx"
-    // same one-pass persist discipline as build() above
-    val rows0 = positionRows(spark, batch, cfg, baseDocId)
-    val rows = if (parts > 1)
-      rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rows0
-    try {
-      rows
-        .repartitionByRange(parts, $"termId", $"docId")
-        .sortWithinPartitions($"termId", $"docId")
-        .write.mode("overwrite").parquet(stage)
-    } finally { if (parts > 1) rows.unpersist(); () }
-    val n = if (parts == 1) IndexBuilder.parquetRowCount(spark, stage)
-      else spark.read.parquet(stage).count()
-    IndexBuilder.mergeParquetDir(stage, cfg.positionsPath, s"posseg$segIdx")
+    val n = write(spark, positionRows(spark, batch, cfg, baseDocId),
+      IndexBuilder.sizedParts(IndexBuilder.planBytes(batch.toDF()),
+        cfg.rangeTargetBytes, IndexBuilder.partitions(spark, cfg)), stage)
+    IndexBuilder.moveParts(io, stage, live, prefix)
+    io.deleteRecursively(stage)
     // re-list cached plans rooted here now that the posseg files exist: a
     // live Searcher's persisted positional reads pin the pre-append file
     // listing and would otherwise be substituted — minus this segment —
-    // into later phrase queries (see IndexBuilder.append step 5)
+    // into later phrase queries
     spark.catalog.refreshByPath(cfg.indexDir)
-    manifest.commit(StageRecord(s"posseg-$segIdx", "complete", fp, n,
-      (System.nanoTime() - t0) / 1000000, Map.empty))
-    n
+    pos.copy(rows = pos.rows + n, wallMs = (System.nanoTime() - t0) / 1000000,
+      extra = pos.extra + ("segments" -> (seg + 1).toString))
   }
 
   /** Decode a posBytes stream back to absolute positions. */

@@ -1,10 +1,12 @@
 package graft.index
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.CodeTokenizer
-import graft.checkpoint.{Manifest, StageRecord}
+import graft.checkpoint.{Manifest, Snapshot, StageRecord}
 import graft.model.{CorpusStats, SourceFile}
 import graft.query.Searcher
 import graft.sources.TableOps
@@ -39,6 +41,12 @@ import graft.sources.TableOps
   * removed files) and their token total, and the Searcher scores with
   * df_live / N_live / avgdl_live. Spec-pinned by TableIndexerSpec.
   *
+  * Crash safety: [[refresh]] and [[compact]] write fresh files first and
+  * publish all of their records in ONE manifest commit
+  * ([[graft.checkpoint.Manifest]]) — a refresh commits its segment,
+  * tombstones and synced version together, a compaction adopts its
+  * rebuild — so the index always mirrors exactly one table version.
+  *
   * Contract: the table carries the corpus columns (repo, path, commit,
   * lang, content) and (repo, path, commit) is unique per snapshot — the
   * same key-uniqueness contract as the builder itself (docIds are dense
@@ -57,38 +65,24 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
 
   private def manifest = new Manifest(cfg.indexDir)
 
-  private def rebuildDir = s"${cfg.indexDir}__rebuild"
-
-  /** Finish a [[compact]] interrupted between delete and move: the staged
-    * rebuild is complete (its marker is written last), the live dir is
-    * gone — move the rebuild into place. */
-  private def recoverSwap(): Unit = {
-    val live = new java.io.File(cfg.indexDir)
-    val staged = new java.io.File(rebuildDir)
-    if (staged.exists() && new java.io.File(staged, "manifest.json").exists()
-        && !new java.io.File(live, "manifest.json").exists()) {
-      org.apache.commons.io.FileUtils.deleteDirectory(live)
-      java.nio.file.Files.move(staged.toPath, live.toPath)
-    }
-  }
-
   private def toCorpus(df: DataFrame) =
     df.select($"repo", $"path", $"commit", $"lang", $"content").as[SourceFile]
 
-  private def commitSync(table: String, v: Long): Unit =
-    manifest.commit(StageRecord("tableSync", "complete", s"$table:v$v", v,
-      0L, Map("table" -> table, "version" -> v.toString)))
+  private def syncRecord(table: String, v: Long) =
+    StageRecord("tableSync", "complete", s"$table:v$v", v, 0L,
+      Map("table" -> table, "version" -> v.toString))
 
   /** The table version the index currently mirrors. */
-  def syncedVersion: Long =
-    manifest.get("tableSync").map(_.extra("version").toLong).getOrElse(-1L)
+  def syncedVersion: Long = syncedIn(manifest.snapshot())
+
+  private def syncedIn(s: Snapshot): Long =
+    s.records.get("tableSync").map(_.extra("version").toLong).getOrElse(-1L)
 
   /** Build the index from the table's current snapshot and record the
     * synced version. `positions = true` also builds the positional
     * sidecar ([[PositionalIndex]] — phrase queries); refreshes then keep
     * it maintained alongside the main index. */
   def create(table: String, positions: Boolean = false): CorpusStats = {
-    recoverSwap()
     val v = ops.currentVersion(table)
     require(v >= 0, s"table $table does not exist")
     val st = IndexBuilder.build(spark, toCorpus(ops.readVersion(table, v)),
@@ -96,18 +90,19 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
     if (positions)
       PositionalIndex.build(spark, toCorpus(ops.readVersion(table, v)),
         cfg, fingerprint = s"table:$table:v$v")
-    commitSync(table, v)
+    manifest.commit(syncRecord(table, v))
     st
   }
 
   /** Advance the index to the table's current snapshot: one segment append
-    * for the added files' rows, tombstones + df corrections for the
-    * removed files' rows. Idempotent on retry (append's merge steps and
-    * the versioned tombstone dirs both key on the target version; the
-    * manifest record flips last, atomically). */
+    * for the added files' rows (main index + positional sidecar),
+    * tombstones + df corrections for the removed files' rows. All of it is
+    * written to fresh files first and published in ONE manifest commit
+    * together with the new synced version: a crash before it leaves files
+    * the retry overwrites, and a retry after it finds nothing to do. */
   def refresh(table: String): CorpusStats = {
-    recoverSwap()
-    val synced = syncedVersion
+    val base = manifest.snapshot()
+    val synced = syncedIn(base)
     require(synced >= 0, s"index at ${cfg.indexDir} is not synced to a table" +
       " — call create() first")
     val cur = ops.currentVersion(table)
@@ -118,10 +113,11 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
     val newFiles = ops.dataFiles(table, cur).toSet
     val removed = oldFiles -- newFiles
     val added = newFiles -- oldFiles
+    var next = base.records
 
-    // docIds below this base are pre-append — the only ones a removed key
-    // may refer to (its re-indexed twin, if any, gets an id >= base)
-    val base = IndexBuilder.stats(cfg).numDocs
+    // docIds below docBase are pre-append — the only ones a removed key
+    // may refer to (its re-indexed twin, if any, gets an id >= docBase)
+    val docBase = IndexBuilder.stats(cfg).numDocs
 
     // skip an empty batch: an added file can hold zero rows (TRUNCATE's
     // empty-state commit) — appending an empty segment is pointless. The
@@ -131,24 +127,28 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
     ops.readFilesOf(table, cur, added)
       .filterNot(df => addedRows.map(_ == 0L).getOrElse(df.isEmpty))
       .foreach { df =>
-      IndexBuilder.append(spark, toCorpus(df), cfg,
-        fingerprint = s"table:$table:v$synced-v$cur")
-      // positional sidecar (when built): the batch's position rows land as
-      // one positional segment, resolved against the just-merged docs
-      // table with `base` as the docId floor — a key REWRITTEN by an
-      // update maps only to its fresh id, never its dead twin. Deletes
-      // need no positional bookkeeping: phrase df/tf are computed live
-      // and tombstoned docs are skipped at query time.
-      if (manifest.get("positions").nonEmpty)
-        PositionalIndex.append(spark, toCorpus(df), cfg,
-          fingerprint = s"table:$table:v$synced-v$cur", baseDocId = base)
+      val seg = IndexBuilder.segments(base.records.keys)
+      IndexBuilder.stageAppend(spark, toCorpus(df), cfg,
+          s"table:$table:v$synced-v$cur", base).foreach { recs =>
+        next ++= recs.map(r => r.stage -> r)
+        // positional sidecar (when built): the batch's position rows land
+        // as the same segment, resolved against the just-written docs rows
+        // with `docBase` as the docId floor — a key REWRITTEN by an update
+        // maps only to its fresh id, never its dead twin. Deletes need no
+        // positional bookkeeping: phrase df/tf are computed live and
+        // tombstoned docs are skipped at query time.
+        next.get("positions").foreach { pos =>
+          next += "positions" -> PositionalIndex.stageAppend(spark,
+            toCorpus(df), cfg, docBase, seg, pos)
+        }
+      }
     }
 
     if (removed.nonEmpty) {
-      val prev = manifest.get("tombstones")
+      val prev = base.records.get("tombstones")
       val prevDead: DataFrame = prev match {
         case Some(r) => spark.read
-          .parquet(s"${cfg.indexDir}/${r.extra("dir")}").select($"docId")
+          .parquet(cfg.path(r.extra("dir"))).select($"docId")
         case None => Seq.empty[Long].toDF("docId")
       }
       val removedRows = ops.readFilesOf(table, synced, removed).get
@@ -157,7 +157,7 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
       // (a key compacted/updated in an earlier refresh left a dead docId
       // behind — only the live one dies now, and only it may subtract df)
       val newlyDead = spark.read.parquet(cfg.docsPath)
-        .filter($"docId" < base)
+        .filter($"docId" < docBase)
         .join(removedRows.select($"repo", $"path", $"commit"),
           Seq("repo", "path", "commit"))
         .join(prevDead, Seq("docId"), "left_anti")
@@ -189,67 +189,61 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
       val newDelta = deadTerms.join(vocab, "term")
         .select($"termId", $"delta")
       val prevDelta: DataFrame = prev match {
-        case Some(r) => spark.read
-          .parquet(s"${cfg.indexDir}/${r.extra("dfDir")}")
+        case Some(r) => spark.read.parquet(cfg.path(r.extra("dfDir")))
           .select($"termId", $"delta")
         case None => Seq.empty[(Int, Long)].toDF("termId", "delta")
       }
-      // versioned output dirs: overwrite-idempotent on retry, invisible
-      // until the manifest record flips to them
-      val tsDir = s"tombstones-v$cur"
-      val dfDir = s"dfdelta-v$cur"
+      // fresh dirs named by the version this refresh commits: a retry
+      // overwrites them, the commit drops the previous pair
+      val tsDir = s"tombstones-v${base.version + 1}"
+      val dfDir = s"dfdelta-v${base.version + 1}"
       prevDead.union(newlyDead.select($"docId"))
-        .write.mode("overwrite").parquet(s"${cfg.indexDir}/$tsDir")
+        .write.mode("overwrite").parquet(cfg.path(tsDir))
       prevDelta.union(newDelta)
         .groupBy($"termId").agg(sum($"delta").as("delta"))
-        .write.mode("overwrite").parquet(s"${cfg.indexDir}/$dfDir")
+        .write.mode("overwrite").parquet(cfg.path(dfDir))
       newlyDead.unpersist()
-      manifest.commit(StageRecord("tombstones", "complete",
+      next += "tombstones" -> StageRecord("tombstones", "complete",
         s"$table:v$cur", totalDead, 0L,
         Map("deadTokens" -> totalTok.toString, "dir" -> tsDir,
-          "dfDir" -> dfDir)))
+          "dfDir" -> dfDir))
     }
 
-    commitSync(table, cur)
-    // drop any cached plans rooted under the index dir a second time: a
-    // Searcher left open across this refresh re-materializes its persisted
-    // reads from its ORIGINAL file listing, and a later (fresh) Searcher's
-    // identical-path reads would be cache-substituted with that stale data.
-    // (IndexBuilder.append already invalidated at ITS entry — this covers
-    // the refresh's own later reads and readers created after it.)
+    manifest.commit(base, next + ("tableSync" -> syncRecord(table, cur)))
+    // drop cached plans rooted under the index dir: a Searcher left open
+    // across this refresh re-materializes its persisted reads from its
+    // ORIGINAL file listing, and a later (fresh) Searcher's identical-path
+    // reads would be cache-substituted with that stale data
     spark.catalog.refreshByPath(cfg.indexDir)
     IndexBuilder.stats(cfg)
   }
 
   /** Reclaim deletes: rebuild the whole index from the table's live
-    * snapshot — fresh dense docIds, single segment, zero tombstones —
-    * staged beside the live index and swapped in ([[recoverSwap]] covers
-    * the delete→move window). The role of a Lucene merge that drops
-    * deleted docs; segment-merge WITHOUT delete reclaim is
-    * [[IndexBuilder.compact]]. */
+    * snapshot — fresh dense docIds, single segment, zero tombstones. The
+    * rebuild is a stage-checkpointed sub-index under the index directory
+    * (`rebuild-vN`, N = the version its adoption commits); ONE manifest
+    * commit adopts it and drops every directory of the old index. A crash
+    * before the commit leaves the old index serving, and a retry resumes
+    * the rebuild. The role of a Lucene merge that drops deleted docs;
+    * segment-merge WITHOUT delete reclaim is [[IndexBuilder.compact]]. */
   def compact(table: String): CorpusStats = {
-    recoverSwap()
+    val base = manifest.snapshot()
     val v = ops.currentVersion(table)
     require(v >= 0, s"table $table does not exist")
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(rebuildDir))
-    val subCfg = cfg.copy(indexDir = rebuildDir)
-    IndexBuilder.build(spark, toCorpus(ops.readVersion(table, v)), subCfg,
-      fingerprint = s"table:$table:v$v:rebuild")
+    val root = s"rebuild-v${base.version + 1}"
+    val subCfg = cfg.copy(indexDir = cfg.path(root))
+    val fp = s"table:$table:v$v:rebuild"
+    IndexBuilder.build(spark, toCorpus(ops.readVersion(table, v)), subCfg, fp)
     // a maintained positional sidecar is rebuilt fresh with the index
     // (single range-sorted layout again, dead rows dropped)
-    if (manifest.get("positions").nonEmpty)
+    if (base.records.contains("positions"))
       PositionalIndex.build(spark, toCorpus(ops.readVersion(table, v)),
-        subCfg, fingerprint = s"table:$table:v$v:rebuild")
-    new Manifest(rebuildDir).commit(StageRecord("tableSync", "complete",
-      s"$table:v$v", v, 0L,
-      Map("table" -> table, "version" -> v.toString)))
-    // swap: delete live, move staged in; a crash between the two is
-    // finished by recoverSwap() on the next call
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(cfg.indexDir))
-    java.nio.file.Files.move(java.nio.file.Paths.get(rebuildDir),
-      java.nio.file.Paths.get(cfg.indexDir))
+        subCfg, fp)
+    val adopted = new Manifest(subCfg.indexDir).read().values
+      .map(Manifest.relocate(_, root))
+    manifest.commit(base, ListMap.from(
+      (adopted ++ Seq(syncRecord(table, v))).map(r => r.stage -> r)))
+    spark.catalog.refreshByPath(cfg.indexDir)
     IndexBuilder.stats(cfg)
   }
 }

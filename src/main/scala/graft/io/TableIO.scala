@@ -4,12 +4,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException => HFileExists, FileContext, FileSystem, Options, Path => HPath}
 
-/** The storage seam for the snapshot-table / catalog / checkpoint layer
+/** The storage seam for the snapshot-table / catalog / index layers
   * (SURVEY.md §7.4): every path operation the commit protocol needs —
-  * atomic publish, create-exclusive claim, list, delete, stat — behind one
-  * trait, so the same `TableOps`/`Catalog` code runs against a local
-  * filesystem in tests and against HDFS/S3A (any Hadoop `FileSystem`) on a
-  * cluster. Reference contrast: terrier's storage layer is process-local by
+  * atomic publish, create-exclusive claim, list, delete, rename, stat —
+  * behind one trait, so the same `TableOps`/`Catalog`/index code runs
+  * against a local filesystem in tests and against HDFS/S3A (any Hadoop
+  * `FileSystem`) on a cluster. Reference contrast: terrier's storage layer is process-local by
   * design (storage/data_table.h); a Spark-native engine's table state must
   * live on the cluster's shared store, so the seam is load-bearing, not
   * cosmetic.
@@ -48,6 +48,9 @@ trait TableIO {
   def size(path: String): Long
   def mtimeMs(path: String): Long
   def mkdirs(path: String): Unit
+  /** Move a file or directory to `dst` (parent dirs created); fails if
+    * `dst` already exists. */
+  def rename(src: String, dst: String): Unit
 
   /** Children of `dir` as full paths. */
   final def listPaths(dir: String): Seq[String] = list(dir).map(n => s"$dir/$n")
@@ -136,6 +139,11 @@ object LocalIO extends TableIO {
   def size(path: String): Long = Files.size(p(path))
   def mtimeMs(path: String): Long = Files.getLastModifiedTime(p(path)).toMillis
   def mkdirs(path: String): Unit = Files.createDirectories(p(path))
+
+  def rename(src: String, dst: String): Unit = {
+    Files.createDirectories(p(dst).getParent)
+    Files.move(p(src), p(dst))
+  }
 }
 
 /** Hadoop `FileSystem` implementation — HDFS, S3A, GCS, ABFS, or file://
@@ -234,4 +242,11 @@ final class HadoopIO(conf: Configuration) extends TableIO {
   def mtimeMs(path: String): Long =
     fs(hp(path)).getFileStatus(hp(path)).getModificationTime
   def mkdirs(path: String): Unit = { fs(hp(path)).mkdirs(hp(path)); () }
+
+  def rename(src: String, dst: String): Unit = {
+    val d = hp(dst); val f = fs(d)
+    f.mkdirs(d.getParent)
+    if (f.exists(d) || !f.rename(hp(src), d))
+      throw new java.io.IOException(s"rename $src -> $dst failed")
+  }
 }

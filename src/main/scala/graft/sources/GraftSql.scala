@@ -387,8 +387,8 @@ final class GraftSql(spark: SparkSession, val ops: TableOps,
       indexerFor(name, dir).refresh(table)
       ack("REFRESH SEARCH INDEX", name, -1L)
     case CompactSearchIndex(name) =>
-      // reclaim tombstones: staged rebuild of the live snapshot + swap
-      // (TableIndexer.compact — crash-recovered, results bit-identical)
+      // reclaim tombstones: rebuild of the live snapshot adopted in one
+      // manifest commit (TableIndexer.compact — results bit-identical)
       noTx("COMPACT SEARCH INDEX")
       val (table, dir) = ops.searchIndexMeta(name)
       indexerFor(name, dir).compact(table)

@@ -28,9 +28,10 @@ class AppendSpec extends AnyFunSuite {
   def cfg(dir: String) = IndexConfig(indexDir = dir, numShards = 4,
     heavyDfThreshold = 150, buildPartitions = 4)
 
-  test("append merges a segment; results match oracle and a from-scratch build") {
+  /** Build `base` at `dirA`, append `batch`, and pin the result against the
+    * oracle and a from-scratch build. */
+  def appendParity(dirA: String): Unit = {
     import spark.implicits._
-    val dirA = TestSpark.tmpDir("graft-append")
     val cA = cfg(dirA)
     IndexBuilder.build(spark, base.toDS(), cA, "base")
     val stBefore = IndexBuilder.stats(cA)
@@ -71,27 +72,38 @@ class AppendSpec extends AnyFunSuite {
       "postings record stale after append — localServe budget unguarded")
   }
 
+  test("append merges a segment; results match oracle and a from-scratch build") {
+    appendParity(TestSpark.tmpDir("graft-append"))
+  }
+
+  test("append parity holds on a file:// index directory through HadoopIO") {
+    appendParity("file:" + TestSpark.tmpDir("graft-append-hadoop"))
+  }
+
+  /** The df of every term of the combined corpus, counted sequentially. */
+  lazy val combinedDf: Map[String, Long] = (base ++ batch)
+    .flatMap(f => graft.analysis.CodeTokenizer.termFreqs(f.content)._1.keys)
+    .groupBy(identity).map { case (t, ts) => t -> ts.size.toLong }
+
+  /** Run `op` with the first mutating storage operation under `dir` that
+    * `fail` selects failing — the crash state it leaves. */
+  def crashAt(dir: String, fail: FaultInjection.Fail)(op: => Any): Unit =
+    assert(FaultInjection.run(dir, fail)(op)._2, "no fault injected")
+
+  /** The index commit's claim (not a sub-index stage's). */
+  def mainCommit(dir: String): FaultInjection.Fail =
+    (_, op, path) => op == "createExclusive" && path.startsWith(s"$dir/commits/")
+
   test("retried append after a mid-merge crash does NOT double df/cf") {
+    // crash with every segment file written, just before the commit: the
+    // docs/postings dirs already hold the seg0 files (the dangerous state —
+    // a naive retry re-appends them and silently doubles df/cf)
     import spark.implicits._
-    import graft.checkpoint.Manifest
     val dir = TestSpark.tmpDir("graft-append-retry")
     val c = cfg(dir)
     IndexBuilder.build(spark, base.toDS(), c, "base")
-    // snapshot the pre-append manifest (what a crash BEFORE the final
-    // append-0/lexicon commits would leave behind)
-    val preAppend = new Manifest(dir).read()
-
-    IndexBuilder.append(spark, batch.toDS(), c, "batch1")
-    val merged = new Manifest(dir).read()
-
-    // simulate: crash after all three merge steps completed but before the
-    // final commits — manifest has the base records + merge-0-* only. The
-    // docs/postings dirs already contain the seg0 files (the dangerous
-    // state: a naive retry re-appends them and silently doubles df/cf).
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "manifest.json"))
-    val m2 = new Manifest(dir)
-    preAppend.values.foreach(m2.commit)
-    merged.view.filterKeys(_.startsWith("merge-0-")).toMap.values.foreach(m2.commit)
+    crashAt(dir, mainCommit(dir))(IndexBuilder.append(spark, batch.toDS(), c, "batch1"))
+    assert(IndexBuilder.stats(c).numDocs == 300, "crash state not set up")
 
     val st = IndexBuilder.append(spark, batch.toDS(), c, "batch1") // retry
     assert(st.numDocs == 500)
@@ -103,42 +115,20 @@ class AppendSpec extends AnyFunSuite {
     // df must equal the combined corpus df exactly (no doubling)
     val df = spark.read.parquet(c.lexiconPath)
       .select($"term", $"df").as[(String, Long)].collect().toMap
-    val expected = scala.collection.mutable.HashMap.empty[String, Long]
-    (base ++ batch).foreach { f =>
-      graft.analysis.CodeTokenizer.termFreqs(f.content)._1.keysIterator
-        .foreach(t => expected.update(t, expected.getOrElse(t, 0L) + 1L))
-    }
-    expected.foreach { case (t, d) => assert(df(t) == d, s"df($t) doubled?") }
+    assert(df == combinedDf, "df doubled?")
   }
 
   test("retried append redoes an unrecorded partial docs/postings merge cleanly") {
+    // crash as the segment's postings files start to move in: its docs
+    // files are already in the live docs dir, nothing is committed
     import spark.implicits._
-    import graft.checkpoint.Manifest
-    import org.apache.commons.io.FileUtils
-    import java.io.File
     val dir = TestSpark.tmpDir("graft-append-retry2")
     val c = cfg(dir)
     IndexBuilder.build(spark, base.toDS(), c, "base")
-    val preAppend = new Manifest(dir).read()
-    // snapshot the pre-append lexicon: a crash during the docs/postings
-    // merges happens BEFORE the lexicon merge step, and the staged+swap
-    // discipline guarantees the live lexicon only changes after
-    // merge-0-lexicon commits — so the faithful crash state holds the
-    // PRE-append lexicon alongside the half-merged docs/postings
-    val lexSnap = new File(s"$dir/lexicon_preappend_snap")
-    FileUtils.copyDirectory(new File(c.lexiconPath), lexSnap)
-    IndexBuilder.append(spark, batch.toDS(), c, "batch1")
-    val merged = new Manifest(dir).read()
-
-    // simulate: crash DURING the docs/postings merges — seg0 files already
-    // moved into the live dirs, but the merge-0-docs/postings records never
-    // committed. The retry must replace (not duplicate) those files.
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "manifest.json"))
-    val m2 = new Manifest(dir)
-    preAppend.values.foreach(m2.commit)
-    merged.view.filterKeys(_ == "merge-0-vocab").toMap.values.foreach(m2.commit)
-    FileUtils.deleteDirectory(new File(c.lexiconPath))
-    FileUtils.copyDirectory(lexSnap, new File(c.lexiconPath))
+    crashAt(dir, (_, op, path) => op == "rename" && path.contains("/merge/postings/")) {
+      IndexBuilder.append(spark, batch.toDS(), c, "batch1")
+    }
+    assert(spark.read.parquet(c.docsPath).count() == 500, "crash state not set up")
 
     val st = IndexBuilder.append(spark, batch.toDS(), c, "batch1")
     assert(st.numDocs == 500)
@@ -181,28 +171,15 @@ class AppendSpec extends AnyFunSuite {
   }
 
   test("abandoned mid-append under a different fingerprint does not contaminate the lexicon") {
-    // a refresh can crash AFTER its lexicon swap but before its final
-    // records; if the table moves again, the retry arrives with a
-    // DIFFERENT fingerprint at the SAME segment index. The live lexicon
-    // then already holds the abandoned batch's deltas — the incremental
-    // merge must detect the stale merge records and fall back to the
-    // idempotent full recompute (the guard in append step 5).
+    // a refresh can crash with its merged lexicon written but not
+    // committed; if the table moves again, the retry arrives with a
+    // DIFFERENT fingerprint at the SAME segment number, and the abandoned
+    // batch must leave no trace
     import spark.implicits._
-    import graft.checkpoint.Manifest
     val dir = TestSpark.tmpDir("graft-append-abandon")
     val c = cfg(dir)
     IndexBuilder.build(spark, base.toDS(), c, "base")
-    val preAppend = new Manifest(dir).read()
-    IndexBuilder.append(spark, batch.toDS(), c, "batchA")
-    val merged = new Manifest(dir).read()
-    // rewind to the crash state: base records + ALL merge-0-* records
-    // (batchA's fingerprint) + batchA's refreshed postings record; live
-    // dirs keep batchA's segment files and the batchA-merged lexicon
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "manifest.json"))
-    val m2 = new Manifest(dir)
-    preAppend.values.foreach(m2.commit)
-    merged.view.filterKeys(_.startsWith("merge-0-")).toMap.values.foreach(m2.commit)
-    m2.commit(merged("postings"))
+    crashAt(dir, mainCommit(dir))(IndexBuilder.append(spark, batch.toDS(), c, "batchA"))
 
     val batchB = (3000L until 3120L)
       .map(i => { val f = CorpusGen.genFile(i, 42L); f.copy(repo = "d_" + f.repo) })
@@ -223,81 +200,6 @@ class AppendSpec extends AnyFunSuite {
     Seq("if return", "hash join", "def val").foreach { q =>
       assert(s.searchWAND(q, 10).toVector == o.topK(q, 10), s"'$q'")
     }
-  }
-
-  test("retry repairs a lost trailing stats record (crash between final commits)") {
-    // crash window: append-0 committed, the trailing lexicon stats record
-    // lost. The retry must repair numDocs/vocabN/totalTokens from the
-    // append record's own fields (subTokens) — otherwise the NEXT append
-    // reuses the docId/termId bases and silently collides ids.
-    import spark.implicits._
-    import graft.checkpoint.Manifest
-    val dir = TestSpark.tmpDir("graft-append-lostlex")
-    val c = cfg(dir)
-    IndexBuilder.build(spark, base.toDS(), c, "base")
-    val preAppend = new Manifest(dir).read()
-    IndexBuilder.append(spark, batch.toDS(), c, "batch1")
-    val merged = new Manifest(dir).read()
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "manifest.json"))
-    val m2 = new Manifest(dir)
-    preAppend.values.foreach(m2.commit)
-    merged.view.filterKeys(k => k.startsWith("merge-0-") || k == "append-0")
-      .toMap.values.foreach(m2.commit)
-    m2.commit(merged("postings"))
-    assert(IndexBuilder.stats(c).numDocs == 300, "crash state not set up")
-
-    val st = IndexBuilder.append(spark, batch.toDS(), c, "batch1") // retry
-    assert(st.numDocs == 500, s"stats not repaired: ${st.numDocs}")
-    val batch2 = (2000L until 2100L)
-      .map(i => { val f = CorpusGen.genFile(i, 42L); f.copy(repo = "c_" + f.repo) })
-    val st2 = IndexBuilder.append(spark, batch2.toDS(), c, "b2")
-    assert(st2.numDocs == 600)
-    val o = new SequentialOracle(base ++ batch ++ batch2)
-    val s = new Searcher(spark, c)
-    Seq("if return", "hash join", "def val").foreach { q =>
-      assert(s.searchWAND(q, 10).toVector == o.topK(q, 10), s"'$q'")
-    }
-  }
-
-  test("legacy whole-vocab-rewrite resume falls back to the lexicon recompute") {
-    // a pre-seg-file builder rewrote the WHOLE vocab (no segN- part-files)
-    // and committed merge-N-vocab with rows = 0; resuming such a crashed
-    // append with the incremental lexicon merge would silently drop the
-    // batch's new terms — the rows==0 resume guard must take the full
-    // recompute instead.
-    import spark.implicits._
-    import graft.checkpoint.Manifest
-    import java.io.File
-    val dir = TestSpark.tmpDir("graft-append-legacyvocab")
-    val c = cfg(dir)
-    IndexBuilder.build(spark, base.toDS(), c, "base")
-    val preAppend = new Manifest(dir).read()
-    IndexBuilder.append(spark, batch.toDS(), c, "batch1")
-    val merged = new Manifest(dir).read()
-    // legacy look: the new terms live only in UNPREFIXED vocab files
-    new File(c.vocabPath).listFiles()
-      .filter(_.getName.startsWith("seg0-")).foreach { f =>
-        java.nio.file.Files.move(f.toPath, new File(f.getParentFile,
-          f.getName.stripPrefix("seg0-") + "-legacy").toPath); ()
-      }
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "manifest.json"))
-    val m2 = new Manifest(dir)
-    preAppend.values.foreach(m2.commit)
-    m2.commit(merged("merge-0-vocab").copy(rows = 0L))
-    m2.commit(merged("merge-0-docs"))
-    m2.commit(merged("merge-0-postings"))
-    m2.commit(merged("postings"))
-
-    val st = IndexBuilder.append(spark, batch.toDS(), c, "batch1") // resume
-    assert(st.numDocs == 500)
-    val dirS = TestSpark.tmpDir("graft-legacyvocab-scratch")
-    val cS = cfg(dirS)
-    IndexBuilder.build(spark, (base ++ batch).toDS(), cS, "all")
-    val dfA = spark.read.parquet(c.lexiconPath)
-      .select($"term", $"df").as[(String, Long)].collect().toMap
-    val dfS = spark.read.parquet(cS.lexiconPath)
-      .select($"term", $"df").as[(String, Long)].collect().toMap
-    assert(dfA == dfS, "legacy resume dropped the batch's new terms")
   }
 
   test("second append keeps extending (multi-segment); compaction restores single-segment layout") {
@@ -344,52 +246,5 @@ class AppendSpec extends AnyFunSuite {
     assert(mPost.get("postings").get.rows ==
       spark.read.parquet(c.postingsPath).count(),
       "postings record stale after compact")
-  }
-
-  test("compact() recovers an interrupted swap (crash between delete and move)") {
-    import spark.implicits._
-    import graft.checkpoint.{Manifest, StageRecord}
-    import org.apache.commons.io.FileUtils
-    import java.io.File
-    val dir = TestSpark.tmpDir("graft-compact-crash")
-    val c = cfg(dir)
-    IndexBuilder.build(spark, base.toDS(), c, "base")
-    IndexBuilder.append(spark, batch.toDS(), c, "b1")
-    IndexBuilder.compact(spark, c) // compact-0 completes normally
-    val want = {
-      val s = new Searcher(spark, c)
-      queries.map(q => q -> s.searchWAND(q, 10).toVector).toMap
-    }
-
-    // fabricate an interrupted compact-1 caught mid-swap: staged dirs fully
-    // written (a no-op recompaction: contents = the live dirs), the staged
-    // record committed, live docs DELETED but its replacement not yet moved
-    // — the exact delete→move crash window ADVICE r2 flagged
-    FileUtils.copyDirectory(new File(c.docsPath), new File(s"$dir/docs_compact"))
-    FileUtils.copyDirectory(new File(c.postingsPath), new File(s"$dir/postings_compact"))
-    FileUtils.copyDirectory(new File(c.lexiconPath), new File(s"$dir/lexicon_compact"))
-    val st = IndexBuilder.stats(c)
-    val m = new Manifest(dir)
-    val nb = m.get("postings").get.rows
-    m.commit(StageRecord("compact-1-staged", "complete",
-      s"v${IndexBuilder.FormatVersion}:compact1", nb, 0L,
-      Map("numDocs" -> st.numDocs.toString, "avgDl" -> st.avgDl.toString,
-          "totalTokens" -> st.totalTokens.toString,
-          "vocabN" -> st.vocabSize.toString, "nBlocks" -> nb.toString,
-          "compactedSegments" -> "1")))
-    FileUtils.deleteDirectory(new File(c.docsPath))
-    assert(!new File(c.docsPath).exists(), "crash state not set up")
-
-    // the index is torn; the next compact() must repair it before anything
-    val stR = IndexBuilder.compact(spark, c)
-    assert(stR.numDocs == 500)
-    assert(new File(c.docsPath).exists())
-    val sR = new Searcher(spark, c)
-    queries.foreach { q =>
-      assert(sR.searchWAND(q, 10).toVector == want(q),
-        s"recovered index wrong for '$q'")
-    }
-    assert(new Manifest(dir).get("compact-1").exists(_.status == "complete"),
-      "recovery did not finalize the interrupted compact")
   }
 }

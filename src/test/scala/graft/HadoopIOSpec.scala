@@ -44,6 +44,16 @@ class HadoopIOSpec extends AnyFunSuite {
     assert(io.size(s"$root/d/f.txt") == 3L)
     assert(io.mtimeMs(s"$root/d/f.txt") > 0L)
     assert(io.isDirectory(s"$root/d") && !io.isDirectory(s"$root/d/f.txt"))
+    // rename: into a not-yet-existing dir, never onto an existing path
+    io.rename(s"$root/d/f.txt", s"$root/d/moved/g.txt")
+    assert(!io.exists(s"$root/d/f.txt"))
+    assert(new String(io.readBytes(s"$root/d/moved/g.txt"), "UTF-8") == "two")
+    io.atomicWrite(s"$root/d/f.txt", "three".getBytes("UTF-8"))
+    intercept[java.io.IOException](io.rename(s"$root/d/f.txt", s"$root/d/moved/g.txt"))
+    assert(new String(io.readBytes(s"$root/d/moved/g.txt"), "UTF-8") == "two")
+    io.rename(s"$root/d/moved", s"$root/d/moved2") // a whole directory
+    assert(io.list(s"$root/d/moved2") == Seq("g.txt"))
+    io.deleteRecursively(s"$root/d/moved2")
     assert(io.deleteIfExists(s"$root/d/claim") && !io.deleteIfExists(s"$root/d/claim"))
     io.atomicWrite(s"$root/d/sub/p.parquet", Array[Byte](1))
     assert(io.deleteRecursively(s"$root/d") == 1) // one parquet inside
