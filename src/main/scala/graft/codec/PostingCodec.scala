@@ -67,7 +67,9 @@ final case class Posting(docId: Long, tf: Int)
   * Each block is self-contained (firstDocId stored absolute), so blocks from
   * different build shards concatenate in docId order with no re-encoding —
   * that property is what makes the salted/sharded parallel merge of the
-  * index build valid (SURVEY.md §7.5 "Skew").
+  * index build valid (SURVEY.md §7.5 "Skew"), and lets a reader start
+  * mid-chain at any block. The builder cuts a term's chain only at
+  * `blockSize` or at its (termId, salt) group's end, not at docId shards.
   */
 object PostingCodec {
   final val DefaultBlockSize = 128
@@ -155,10 +157,11 @@ object PostingCodec {
     }
   }
 
-  /** Frame a (termId, shard)-local, docId-sorted run of postings into
-    * encoded block rows. `tfNorm(tf, dl)` is the BM25 tf-normalization used
-    * for the block-max metadata. The caller guarantees postings are strictly
-    * increasing in docId and all belong to (termId, shard). */
+  /** Frame a docId-sorted run of one term's postings into encoded block
+    * rows stamped with `shard`. `tfNorm(tf, dl)` is the BM25
+    * tf-normalization used for the block-max metadata. The caller
+    * guarantees postings are strictly increasing in docId and all belong to
+    * `termId`. */
   def buildBlocks(
       termId: Int,
       shard: Int,

@@ -48,7 +48,9 @@ final case class DocEntry(
   * document `docId` whose length is `dl` tokens. */
 final case class RawPosting(term: String, docId: Long, tf: Int, dl: Int)
 
-/** One encoded posting block (≤ blockSize postings of one (termId, shard)).
+/** One encoded posting block: ≤ blockSize docId-consecutive postings of one
+  * term. A term's blocks are cut only at blockSize or at the end of its
+  * (termId, salt) group, so every block but a group's last is full.
   *
   * Terms are dictionary-encoded: `termId` is the dense rank of the term
   * string in the corpus vocabulary (the lexicon maps term -> termId). Int
@@ -63,9 +65,14 @@ final case class RawPosting(term: String, docId: Long, tf: Int, dl: Int)
   * Block-max metadata (`maxTfNorm`) is the max over the block of the BM25
   * tf-normalization term tf / (tf + k1*(1 - b + b*dl/avgdl)); multiplying by
   * idf(term) * (k1+1) at query time yields the block's score upper bound —
-  * the Block-Max WAND pruning key. Blocks never span shard boundaries, so a
-  * document's postings for all terms of a query live in the same shard and
-  * sharded top-k scoring is exact.
+  * the Block-Max WAND pruning key. It bounds every sub-range of the block
+  * too, so a shard task that scores only its own docId range may use it.
+  *
+  * `shard` is the stored shard of `firstDocId` (the docs table's `shard`);
+  * for a salted heavy term it is the salt, and the block lies inside that
+  * shard. A light term's block may cross shard ranges: distributed serving
+  * sends it to every shard whose docId range it overlaps. `blockIdx`
+  * counts from 0 within each (termId, salt) group.
   */
 final case class PostingBlockRow(
     termId: Int,

@@ -1605,14 +1605,23 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
   }
 
   /** Resolve a view: read the CURRENT table snapshot, register it under the
-    * table name, run the stored SQL. */
+    * table name, run the stored SQL. The registration lasts only until the
+    * SQL is analyzed: then a session temp view of that name that the caller
+    * had is restored, or the one made here is dropped. */
   def readView(name: String): DataFrame = {
     val p = viewPath(name)
     require(io.exists(p), s"view $name does not exist under $root")
     val n = mapper.readTree(io.readBytes(p))
     val table = n.get("table").asText()
+    val catalog = spark.sessionState.catalog
+    val callers = catalog.getRawTempView(table)
     read(table).createOrReplaceTempView(table)
-    spark.sql(n.get("sql").asText())
+    // spark.sql analyzes eagerly: the returned plan no longer names the view
+    try spark.sql(n.get("sql").asText())
+    finally callers match {
+      case Some(v) => catalog.createTempView(table, v, overrideIfExists = true)
+      case None => catalog.dropTempView(table)
+    }
   }
 
   def dropView(name: String): Unit = {

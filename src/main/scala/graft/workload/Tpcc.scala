@@ -41,17 +41,26 @@ final class Tpcc(spark: SparkSession, val cat: Catalog,
   /** Conflict-retry count across the workload (OCC aborts rerun). */
   val retries = new AtomicLong(0L)
 
-  /** Await every future, then rethrow the first failure (all in-flight
-    * work has finished before a retry loop reruns — no stragglers writing
-    * behind a restarted transaction). */
-  private def awaitAll(fs: Seq[scala.concurrent.Future[Unit]]): Unit = {
-    val rs = fs.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
+  /** Run `tasks` concurrently, each on a thread of a pool of their own (the
+    * tasks block on Spark jobs, so they never borrow a shared pool), await
+    * every one, shut the pool down, then rethrow the first failure (all
+    * in-flight work has finished before a retry loop reruns — no
+    * stragglers writing behind a restarted transaction). */
+  private def runAll(tasks: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.length,
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-tpcc"); t.setDaemon(true); t
+      })
+    val rs = try {
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
+      tasks.map(t => Future(t()))
+        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+    } finally pool.shutdown()
     rs.collectFirst { case scala.util.Failure(e) => throw e }
   }
-
-  private implicit def ec: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.global
 
   /** Initial state: ytd 0 everywhere, next_o_id 1, empty orders.
     * The four creates are independent single-table commits — submitted
@@ -60,25 +69,24 @@ final class Tpcc(spark: SparkSession, val cat: Catalog,
     * read-modify-write document). */
   def setup(): Unit = {
     val t = cat.tables
-    import scala.concurrent.Future
-    awaitAll(Seq(
-      Future { t.create(Warehouse,
+    runAll(
+      () => t.create(Warehouse,
         (0 until nWarehouses).map(w => (w.toLong, 0.0))
-          .toDF("w_id", "w_ytd").coalesce(1)); () },
-      Future { t.create(District,
+          .toDF("w_id", "w_ytd").coalesce(1)),
+      () => t.create(District,
         (for { w <- 0 until nWarehouses; d <- 0 until nDistricts }
           yield (w.toLong, d.toLong, 0.0, 1L))
-          .toDF("d_w_id", "d_id", "d_ytd", "d_next_o_id").coalesce(1)); () },
-      Future { t.create(Customer,
+          .toDF("d_w_id", "d_id", "d_ytd", "d_next_o_id").coalesce(1)),
+      () => t.create(Customer,
         (for { w <- 0 until nWarehouses; d <- 0 until nDistricts;
                c <- 0 until nCustomers }
           yield (w.toLong, d.toLong, c.toLong, 0.0, 0.0, 0L))
           .toDF("c_w_id", "c_d_id", "c_id", "c_balance", "c_ytd_payment",
-            "c_payment_cnt").coalesce(1)); () },
-      Future { t.create(Orders,
+            "c_payment_cnt").coalesce(1)),
+      () => t.create(Orders,
         Seq.empty[(Long, Long, Long, Long, Long)]
           .toDF("o_w_id", "o_d_id", "o_id", "o_c_id", "o_ol_cnt")
-          .coalesce(1)); () }))
+          .coalesce(1)))
     Seq(Warehouse, District, Customer, Orders).foreach(cat.register)
   }
 
@@ -107,13 +115,12 @@ final class Tpcc(spark: SparkSession, val cat: Catalog,
       val oid = dt.read()
         .filter($"d_w_id" === w && $"d_id" === d)
         .select($"d_next_o_id").as[Long].head()
-      import scala.concurrent.Future
-      awaitAll(Seq(
-        Future { dt.update($"d_w_id" === w && $"d_id" === d,
-          "d_next_o_id", lit(oid + 1)); () },
-        Future { ot.insert(
+      runAll(
+        () => dt.update($"d_w_id" === w && $"d_id" === d,
+          "d_next_o_id", lit(oid + 1)),
+        () => ot.insert(
           Seq((w, d, oid, c, olCnt))
-            .toDF("o_w_id", "o_d_id", "o_id", "o_c_id", "o_ol_cnt")); () }))
+            .toDF("o_w_id", "o_d_id", "o_id", "o_c_id", "o_ol_cnt")))
     }
   }
 
@@ -126,16 +133,15 @@ final class Tpcc(spark: SparkSession, val cat: Catalog,
       val wt = t.on(Warehouse)
       val dt = t.on(District)
       val ct = t.on(Customer)
-      import scala.concurrent.Future
-      awaitAll(Seq(
-        Future { wt.update($"w_id" === w, "w_ytd", $"w_ytd" + amt); () },
-        Future { dt.update($"d_w_id" === w && $"d_id" === d,
-          "d_ytd", $"d_ytd" + amt); () },
-        Future { ct.updateSet(
+      runAll(
+        () => wt.update($"w_id" === w, "w_ytd", $"w_ytd" + amt),
+        () => dt.update($"d_w_id" === w && $"d_id" === d,
+          "d_ytd", $"d_ytd" + amt),
+        () => ct.updateSet(
           $"c_w_id" === w && $"c_d_id" === d && $"c_id" === c,
           Seq("c_balance" -> ($"c_balance" - amt),
             "c_ytd_payment" -> ($"c_ytd_payment" + amt),
-            "c_payment_cnt" -> ($"c_payment_cnt" + 1L))); () }))
+            "c_payment_cnt" -> ($"c_payment_cnt" + 1L))))
     }
   }
 

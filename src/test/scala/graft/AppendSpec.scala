@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.countDistinct
 
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.model.SourceFile
+import graft.model.{PostingBlockRow, SourceFile}
 import graft.query.{Searcher, SequentialOracle}
 
 /** Incremental append: a second batch merges into an existing index as a
@@ -46,11 +46,26 @@ class AppendSpec extends AnyFunSuite {
     val cB = cfg(dirB)
     IndexBuilder.build(spark, (base ++ batch).toDS(), cB, "all")
 
+    // the segment's blocks lie inside its docId range, the base's below it
+    val seg = new graft.checkpoint.Manifest(dirA).get("append-0").get
+    val (docBase, shardBase) =
+      (seg.extra("docIdBase").toLong, seg.extra("shardBase").toInt)
+    val outside = spark.read.parquet(cA.postingsPath).as[PostingBlockRow]
+      .filter(b => if (b.shard >= shardBase)
+          b.firstDocId < docBase || b.lastDocId >= docBase + seg.rows
+        else b.lastDocId >= docBase)
+      .count()
+    assert(outside == 0L, "a block crosses the segment's docId range")
+
     val sA = new Searcher(spark, cA)
+    // distributed WAND over the base's and the segment's shard ranges
+    val sAd = new Searcher(spark, cA, localServeMaxBlocks = 0L, gatherMaxBlocks = 0L)
     val sB = new Searcher(spark, cB)
     queries.foreach { q =>
       val exp = oracle.topK(q, 10)
       assert(sA.searchWAND(q, 10).toVector == exp, s"appended WAND vs oracle: '$q'")
+      assert(sAd.searchWAND(q, 10).toVector == exp,
+        s"appended distributed WAND vs oracle: '$q'")
       assert(sA.searchTAAT(q, 10).toVector == exp, s"appended TAAT vs oracle: '$q'")
       assert(sB.searchWAND(q, 10).toVector == exp, s"scratch WAND vs oracle: '$q'")
     }

@@ -102,16 +102,41 @@ class IndexSpec extends AnyFunSuite {
     assert(decoded == expected)
   }
 
-  test("blocks never span shard boundaries and are docId-sorted") {
+  test("blocks are cut only at blockSize or a (termId, salt) group's end") {
+    // a group is one (termId, salt): a light term's whole chain (salt 0), or
+    // one shard of a salted heavy term, whose stored shard is its salt
+    val c = cfg(indexDir)
     val nDocs = built.numDocs
-    val bad = spark.read.parquet(cfg(indexDir).postingsPath)
-      .as[PostingBlockRow]
-      .filter(b =>
-        IndexBuilder.shardOf(b.firstDocId, nDocs, 8) !=
-          IndexBuilder.shardOf(b.lastDocId, nDocs, 8) ||
-        b.firstDocId > b.lastDocId)
-      .count()
-    assert(bad == 0L)
+    val heavy = spark.read.parquet(c.lexiconPath)
+      .filter($"df" > c.heavyDfThreshold).select($"termId").as[Int]
+      .collect().toSet
+    assert(heavy.nonEmpty, "test corpus must have salted heavy terms")
+    val groups = spark.read.parquet(c.postingsPath).as[PostingBlockRow]
+      .collect().groupBy(b => (b.termId, if (heavy(b.termId)) b.shard else 0))
+    var crossing = 0
+    groups.foreach { case ((t, salt), bs) =>
+      val chain = bs.sortBy(_.blockIdx)
+      assert(chain.map(_.blockIdx).toSeq == chain.indices, s"term $t/$salt blockIdx")
+      chain.foreach { b =>
+        assert(b.firstDocId <= b.lastDocId)
+        assert(b.shard == IndexBuilder.shardOf(b.firstDocId, nDocs, c.numShards),
+          s"term $t block ${b.blockIdx}: stored shard is not its firstDocId's")
+        if (heavy(t))
+          assert(IndexBuilder.shardOf(b.lastDocId, nDocs, c.numShards) == salt,
+            s"heavy term $t block ${b.blockIdx} leaves shard $salt")
+        else if (b.shard != IndexBuilder.shardOf(b.lastDocId, nDocs, c.numShards))
+          crossing += 1
+      }
+      chain.sliding(2).foreach {
+        case Array(x, y) =>
+          assert(x.lastDocId < y.firstDocId, s"term $t/$salt: blocks overlap")
+          assert(x.count == c.blockSize, s"term $t/$salt: short inner block")
+        case _ => ()
+      }
+    }
+    // the layout's point: light chains cross shard ranges (the distributed
+    // path's multi-shard blocks are exercised by the parity tests below)
+    assert(crossing > 0, "no block crosses a shard range")
   }
 
   test("packRuns=false (raw-row shuffle) builds a bit-identical index") {
@@ -195,6 +220,24 @@ class IndexSpec extends AnyFunSuite {
       assert(d == l, s"local/distributed divergence for '$q'")
       assert(g == l, s"gather/local divergence for '$q'")
       assert(l == oracle.topK(q, 10), s"oracle mismatch for '$q'")
+    }
+  }
+
+  test("cogrouped-norms path: WAND and TAAT == sequential oracle (exact scores)") {
+    // broadcastNormsMaxDocs = 0 lowers the 10M-doc threshold below this
+    // index: norms are cogrouped by stored shard instead of broadcast, and
+    // (with both block budgets at 0) every WAND query runs distributed.
+    // TAAT joins the persisted norms whatever the threshold, so a few of its
+    // queries suffice here.
+    val cogrouped = new Searcher(spark, cfg(indexDir), localServeMaxBlocks = 0L,
+      gatherMaxBlocks = 0L, broadcastNormsMaxDocs = 0L)
+    refQueries.foreach { q =>
+      assert(cogrouped.searchWAND(q, 10).toVector == oracle.topK(q, 10),
+        s"WAND mismatch for '$q'")
+    }
+    refQueries.take(6).foreach { q =>
+      assert(cogrouped.searchTAAT(q, 10).toVector == oracle.topK(q, 10),
+        s"TAAT mismatch for '$q'")
     }
   }
 

@@ -607,6 +607,22 @@ class TableOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { ops.readView("big") }
   }
 
+  test("readView leaves a session temp view named like the base table intact") {
+    val root = TestSpark.tmpDir("graft-tables-views-clobber")
+    val ops = new TableOps(spark, root)
+    ops.create("tv", Seq((1L, 10.0), (2L, 200.0)).toDF("id", "v"))
+    ops.createView("bigtv", "tv", "SELECT id FROM tv WHERE v > 100.0")
+    // a caller's own temp view under the base table's name survives
+    Seq((7L, 999.0)).toDF("id", "v").createOrReplaceTempView("tv")
+    try {
+      assert(ops.readView("bigtv").as[Long].collect().toSeq == Seq(2L))
+      assert(spark.table("tv").as[(Long, Double)].collect().toSeq == Seq((7L, 999.0)))
+    } finally spark.catalog.dropTempView("tv")
+    // with no caller view, readView leaves none behind
+    assert(ops.readView("bigtv").as[Long].collect().toSeq == Seq(2L))
+    assert(!spark.catalog.tableExists("tv"))
+  }
+
   test("analyze on an empty table yields zero counts, not an NPE") {
     val root = TestSpark.tmpDir("graft-tables-emptystats")
     val ops = new TableOps(spark, root)
