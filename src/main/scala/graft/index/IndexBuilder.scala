@@ -1,5 +1,7 @@
 package graft.index
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,26 +72,52 @@ final case class IndexConfig(
     // historical partition count). Deployment knobs, not per-query tuning.
     rangeTargetBytes: Long = 32L * 1024 * 1024,
     encodeTargetBytes: Long = 6L * 1024 * 1024) {
-  // Each structure's directory as the committed manifest names it (a
-  // structure not committed yet: its default name), so every reader sees
-  // the committed state.
-  def keymapPath: String = path(dir("keymap"))
-  def forwardPath: String = path(dir("forward"))
-  def vocabPath: String = path(dir("postings", "vocabDir", "vocab"))
-  def docsPath: String = path(dir("docs"))
-  def postingsPath: String = path(dir("postings"))
-  def lexiconPath: String = path(dir("lexicon"))
+  // Each structure's directory as the latest committed manifest names it,
+  // so every reader sees the committed state. Each call reads the
+  // manifest: a reader of several structures takes one `paths`.
+  def keymapPath: String = paths().keymap
+  def forwardPath: String = paths().forward
+  def vocabPath: String = paths().vocab
+  def docsPath: String = paths().docs
+  def postingsPath: String = paths().postings
+  def lexiconPath: String = paths().lexicon
   def metricsPath: String = path("metrics")
-  def positionsPath: String = path(dir("positions"))
+  def positionsPath: String = paths().positions
+
+  /** The structures' directories as `records` (by default the latest
+    * committed version's) name them. */
+  def paths(records: ListMap[String, StageRecord] =
+      new Manifest(indexDir).read()): IndexPaths = new IndexPaths(indexDir, records)
 
   /** Committed directory of `stage`'s record extra `key`, relative to
     * `indexDir`. */
   private[index] def dir(stage: String, key: String = "dir",
-      default: String = ""): String =
-    new Manifest(indexDir).get(stage).flatMap(_.extra.get(key))
-      .getOrElse(if (default.nonEmpty) default else stage)
+      default: String = ""): String = paths().dir(stage, key, default)
 
   private[index] def path(rel: String): String = s"$indexDir/$rel"
+}
+
+/** The directories of an index's structures as one set of manifest records
+  * names them; a structure not committed yet gets its default name. */
+final class IndexPaths private[index] (indexDir: String,
+    records: ListMap[String, StageRecord]) extends Serializable {
+  def keymap: String = path(dir("keymap"))
+  def forward: String = path(dir("forward"))
+  def vocab: String = path(dir("postings", "vocabDir", "vocab"))
+  def docs: String = path(dir("docs"))
+  def postings: String = path(dir("postings"))
+  def lexicon: String = path(dir("lexicon"))
+  def positions: String = path(dir("positions"))
+
+  /** Directory of `stage`'s record extra `key`, relative to the index
+    * directory. */
+  private[index] def dir(stage: String, key: String = "dir",
+      default: String = ""): String =
+    records.get(stage).flatMap(_.extra.get(key))
+      .getOrElse(if (default.nonEmpty) default else stage)
+
+  /** `rel` under the index directory. */
+  def path(rel: String): String = s"$indexDir/$rel"
 }
 
 object IndexConfig {
@@ -235,6 +263,8 @@ object IndexBuilder {
     val parts = partitions(spark, cfg)
     val metricsAcc: CollectionAccumulator[PartitionMetric] =
       spark.sparkContext.collectionAccumulator[PartitionMetric]("graft.metrics")
+    def forwardWithIds =
+      spark.read.schema(IndexSchema.forward).parquet(cfg.forwardPath)
 
     // ---- stage 0: keymap — docIds from a keys-ONLY scan --------------------
     // The content column is pruned at the parquet reader: this pass reads
@@ -324,11 +354,12 @@ object IndexBuilder {
           "forward", pid, rows, toks, 0L, (System.nanoTime() - pt0) / 1000000)))
       }
       pre.toDF()
-        .join(spark.read.parquet(cfg.keymapPath), Seq("repo", "path", "commit"))
+        .join(spark.read.schema(IndexSchema.keymap).parquet(cfg.keymapPath),
+          Seq("repo", "path", "commit"))
         .select($"docId", $"repo", $"path", $"commit", $"lang", $"dl", $"sha",
           $"terms", $"tfs")
         .write.mode("overwrite").parquet(cfg.forwardPath)
-      val (nDocs0, totalToks) = spark.read.parquet(cfg.forwardPath)
+      val (nDocs0, totalToks) = forwardWithIds
         .agg(count(lit(1)), sum($"dl")).as[(Long, Long)].head()
       manifest.commit(StageRecord("forward", "complete", fp, nDocs0,
         (System.nanoTime() - t0) / 1000000,
@@ -339,7 +370,6 @@ object IndexBuilder {
     val numDocs = manifest.get("forward").get.rows
     val totalTokens = manifest.get("forward").get.extra("totalTokens").toLong
     val avgDl = totalTokens.toDouble / math.max(numDocs, 1L)
-    def forwardWithIds = spark.read.parquet(cfg.forwardPath)
 
     // ---- stage 2: docs (projection; terms/tfs pruned at the reader) --------
     // `shard` is MATERIALIZED here (not recomputed at query time): the shard
@@ -371,7 +401,7 @@ object IndexBuilder {
       // partition-count-sized offsets array). The vocab's df column is
       // advisory (df at assignment time); the lexicon is authoritative.
       val (vocabN, maxDf) = writeRanked(spark,
-        spark.read.parquet(cfg.forwardPath)
+        forwardWithIds
           .select(explode($"terms").as("term"))
           .groupBy($"term").agg(count(lit(1)).as("df"))
           .as[(String, Long)],
@@ -380,7 +410,8 @@ object IndexBuilder {
       // skipped without a job when the vocab's max df (from writeRanked's
       // one agg) can't cross the threshold — every small/micro-batch build
       val heavy =
-        if (maxDf > cfg.heavyDfThreshold) heavyTerms(spark, cfg.vocabPath, cfg)
+        if (maxDf > cfg.heavyDfThreshold) heavyTerms(
+          spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath), cfg)
         else new java.util.HashSet[Integer]()
 
       val nb = encodePostings(spark, forwardWithIds, heavy, numDocs, avgDl,
@@ -435,12 +466,12 @@ object IndexBuilder {
   /** The terms to salt: the top-df ones above the threshold, at most
     * maxHeavyTerms (≤4096), so the collect is scale-safe by construction;
     * ties at the cutoff break by term (deterministic across parallelism).
-    * `path` holds a vocab or a lexicon (both carry term, termId, df). */
-  private def heavyTerms(spark: SparkSession, path: String,
+    * `terms` is a vocab or a lexicon (both carry term, termId, df). */
+  private def heavyTerms(terms: org.apache.spark.sql.DataFrame,
       cfg: IndexConfig): java.util.HashSet[Integer] = {
-    import spark.implicits._
+    import terms.sparkSession.implicits._
     val s = new java.util.HashSet[Integer]()
-    spark.read.parquet(path)
+    terms
       .filter($"df" > cfg.heavyDfThreshold)
       .orderBy($"df".desc, $"term".asc)
       .limit(cfg.maxHeavyTerms)
@@ -473,7 +504,7 @@ object IndexBuilder {
     // multiplier (finer skew smoothing at cluster scale)
     val encodeParts = sizedParts(numTokens * 5L, cfg.encodeTargetBytes, parts * 4)
 
-    val vocabIds = spark.read.parquet(cfg.vocabPath)
+    val vocabIds = spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
       .select($"termId", $"term")
     // salt as a pure column expression (In/InSet over ≤ maxHeavyTerms ids +
     // integer-division shard), NOT a typed lambda: the explode → join →
@@ -529,7 +560,7 @@ object IndexBuilder {
       // explode+join map side.
       val unranged = s"$outPath.unranged"
       blocks.write.mode("overwrite").parquet(unranged)
-      spark.read.parquet(unranged)
+      spark.read.schema(IndexSchema.postings).parquet(unranged)
         .repartitionByRange(encodeParts, $"termId", $"shard", $"blockIdx")
         .sortWithinPartitions($"termId", $"shard", $"blockIdx")
         .write.mode("overwrite").parquet(outPath)
@@ -630,7 +661,7 @@ object IndexBuilder {
       } finally { if (encodeParts > 1) runs.unpersist() }
     }
     if (encodeParts == 1) parquetRowCount(spark, outPath)
-    else spark.read.parquet(outPath).count()
+    else spark.read.schema(IndexSchema.postings).parquet(outPath).count()
   }
 
   /** Cap on postings per packed shuffle run (~5 B/posting ⇒ ≤ ~40 KB run
@@ -761,8 +792,9 @@ object IndexBuilder {
       vocabPath: String, outPath: String, parts: Int,
       targetBytes: Long = 32L * 1024 * 1024): Unit = {
     import spark.implicits._
-    val vocab = spark.read.parquet(vocabPath).select($"termId", $"term")
-    val agg = spark.read.parquet(postingsPath)
+    val vocab = spark.read.schema(IndexSchema.vocab).parquet(vocabPath)
+      .select($"termId", $"term")
+    val agg = spark.read.schema(IndexSchema.postings).parquet(postingsPath)
       .groupBy($"termId")
       .agg(sum($"count").as("df"), sum($"sumTf").as("cf"),
         count(lit(1)).cast("int").as("nBlocks"),
@@ -834,9 +866,10 @@ object IndexBuilder {
     // union of forward indexes with global docIds (segment forwards are
     // 0-based; shift by each segment's recorded docIdBase)
     val segs = recs.values.filter(_.stage.startsWith("append-")).toSeq
-    val fw = segs.foldLeft(spark.read.parquet(cfg.forwardPath)) { (df, r) =>
-      df.unionByName(spark.read.parquet(
-        cfg.copy(indexDir = cfg.path(r.extra("dir"))).forwardPath)
+    def forward(c: IndexConfig) =
+      spark.read.schema(IndexSchema.forward).parquet(c.forwardPath)
+    val fw = segs.foldLeft(forward(cfg)) { (df, r) =>
+      df.unionByName(forward(cfg.copy(indexDir = cfg.path(r.extra("dir"))))
         .withColumn("docId", $"docId" + r.extra("docIdBase").toLong))
     }
 
@@ -851,7 +884,8 @@ object IndexBuilder {
       .write.mode("overwrite").parquet(cfg.path(docsDir))
 
     // heavy terms from the authoritative (merged) lexicon df
-    val nb = encodePostings(spark, fw, heavyTerms(spark, cfg.lexiconPath, cfg),
+    val lexicon = spark.read.schema(IndexSchema.lexicon).parquet(cfg.lexiconPath)
+    val nb = encodePostings(spark, fw, heavyTerms(lexicon, cfg),
       st.numDocs, st.avgDl, cfg, parts, st.totalTokens, metricsAcc,
       cfg.path(postingsDir))
     // compact never changes the vocabulary: the lexicon's row count stays
@@ -1034,25 +1068,22 @@ object IndexBuilder {
       (cfg.vocabPath, cfg.docsPath, cfg.postingsPath)
     Seq(vocabDir, docsDir, postingsDir).foreach(dropParts(io, _, prefix))
     val stage = s"${subCfg.indexDir}/merge"
-    // explicit schemas: no driver-side schema-inference pass (fixed
-    // overhead at micro-batch scale), and an empty stage dir reads as no rows
-    val enc = org.apache.spark.sql.Encoders
-    val vocabSchema = "termId INT, term STRING, df BIGINT"
+    val subVocab = spark.read.schema(IndexSchema.vocab).parquet(subCfg.vocabPath)
 
     // 1) new terms (anti-join on term) get dense ids after the committed
     //    vocabulary — distributed, no driver collect; existing termIds are
     //    immutable. O(new terms) per append.
-    val oldVocab = spark.read.schema(vocabSchema).parquet(vocabDir)
+    val oldVocab = spark.read.schema(IndexSchema.vocab).parquet(vocabDir)
     val (newTerms, _) = writeRanked(spark,
-      spark.read.parquet(subCfg.vocabPath).select($"term", $"df")
+      subVocab.select($"term", $"df")
         .join(oldVocab.select($"term"), Seq("term"), "left_anti")
         .as[(String, Long)],
       parts, s"$stage/vocab", baseId = st.vocabSize,
       targetBytes = cfg.rangeTargetBytes)
-    val newVocab = spark.read.schema(vocabSchema).parquet(s"$stage/vocab")
+    val newVocab = spark.read.schema(IndexSchema.vocab).parquet(s"$stage/vocab")
 
     // 2) docs: shift docId + shard
-    spark.read.parquet(subCfg.docsPath)
+    spark.read.schema(IndexSchema.docs).parquet(subCfg.docsPath)
       .withColumn("docId", $"docId" + docBase)
       .withColumn("shard", $"shard" + shardBase)
       .write.mode("overwrite").parquet(s"$stage/docs")
@@ -1060,12 +1091,13 @@ object IndexBuilder {
     // 3) postings: remap termId via a join on the merged vocabulary (the
     //    sub→global mapping never lands on the driver), shift shard + doc
     //    base byte-wise
-    val mapping = spark.read.parquet(subCfg.vocabPath)
+    val mapping = subVocab
       .select($"termId".as("_1"), $"term")
       .join(oldVocab.unionByName(newVocab).select($"termId".as("_2"), $"term"),
         "term")
       .select($"_1", $"_2").as[(Int, Int)]
-    val sub = spark.read.parquet(subCfg.postingsPath).as[PostingBlockRow]
+    val sub = spark.read.schema(IndexSchema.postings).parquet(subCfg.postingsPath)
+      .as[PostingBlockRow]
     val baseV = docBase; val shardBaseV = shardBase
     sub.joinWith(mapping, sub("termId") === mapping("_1"))
       .map { case (blk, (_, gid)) =>
@@ -1083,7 +1115,7 @@ object IndexBuilder {
     //    associative (df/cf/nBlocks sums, maxTfNorm a max), so merging the
     //    committed lexicon with the segment's per-term deltas equals the
     //    full recompute — AppendSpec pins it column-for-column.
-    val delta0 = spark.read.schema(enc.product[PostingBlockRow].schema)
+    val delta0 = spark.read.schema(IndexSchema.postings)
       .parquet(s"$stage/postings")
       .select($"termId", $"count", $"sumTf", $"maxTfNorm")
       .groupBy($"termId")
@@ -1099,8 +1131,7 @@ object IndexBuilder {
     // existing terms: the delta merged into their row (left join); new
     // terms: the staged vocab rows, each with >= 1 block in this segment,
     // so their inner join against the delta is lossless
-    val mergedLex = spark.read.schema(enc.product[LexiconEntry].schema)
-      .parquet(lexPath)
+    val mergedLex = spark.read.schema(IndexSchema.lexicon).parquet(lexPath)
       .join(delta, Seq("termId"), "left")
       .select($"term", $"termId",
         ($"df" + coalesce($"dDf", lit(0L))).as("df"),
@@ -1151,9 +1182,14 @@ object IndexBuilder {
   }
 
   /** Stats of an already-built index (no build triggered). */
-  def stats(cfg: IndexConfig): CorpusStats = statsOf(
-    new Manifest(cfg.indexDir).get("lexicon").getOrElse(
-      throw new IllegalStateException(s"index at ${cfg.indexDir} not built")))
+  def stats(cfg: IndexConfig): CorpusStats =
+    stats(cfg.indexDir, new Manifest(cfg.indexDir).read())
+
+  /** Stats as the manifest `records` of the index at `indexDir` hold them. */
+  private[graft] def stats(indexDir: String,
+      records: ListMap[String, StageRecord]): CorpusStats =
+    statsOf(records.getOrElse("lexicon",
+      throw new IllegalStateException(s"index at $indexDir not built")))
 
   private def statsOf(lex: StageRecord): CorpusStats = CorpusStats(
     lex.extra("numDocs").toLong, lex.extra("avgDl").toDouble,

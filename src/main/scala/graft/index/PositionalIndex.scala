@@ -82,11 +82,12 @@ object PositionalIndex {
       }
     }.toDF("repo", "path", "commit", "term", "tf", "dl", "posBytes")
     perTerm
-      .join(spark.read.parquet(cfg.docsPath)
+      .join(spark.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
           .filter($"docId" >= baseDocId)
           .select($"docId", $"repo", $"path", $"commit"),
         Seq("repo", "path", "commit"))
-      .join(spark.read.parquet(cfg.vocabPath).select($"termId", $"term"),
+      .join(spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
+          .select($"termId", $"term"),
         "term") // AQE broadcasts the vocab when small
       .select($"termId", $"docId", $"tf", $"dl", $"posBytes")
   }
@@ -111,7 +112,7 @@ object PositionalIndex {
     } finally { if (parts > 1) rows.unpersist(); () }
     // single-partition regime: count from the file footers driver-side
     if (parts == 1) IndexBuilder.parquetRowCount(spark, out)
-    else spark.read.parquet(out).count()
+    else spark.read.schema(IndexSchema.positions).parquet(out).count()
   }
 
   /** Build (or reuse) the positional sidecar. Returns the row count. */

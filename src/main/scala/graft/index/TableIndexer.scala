@@ -147,8 +147,8 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
     if (removed.nonEmpty) {
       val prev = base.records.get("tombstones")
       val prevDead: DataFrame = prev match {
-        case Some(r) => spark.read
-          .parquet(cfg.path(r.extra("dir"))).select($"docId")
+        case Some(r) => spark.read.schema(IndexSchema.tombstones)
+          .parquet(cfg.path(r.extra("dir")))
         case None => Seq.empty[Long].toDF("docId")
       }
       val removedRows = ops.readFilesOf(table, synced, removed).get
@@ -156,7 +156,7 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
       // the removed keys' pre-append docIds, minus already-dead ones
       // (a key compacted/updated in an earlier refresh left a dead docId
       // behind — only the live one dies now, and only it may subtract df)
-      val newlyDead = spark.read.parquet(cfg.docsPath)
+      val newlyDead = spark.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
         .filter($"docId" < docBase)
         .join(removedRows.select($"repo", $"path", $"commit"),
           Seq("repo", "path", "commit"))
@@ -184,13 +184,13 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
         .flatMap(c => CodeTokenizer.tokenize(c, unicode).distinct)
         .toDF("term")
         .groupBy($"term").agg(count(lit(1)).as("delta"))
-      val vocab = spark.read.parquet(cfg.vocabPath)
+      val vocab = spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
         .select($"term", $"termId")
       val newDelta = deadTerms.join(vocab, "term")
         .select($"termId", $"delta")
       val prevDelta: DataFrame = prev match {
-        case Some(r) => spark.read.parquet(cfg.path(r.extra("dfDir")))
-          .select($"termId", $"delta")
+        case Some(r) => spark.read.schema(IndexSchema.dfdelta)
+          .parquet(cfg.path(r.extra("dfDir")))
         case None => Seq.empty[(Int, Long)].toDF("termId", "delta")
       }
       // fresh dirs named by the version this refresh commits: a retry

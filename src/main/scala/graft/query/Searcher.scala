@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.CodeTokenizer
 import graft.codec.{PostingCodec, VByte}
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexSchema, PosPostingRow}
 import graft.model._
 
 /** BM25 top-k query engine over a built graft index.
@@ -42,8 +42,26 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     extends Serializable {
   import spark.implicits._
 
-  val stats: CorpusStats = IndexBuilder.stats(cfg)
+  /** The one manifest version this Searcher serves: every record and
+    * directory it reads, at open and in each lazy load, comes from this
+    * snapshot, so a commit landing between two loads cannot mix versions. */
+  private val records = new graft.checkpoint.Manifest(cfg.indexDir).read()
+  private val paths = cfg.paths(records)
+
+  val stats: CorpusStats = IndexBuilder.stats(cfg.indexDir, records)
   private val p = cfg.bm25
+
+  /** Posting-block count: the local-serving and postings-cache budgets
+    * gate on it. */
+  private val nBlocks =
+    records.get("postings").map(_.rows).getOrElse(Long.MaxValue)
+
+  private def docsDF: DataFrame =
+    spark.read.schema(IndexSchema.docs).parquet(paths.docs)
+
+  private def lexiconScan: DataFrame =
+    spark.read.schema(IndexSchema.lexicon).parquet(paths.lexicon)
+      .select($"term", $"termId", $"df", $"maxTfNorm", $"nBlocks")
 
   /** Cleanup actions registered as each lazy cached resource materializes;
     * close() drains them so a superseded Searcher (stale fingerprint or
@@ -68,8 +86,8 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * norm(a_new)/norm(a_old) <= a_new/a_old, so scaling stored bounds by
     * avgdlNow / min(avgDlAtBuild) keeps WAND pruning exact (only looser). */
   private[graft] lazy val ubScale: Double = {
-    val m = new graft.checkpoint.Manifest(cfg.indexDir).read()
-    val builds = m.values.flatMap(_.extra.get("avgDlAtBuild")).map(_.toDouble)
+    val builds =
+      records.values.flatMap(_.extra.get("avgDlAtBuild")).map(_.toDouble)
     if (builds.isEmpty) 1.0
     else math.max(1.0, liveStats.avgDl / builds.min)
   }
@@ -81,8 +99,8 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * over the live subset). Driver-resident + broadcast, size-guarded:
     * past TombstonesMaxDocs the deployment must compact (rebuild), the
     * same contract as Lucene's merge policy reclaiming deletes. */
-  private lazy val tombstoneRecord: Option[graft.checkpoint.StageRecord] =
-    new graft.checkpoint.Manifest(cfg.indexDir).get("tombstones")
+  private val tombstoneRecord: Option[graft.checkpoint.StageRecord] =
+    records.get("tombstones")
 
   /** SORTED primitive docId array (8 B/id flat + binary-search probes):
     * at the TombstonesMaxDocs bound this is ~400 MB on the driver and in
@@ -93,8 +111,8 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     tombstoneRecord match {
       case None => Array.emptyLongArray
       case Some(r) =>
-        val ids = spark.read.parquet(s"${cfg.indexDir}/${r.extra("dir")}")
-          .select($"docId").as[Long].collect()
+        val ids = spark.read.schema(IndexSchema.tombstones)
+          .parquet(paths.path(r.extra("dir"))).as[Long].collect()
         require(ids.length <= Searcher.TombstonesMaxDocs,
           s"${ids.length} tombstones exceed the serving bound — compact the index")
         java.util.Arrays.sort(ids)
@@ -134,8 +152,9 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
   private lazy val dfDelta: Map[Int, Long] = tombstoneRecord match {
     case None => Map.empty
     case Some(r) =>
-      spark.read.parquet(s"${cfg.indexDir}/${r.extra("dfDir")}")
-        .select($"termId", $"delta").as[(Int, Long)].collect().toMap
+      spark.read.schema(IndexSchema.dfdelta)
+        .parquet(paths.path(r.extra("dfDir")))
+        .as[(Int, Long)].collect().toMap
   }
 
   /** Corpus statistics of the LIVE (un-tombstoned) documents — what BM25's
@@ -157,8 +176,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * analogue of Lucene's norms file). At cluster scale this is a cached
     * Dataset partitioned by shard; queries reuse it across the session. */
   private lazy val norms: Dataset[(Long, Int)] = {
-    val ds = spark.read.parquet(cfg.docsPath)
-      .select($"docId", $"dl").as[(Long, Int)]
+    val ds = docsDF.select($"docId", $"dl").as[(Long, Int)]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ds.count() // materialize
     cleanups.add(() => { ds.unpersist(); () })
@@ -173,11 +191,10 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     require(stats.numDocs <= Int.MaxValue,
       s"normsLocalArr is Int-indexed; ${stats.numDocs} docs need the cogroup path")
     val arr = new Array[Int](stats.numDocs.toInt)
-    // direct single-job collect: materializing the persisted `norms`
+    // one job, the collect itself: materializing the persisted `norms`
     // Dataset first would cost persist + count + collect (3 jobs) for the
     // same bytes — `norms` stays lazy for the distributed TAAT join path
-    spark.read.parquet(cfg.docsPath)
-      .select($"docId", $"dl").as[(Long, Int)]
+    docsDF.select($"docId", $"dl").as[(Long, Int)]
       .collect().foreach { case (d, dl) => arr(d.toInt) = dl }
     arr
   }
@@ -197,7 +214,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * first takes the distributed path. */
   private lazy val shardRangesBroadcast
       : org.apache.spark.broadcast.Broadcast[Array[(Int, Long, Long)]] = {
-    val ranges = spark.read.parquet(cfg.docsPath)
+    val ranges = docsDF
       .groupBy($"shard").agg(min($"docId"), max($"docId"))
       .as[(Int, Long, Long)].collect().sortBy(_._2)
     val b = spark.sparkContext.broadcast(ranges)
@@ -219,15 +236,12 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
       lexicon: Map[String, (Int, Long, Double, Int)])
 
   private lazy val localServe: Option[LocalServe] = {
-    val nBlocks = new graft.checkpoint.Manifest(cfg.indexDir)
-      .get("postings").map(_.rows).getOrElse(Long.MaxValue)
     if (nBlocks <= localServeMaxBlocks &&
         stats.numDocs <= broadcastNormsMaxDocs) {
-      val blocks = spark.read.parquet(cfg.postingsPath)
+      val blocks = spark.read.schema(IndexSchema.postings).parquet(paths.postings)
         .as[PostingBlockRow].collect()
       val byTerm = blocks.groupBy(_.termId)
-      val lex = spark.read.parquet(cfg.lexiconPath)
-        .select($"term", $"termId", $"df", $"maxTfNorm", $"nBlocks")
+      val lex = lexiconScan
         .as[(String, Int, Long, Double, Int)].collect()
         .map { case (t, id, df, m, nb) => t -> ((id, df, m, nb)) }.toMap
       Some(LocalServe(byTerm, lex))
@@ -236,8 +250,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
 
   /** Lexicon cached once per Searcher (tiny relative to postings). */
   private lazy val lexiconDF = {
-    val df = spark.read.parquet(cfg.lexiconPath)
-      .select($"term", $"termId", $"df", $"maxTfNorm", $"nBlocks")
+    val df = lexiconScan
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count()
     cleanups.add(() => { df.unpersist(); () })
@@ -253,11 +266,10 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
 
   private lazy val lexiconLocal: Option[Map[String, (Int, Long, Double, Int)]] = {
     if (stats.vocabSize <= DriverLexiconMaxTerms)
-      // direct single-job collect (not via lexiconDF): in this regime the
-      // persisted DataFrame would never be read again, so its persist +
+      // one job, the collect itself (not via lexiconDF): in this regime
+      // the persisted DataFrame would never be read again, so its persist +
       // count jobs were pure startup overhead per fresh Searcher
-      Some(spark.read.parquet(cfg.lexiconPath)
-        .select($"term", $"termId", $"df", $"maxTfNorm", $"nBlocks")
+      Some(lexiconScan
         .as[(String, Int, Long, Double, Int)].collect()
         .map { case (t, id, df, m, nb) => t -> ((id, df, m, nb)) }.toMap)
     else None
@@ -302,9 +314,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * FILE-level footer pruning (postingsFilesFor) plus row-group min/max
     * stats bound a term lookup to O(1) files of the ranged layout. */
   private lazy val (postingsDF, postingsCached) = {
-    val df = spark.read.parquet(cfg.postingsPath)
-    val nBlocks = new graft.checkpoint.Manifest(cfg.indexDir)
-      .get("postings").map(_.rows).getOrElse(Long.MaxValue)
+    val df = spark.read.schema(IndexSchema.postings).parquet(paths.postings)
     if (nBlocks <= 1000000L) {
       val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       c.count()
@@ -321,7 +331,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * unranged) or missing stats degrade to [MinValue,MaxValue]: never
     * pruned, still correct. */
   private lazy val postingsFileRanges: Seq[(String, Int, Int)] =
-    termIdFileRanges(cfg.postingsPath)
+    termIdFileRanges(paths.postings)
 
   private def termIdFileRanges(dirPath: String): Seq[(String, Int, Int)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -364,7 +374,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
         val sel = postingsFilesFor(termIds)
         if (sel.isEmpty) return spark.emptyDataset[PostingBlockRow]
         else if (sel.size == postingsFileRanges.size) postingsDF
-        else spark.read.parquet(sel: _*)
+        else spark.read.schema(IndexSchema.postings).parquet(sel: _*)
       }
     base.filter($"termId".isin(termIds.toSeq: _*)).as[PostingBlockRow]
   }
@@ -645,7 +655,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
         // cluster-scale path: norms cogrouped by the docs table's stored
         // shard, keyed like the blocks by the shard's range index
         val index = rangesB.value.iterator.map(_._1).zipWithIndex.toMap
-        val normsByShard = spark.read.parquet(cfg.docsPath)
+        val normsByShard = docsDF
           .select($"shard", $"docId", $"dl").as[(Int, Long, Int)]
           .groupByKey(r => index(r._1))
         blocks.cogroup(normsByShard) { (i, blkIt, normIt) =>
@@ -671,25 +681,24 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
   /** Per-file termId ranges of the positional layout (same footer-driven
     * file-level prune as the postings layout). */
   private lazy val positionsFileRanges: Seq[(String, Int, Int)] =
-    termIdFileRanges(cfg.positionsPath)
+    termIdFileRanges(paths.positions)
 
   private[graft] def positionsFilesFor(termIds: Array[Int]): Seq[String] =
     positionsFileRanges.collect {
       case (p, mn, mx) if termIds.exists(t => t >= mn && t <= mx) => p
     }
 
-  private def posRowsFor(termIds: Array[Int])
-      : Dataset[graft.index.PosPostingRow] = {
-    require(new graft.checkpoint.Manifest(cfg.indexDir)
-        .get("positions").nonEmpty,
+  private def posRowsFor(termIds: Array[Int]): Dataset[PosPostingRow] = {
+    require(records.contains("positions"),
       s"phrase search needs the positional sidecar — run " +
         s"PositionalIndex.build on ${cfg.indexDir}")
     val sel = positionsFilesFor(termIds)
-    if (sel.isEmpty) return spark.emptyDataset[graft.index.PosPostingRow]
-    val base = if (sel.size == positionsFileRanges.size)
-      spark.read.parquet(cfg.positionsPath) else spark.read.parquet(sel: _*)
-    base.filter($"termId".isin(termIds.toSeq: _*))
-      .as[graft.index.PosPostingRow]
+    if (sel.isEmpty) return spark.emptyDataset[PosPostingRow]
+    val files = if (sel.size == positionsFileRanges.size) Seq(paths.positions)
+      else sel
+    spark.read.schema(IndexSchema.positions).parquet(files: _*)
+      .filter($"termId".isin(termIds.toSeq: _*))
+      .as[PosPostingRow]
   }
 
   /** Exact BM25 top-k for an exact PHRASE (a token-adjacent sequence, in
@@ -701,7 +710,8 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     *
     * Requires the positional sidecar ([[graft.index.PositionalIndex]]).
     * Serving: when the phrase terms' total live df fits the gather budget
-    * the rows are collected and intersected driver-side (one job); above
+    * the rows are collected and intersected driver-side (one job: the
+    * positions scan, whose schema is declared, not inferred); above
     * it, candidates shuffle by docId and df/top-k run distributed — the
     * TAAT shape, bounded by the phrase terms' postings size. Both paths
     * evaluate the identical score expression (bit-identical results,
@@ -769,7 +779,7 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * number of violations (0 = pass). */
   def verifyLineage(corpus: Dataset[SourceFile]): Long = {
     val tsB = tombstonesBroadcast
-    val docs = spark.read.parquet(cfg.docsPath)
+    val docs = docsDF
       .select($"docId", $"repo", $"path", $"commit", $"sha")
       // dead docs have no source row any more — they are outside the
       // invariant (their content left the corpus with the delete/update)
@@ -858,7 +868,7 @@ object Searcher {
     * absent, so the phrase cannot occur. Static so executor closures don't
     * capture (and serialize) a Searcher. */
   private[query] def phraseTfOf(slotIds: Array[Int], uniqCount: Int,
-      rs: Array[graft.index.PosPostingRow]): Int = {
+      rs: Array[PosPostingRow]): Int = {
     if (rs.length < uniqCount) return 0
     val byId = new java.util.HashMap[Int, Array[Int]]()
     rs.foreach { r =>
