@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingCodec
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexSchema}
 import graft.model.{PostingBlockRow, SourceFile}
 import graft.query.Searcher
 
@@ -71,24 +71,29 @@ object IndexQueries {
     }
   }
 
-  /** Searcher cached per dir with a (session identity, content fingerprint)
-    * validity key: the Searcher's lazy serving state (localServe postings,
-    * norms, lexicon) is collected once per process instead of once per
-    * query, but a changed dataset or a replaced SparkSession gets a FRESH
-    * Searcher — and the stale one is close()d, releasing its persisted
-    * blocks and broadcasts (the Similarity.cachedAssign discipline). */
+  /** Searcher cached per dir with a (session identity, content fingerprint,
+    * manifest version) validity key: the Searcher's lazy serving state
+    * (localServe postings, norms, lexicon) is collected once per process
+    * instead of once per query, but a changed dataset, a replaced
+    * SparkSession or a new commit to the index (the positional sidecar
+    * [[positionalFor]] adds — a Searcher serves the manifest snapshot it
+    * opened) gets a FRESH Searcher — and the stale one is close()d,
+    * releasing its persisted blocks and broadcasts (the
+    * Similarity.cachedAssign discipline). */
   private case class CachedSearcher(key: String, searcher: Searcher)
   private val searcherCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedSearcher]()
 
   def searcherFor(s: SparkSession, dir: String): Searcher =
     searcherCache.synchronized {
-      val key = s"${System.identityHashCode(s)}:${contentFingerprint(dir)}"
+      val cfg = indexFor(s, dir)
+      val key = s"${System.identityHashCode(s)}:${contentFingerprint(dir)}:" +
+        new graft.checkpoint.Manifest(cfg.indexDir).snapshot().version
       val existing = searcherCache.get(dir)
       if (existing != null && existing.key == key) existing.searcher
       else {
         if (existing != null) existing.searcher.close()
-        val searcher = new Searcher(s, indexFor(s, dir))
+        val searcher = new Searcher(s, cfg)
         searcherCache.put(dir, CachedSearcher(key, searcher))
         searcher
       }
@@ -123,7 +128,7 @@ object IndexQueries {
     val allowed = s.read.parquet(s"$dir/documents.parquet")
       .filter(col("lang") === lang)
       .select(format_string("%09d", col("doc_id")).as("path"))
-      .join(s.read.parquet(cfg.docsPath), "path")
+      .join(s.read.schema(IndexSchema.docs).parquet(cfg.docsPath), "path")
       .select(col("docId"))
     adaptiveTopDf(s, cfg, k)(fetch => searcher.searchWhere(query, fetch, allowed))
   }
@@ -150,7 +155,7 @@ object IndexQueries {
     val cfg = indexFor(s, dir)
     val searcher = searcherFor(s, dir)
     val matches = searcher.scoreAll(query).toDF().select(col("docId"))
-    val docmap = s.read.parquet(cfg.docsPath)
+    val docmap = s.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
       .select(col("docId"), col("path").cast("long").as("doc_id"))
     matches.join(docmap, "docId")
       .join(s.read.parquet(s"$dir/documents.parquet")
@@ -179,7 +184,7 @@ object IndexQueries {
     val allowed = s.read.parquet(s"$dir/documents.parquet")
       .filter(col("lang") === lang)
       .select(format_string("%09d", col("doc_id")).as("path"))
-      .join(s.read.parquet(cfg.docsPath), "path")
+      .join(s.read.schema(IndexSchema.docs).parquet(cfg.docsPath), "path")
       .select(col("docId"))
     adaptiveTopDf(s, cfg, k)(fetch =>
       searcher.searchBoolean(query, fetch, allowed))
@@ -235,7 +240,7 @@ object IndexQueries {
     }
     val scored = s.createDataset(top.toSeq)(
       org.apache.spark.sql.Encoders.product[graft.model.ScoredDoc]).toDF()
-    val docmap = s.read.parquet(cfg.docsPath)
+    val docmap = s.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
       .select(col("docId"), col("path").cast("long").as("doc_id"))
     scored.join(docmap, "docId")
       .select(col("doc_id"), round(col("score"), 4).as("score"))
@@ -281,7 +286,7 @@ object IndexQueries {
     val cfg = indexFor(s, dir)
     val searcher = searcherFor(s, dir)
     val scored = searcher.scoreAll(query).toDF()
-    val docmap = s.read.parquet(cfg.docsPath)
+    val docmap = s.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
       .select(col("docId"), col("path").cast("long").as("doc_id"))
     scored.join(docmap, "docId")
       .select(col("doc_id"), round(col("score"), 4).as("score"))
@@ -359,7 +364,7 @@ object IndexQueries {
     // --- lexicon (df) vs SQL recomputation: top-50 by df
     "q52_index_lexicon" -> ((s, d) => {
       val cfg = indexFor(s, d)
-      s.read.parquet(cfg.lexiconPath)
+      s.read.schema(IndexSchema.lexicon).parquet(cfg.lexiconPath)
         .select(col("term"), col("df"))
         .orderBy(col("df").desc, col("term").asc)
         .limit(50)
@@ -368,7 +373,7 @@ object IndexQueries {
     // --- docs stage: doc length + sha lineage vs SQL
     "q53_index_docstats" -> ((s, d) => {
       val cfg = indexFor(s, d)
-      s.read.parquet(cfg.docsPath)
+      s.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
         .select(col("path").cast("long").as("doc_id"),
           col("dl").cast("long").as("dl"), col("sha"))
         .orderBy(col("doc_id"))
@@ -409,7 +414,7 @@ object IndexQueries {
       val searcher = new Searcher(s, tCfg)
       val scored = searcher
         .scoreAll("data graft_refresh_marker graft_inserted_marker").toDF()
-      val docmap = s.read.parquet(tCfg.docsPath)
+      val docmap = s.read.schema(IndexSchema.docs).parquet(tCfg.docsPath)
         .select(col("docId"), col("path").cast("long").as("doc_id"))
       val out = scored.join(docmap, "docId")
         .select(col("doc_id"), round(col("score"), 4).as("score"))
@@ -564,17 +569,17 @@ object IndexQueries {
     "q54_postings_roundtrip" -> ((s, d) => {
       import s.implicits._
       val cfg = indexFor(s, d)
-      val sTerms = s.read.parquet(cfg.vocabPath)
+      val sTerms = s.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
         .filter(col("term").startsWith("s"))
         .select(col("termId"), col("term"))
-      val blocks = s.read.parquet(cfg.postingsPath)
+      val blocks = s.read.schema(IndexSchema.postings).parquet(cfg.postingsPath)
         .join(broadcast(sTerms), "termId")
         .select(col("term"), col("bytes"))
         .as[(String, Array[Byte])]
       val decoded = blocks.flatMap { case (term, bytes) =>
         PostingCodec.decodeBlock(bytes).map(p => (term, p.docId, p.tf)) }
         .toDF("term", "docId", "tf")
-      val docmap = s.read.parquet(cfg.docsPath)
+      val docmap = s.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
         .select(col("docId"), col("path").cast("long").as("doc_id"))
       decoded.join(docmap, "docId")
         .select(col("term"), col("doc_id"), col("tf").cast("long").as("tf"))

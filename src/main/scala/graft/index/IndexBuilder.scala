@@ -197,11 +197,12 @@ object IndexBuilder {
 
   /** Bumped whenever the on-disk index layout or stage semantics change:
     * part of every stage fingerprint, so resume never reuses output written
-    * by an incompatible builder version. (v7: posting blocks are cut only
-    * at blockSize or at a (termId, salt) group's end, no longer at every
-    * docId shard; v6: one manifest commit per build stage, append and
-    * compaction. Older indexes must be rebuilt.) */
-  val FormatVersion = 7
+    * by an incompatible builder version. (v8: the positional sidecar holds
+    * one row per postings block, not per (term, doc); v7: posting blocks
+    * are cut only at blockSize or at a (termId, salt) group's end, no
+    * longer at every docId shard; v6: one manifest commit per build stage,
+    * append and compaction. Older indexes must be rebuilt.) */
+  val FormatVersion = 8
 
   /** Scale-adaptive partition count (optimization guide §2.2/§6.1): derive
     * the partition count from the DATA size — `ceil(bytes / targetBytes)`,
@@ -846,7 +847,12 @@ object IndexBuilder {
     * with the merged avgdl. The Lucene/terrier segment-merge shape
     * (SURVEY.md §7.4).
     *
-    * Crash safety: the three structures go to fresh `-vN` directories (N =
+    * The positional sidecar, when the index has one, is re-packed into the
+    * new blocks from its old blocks and the old postings
+    * ([[PositionalIndex.repack]]; nothing re-tokenized), so it stays cut
+    * exactly like the postings.
+    *
+    * Crash safety: the rebuilt structures go to fresh `-vN` directories (N =
     * the version the commit creates) and ONE manifest commit publishes
     * them, sets every segment record's `avgDlAtBuild` to the merged avgdl
     * (so the Searcher's ubScale is exactly 1 again) and drops the replaced
@@ -895,10 +901,19 @@ object IndexBuilder {
     val avgDl = st.avgDl.toString
     def restamp(r: StageRecord) = r.copy(extra = r.extra + ("avgDlAtBuild" -> avgDl))
     def moved(r: StageRecord, dir: String) = r.copy(extra = r.extra + ("dir" -> dir))
+    val positions = recs.get("positions").map { pos =>
+      require(pos.extra("segments").toInt == segs.size,
+        s"the positional sidecar at ${cfg.indexDir} covers " +
+          s"${pos.extra("segments")} of ${segs.size} appended segments — " +
+          "PositionalIndex.append the rest before compacting")
+      val dir = s"positions-v$v"
+      moved(pos, dir).copy(rows = PositionalIndex.repack(spark, cfg,
+        cfg.postingsPath, cfg.positionsPath, cfg.path(postingsDir), cfg.path(dir)))
+    }
     val updated = segs.map(restamp) ++ Seq(
       moved(recs("docs"), docsDir),
       moved(restamp(recs("postings")).copy(rows = nb), postingsDir),
-      moved(recs("lexicon"), lexiconDir))
+      moved(recs("lexicon"), lexiconDir)) ++ positions
     manifest.commit(base, recs ++ updated.map(r => r.stage -> r))
     writeMetrics(spark, metricsAcc, cfg)
     spark.catalog.refreshByPath(cfg.indexDir)

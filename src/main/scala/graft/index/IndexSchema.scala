@@ -45,7 +45,7 @@ object IndexSchema {
 
   val lexicon: StructType = of[LexiconEntry]
 
-  val positions: StructType = of[PosPostingRow]
+  val positions: StructType = of[PosBlockRow]
 
   /** Deleted docIds (TableIndexer.refresh). */
   val tombstones: StructType =

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.CodeTokenizer
 import graft.codec.{PostingCodec, VByte}
-import graft.index.{IndexBuilder, IndexConfig, IndexSchema, PosPostingRow}
+import graft.index.{IndexBuilder, IndexConfig, IndexSchema, PosBlockRow,
+  PositionalIndex}
 import graft.model._
 
 /** BM25 top-k query engine over a built graft index.
@@ -688,17 +689,17 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
       case (p, mn, mx) if termIds.exists(t => t >= mn && t <= mx) => p
     }
 
-  private def posRowsFor(termIds: Array[Int]): Dataset[PosPostingRow] = {
+  private def posRowsFor(termIds: Array[Int]): Dataset[PosBlockRow] = {
     require(records.contains("positions"),
       s"phrase search needs the positional sidecar — run " +
         s"PositionalIndex.build on ${cfg.indexDir}")
     val sel = positionsFilesFor(termIds)
-    if (sel.isEmpty) return spark.emptyDataset[PosPostingRow]
+    if (sel.isEmpty) return spark.emptyDataset[PosBlockRow]
     val files = if (sel.size == positionsFileRanges.size) Seq(paths.positions)
       else sel
     spark.read.schema(IndexSchema.positions).parquet(files: _*)
       .filter($"termId".isin(termIds.toSeq: _*))
-      .as[PosPostingRow]
+      .as[PosBlockRow]
   }
 
   /** Exact BM25 top-k for an exact PHRASE (a token-adjacent sequence, in
@@ -708,14 +709,18 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     * exactly the ranking the bag-of-words engine would produce had the
     * phrase been indexed as a term. Tie-break: score DESC, docId ASC.
     *
-    * Requires the positional sidecar ([[graft.index.PositionalIndex]]).
-    * Serving: when the phrase terms' total live df fits the gather budget
-    * the rows are collected and intersected driver-side (one job: the
-    * positions scan, whose schema is declared, not inferred); above
-    * it, candidates shuffle by docId and df/top-k run distributed — the
-    * TAAT shape, bounded by the phrase terms' postings size. Both paths
-    * evaluate the identical score expression (bit-identical results,
-    * PhraseSpec). */
+    * Requires the positional sidecar ([[graft.index.PositionalIndex]]): a
+    * positions row is decoded together with the postings block of the same
+    * (termId, firstDocId), which supplies its docIds and tfs; dl comes from
+    * the norms. Serving: when the phrase terms' total live df fits the
+    * gather budget and the norms are driver-resident, the position rows are
+    * collected and intersected driver-side — one job, the positions scan,
+    * when the postings are served driver-locally (a second collects the
+    * phrase terms' blocks otherwise). Above it, candidates shuffle by docId
+    * and df/top-k run distributed — the TAAT shape, bounded by the phrase
+    * terms' postings size — with dl from the broadcast norms, or joined
+    * from the docs table above the broadcast cap. Every path evaluates the
+    * identical score expression (bit-identical results, PhraseSpec). */
   def searchPhrase(query: String, k: Int): Array[ScoredDoc] = {
     val phrase = CodeTokenizer.tokenize(query, cfg.unicodeFold).toArray
     if (phrase.isEmpty) return Array.empty
@@ -733,16 +738,30 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
       w * (tf / (tf + k1 * (1.0 - b + b * dl / avgDl)))
 
     val totalPostings = uniq.map(t => lex(t)._2).sum
-    if (totalPostings <= phraseGatherMaxPostings) {
+    if (totalPostings <= phraseGatherMaxPostings &&
+        stats.numDocs <= broadcastNormsMaxDocs) {
+      val blocks = localServe match {
+        case Some(ls) =>
+          uniqIds.flatMap(t => ls.byTerm.getOrElse(t, Array.empty[PostingBlockRow]))
+        case None => blocksFor(uniqIds).collect()
+      }
+      val bytesOf =
+        blocks.iterator.map(r => (r.termId, r.firstDocId) -> r.bytes).toMap
       val dead = deadFn()
-      val cands = posRowsFor(uniqIds).collect()
-        .groupBy(_.docId).iterator.flatMap { case (d, rs) =>
-          if (dead(d)) None
-          else {
-            val tf = Searcher.phraseTfOf(slotIds, uniqCount, rs)
-            if (tf > 0) Some((d, tf, rs.head.dl)) else None
-          }
-        }.toArray
+      val byDoc = scala.collection.mutable.HashMap
+        .empty[Long, scala.collection.mutable.ArrayBuffer[(Int, Array[Int])]]
+      posRowsFor(uniqIds).collect().foreach { r =>
+        PositionalIndex.foreachPosting(bytesOf((r.termId, r.firstDocId)),
+            r.posBytes) { (d, ps) =>
+          if (!dead(d)) byDoc.getOrElseUpdate(d,
+            scala.collection.mutable.ArrayBuffer.empty) += ((r.termId, ps))
+        }
+      }
+      val norms = normsLocalArr
+      val cands = byDoc.iterator.flatMap { case (d, rs) =>
+        val tf = Searcher.phraseTfOf(slotIds, uniqCount, rs.toArray)
+        if (tf > 0) Some((d, tf, norms(d.toInt))) else None
+      }.toArray
       if (cands.isEmpty) return Array.empty
       val w = IndexBuilder.idf(n, cands.length) * (k1 + 1.0)
       return cands.iterator
@@ -754,17 +773,35 @@ final class Searcher(spark: SparkSession, cfg: IndexConfig,
     val slotB = spark.sparkContext.broadcast(slotIds)
     val tsB = tombstonesBroadcast
     val uc = uniqCount
-    val cands = posRowsFor(uniqIds)
-      .groupByKey(_.docId)
+    val tfs = posRowsFor(uniqIds)
+      .join(blocksFor(uniqIds).select($"termId", $"firstDocId", $"bytes"),
+        Seq("termId", "firstDocId"))
+      .select($"termId", $"bytes", $"posBytes")
+      .as[(Int, Array[Byte], Array[Byte])]
+      .flatMap { case (t, bytes, posBytes) =>
+        val out = Array.newBuilder[(Long, Int, Array[Int])]
+        PositionalIndex.foreachPosting(bytes, posBytes)((d, ps) =>
+          out += ((d, t, ps)))
+        out.result().iterator
+      }
+      .groupByKey(_._1)
       .mapGroups { (d, it) =>
-        val rs = it.toArray
         val ts = tsB.value
         val tf = if (ts.nonEmpty && Searcher.containsSorted(ts, d)) 0
-          else Searcher.phraseTfOf(slotB.value, uc, rs)
-        (d, tf, if (rs.isEmpty) 0 else rs.head.dl)
+          else Searcher.phraseTfOf(slotB.value, uc,
+            it.map(r => (r._2, r._3)).toArray)
+        (d, tf)
       }
       .filter(_._2 > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cands0: Dataset[(Long, Int, Int)] =
+      if (stats.numDocs <= broadcastNormsMaxDocs) {
+        val nb = normsBroadcast
+        tfs.map { case (d, tf) => (d, tf, nb.value(d.toInt)) }
+      } else tfs.toDF("docId", "tf")
+        .join(docsDF.select($"docId", $"dl"), "docId")
+        .select($"docId", $"tf", $"dl").as[(Long, Int, Int)]
+    val cands =
+      cands0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val df = cands.count()
       if (df == 0) return Array.empty
@@ -863,18 +900,15 @@ object Searcher {
   /** Phrase tf of one document: the number of start positions p with
     * slot j's term occurring at p + j for every j. Two-pointer intersection
     * over the (strictly increasing) per-term position arrays — O(sum of
-    * position-list lengths). `rs` holds this doc's rows for the phrase's
-    * distinct terms; fewer rows than distinct terms means some term is
-    * absent, so the phrase cannot occur. Static so executor closures don't
-    * capture (and serialize) a Searcher. */
+    * position-list lengths). `rs` holds this doc's (termId, positions) for
+    * the phrase's distinct terms; fewer entries than distinct terms means
+    * some term is absent, so the phrase cannot occur. Static so executor
+    * closures don't capture (and serialize) a Searcher. */
   private[query] def phraseTfOf(slotIds: Array[Int], uniqCount: Int,
-      rs: Array[PosPostingRow]): Int = {
+      rs: Array[(Int, Array[Int])]): Int = {
     if (rs.length < uniqCount) return 0
     val byId = new java.util.HashMap[Int, Array[Int]]()
-    rs.foreach { r =>
-      byId.put(r.termId,
-        graft.index.PositionalIndex.decodePositions(r.posBytes, r.tf))
-    }
+    rs.foreach { case (t, ps) => byId.put(t, ps) }
     var starts = byId.get(slotIds(0))
     if (starts == null) return 0
     var j = 1

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.IndexSchema
+
 /** SQL front door over the managed-table surface — entry-point-A parity
   * with the reference's statement session (TrafficCop::ParseQuery,
   * src/traffic_cop/traffic_cop.cpp:248-258: every statement class arrives
@@ -569,7 +571,7 @@ final class GraftSql(spark: SparkSession, val ops: TableOps,
     val (table, _) = ops.searchIndexMeta(name)
     val matches = searcher.scoreAll(query).toDF().select(col("docId"))
     matches
-      .join(spark.read.parquet(ti.cfg.docsPath)
+      .join(spark.read.schema(IndexSchema.docs).parquet(ti.cfg.docsPath)
         .select(col("docId"), col("repo"), col("path"), col("commit")), "docId")
       .join(ops.read(table), Seq("repo", "path", "commit"))
       .groupBy(col(facetCol)).agg(count(lit(1)).as("n"))
@@ -599,7 +601,7 @@ final class GraftSql(spark: SparkSession, val ops: TableOps,
     val (table, _) = ops.searchIndexMeta(name)
     val allowed = ops.read(table).filter(pred)
       .select(col("repo"), col("path"), col("commit"))
-      .join(spark.read.parquet(ti.cfg.docsPath),
+      .join(spark.read.schema(IndexSchema.docs).parquet(ti.cfg.docsPath),
         Seq("repo", "path", "commit"))
       .select(col("docId"))
     // wildcard and boolean forms compose with the filter: the expansion /
@@ -644,7 +646,7 @@ final class GraftSql(spark: SparkSession, val ops: TableOps,
     import sp.implicits._
     val scored = sp.createDataset(top.toSeq).toDF()
     val rows = scored
-      .join(sp.read.parquet(ti.cfg.docsPath)
+      .join(sp.read.schema(IndexSchema.docs).parquet(ti.cfg.docsPath)
         .select(col("docId"), col("repo"), col("path"), col("commit")), "docId")
       .orderBy(col("score").desc, col("docId").asc)
       .select(col("repo"), col("path"), col("commit"), col("score"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checkpoint.Manifest
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, IndexConfig, TableIndexer}
+import graft.index.{IndexBuilder, IndexConfig, PositionalIndex, TableIndexer}
 import graft.model.SourceFile
 import graft.query.{Searcher, SequentialOracle}
 import graft.sources.TableOps
@@ -182,8 +182,13 @@ class CrashSweepSpec extends AnyFunSuite {
   test("crash sweep: IndexBuilder.compact") {
     def op(d: String) = IndexBuilder.compact(spark, cfg(d))
     val (twoSegs, _) = clean(built, "twoSegs") { d =>
+      PositionalIndex.build(spark, base.toDS(), cfg(d), "base")
       IndexBuilder.append(spark, batch.toDS(), cfg(d), "b1")
+      PositionalIndex.append(spark, batch.toDS(), cfg(d), "b1",
+        baseDocId = base.size.toLong)
       IndexBuilder.append(spark, batchB.toDS(), cfg(d), "b2")
+      PositionalIndex.append(spark, batchB.toDS(), cfg(d), "b2",
+        baseDocId = (base.size + batch.size).toLong)
     }
     val (compacted, n) = clean(twoSegs, "compacted")(op)
     assertOracle(cfg(compacted), base ++ batch ++ batchB)

@@ -22,6 +22,20 @@ class EntrySpec extends AnyFunSuite {
       s"unexpected rows-only queries: $rowsOnly")
   }
 
+  test("a phrase query after a ranked query on the same documents serves " +
+      "the positional sidecar built in between") {
+    import spark.implicits._
+    // a fresh directory: its own cached index and Searcher
+    val dir = TestSpark.tmpDir("graft-entry-phrase")
+    (0L until 40L).map(i => (i, "en",
+        if (i % 3 == 0) s"table hash join $i" else s"hash join scan $i table"))
+      .toDF("doc_id", "lang", "text").coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    assert(graft.entry.IndexQueries.bm25(spark, dir, "hash join", 10).count() > 0)
+    assert(graft.entry.IndexQueries.phraseBm25(spark, dir, "table hash", 20)
+      .count() > 0)
+  }
+
   test("every query runs non-empty at sf0.001") {
     val sf = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -94,6 +94,26 @@ class PhraseSpec extends AnyFunSuite {
     dist.close(); gather.close()
   }
 
+  test("distributed phrase path with dl joined from the docs table == " +
+      "gather path == sequential reference") {
+    val gather = new Searcher(spark, cfg)
+    // no gather budget and no broadcast norms: the candidates shuffle by
+    // docId and take dl from a join with the docs table
+    val cogrouped = new Searcher(spark, cfg, phraseGatherMaxPostings = 0L,
+      broadcastNormsMaxDocs = 0L)
+    Seq(phraseFromDoc(5, 3, 2), phraseFromDoc(20, 0, 3), Seq("if", "return"))
+      .foreach { ph =>
+        val q = ph.mkString(" ")
+        val want = refPhrase(ph, 10)
+        assert(want.nonEmpty, s"phrase $ph must occur")
+        assert(gather.searchPhrase(q, 10).map(sd => (sd.docId, sd.score)).toSeq
+          == want, s"gather path, phrase $ph")
+        assert(cogrouped.searchPhrase(q, 10).map(sd => (sd.docId, sd.score))
+          .toSeq == want, s"cogrouped-norms path, phrase $ph")
+      }
+    cogrouped.close(); gather.close()
+  }
+
   test("duplicate-term phrase counts overlapping starts") {
     // build a tiny dedicated corpus where 'xx xx xx' gives 2 starts
     val docs = Seq(
