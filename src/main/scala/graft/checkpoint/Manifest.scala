@@ -28,13 +28,12 @@ final case class Snapshot(version: Long, records: ListMap[String, StageRecord],
   * Crash safety is one discipline for every mutation — a build stage, an
   * append, a refresh, a compaction:
   *   - it first writes only immutable or freshly named files;
-  *   - it then publishes ALL of its records in ONE compare-and-swap
-  *     [[commit]]: `TableIO.createExclusive` claims `commits/v{N+1}` with
-  *     the full manifest bytes, then `atomicWrite` mirrors them to
-  *     `manifest.json`. Exactly one writer wins each version; the loser
-  *     gets a [[Manifest.ConcurrentCommitException]], so no record is ever
-  *     dropped (the `TableOps.claimVersion` discipline). [[snapshot]] rolls
-  *     forward past a lost mirror write;
+  *   - it then publishes ALL of its records in ONE [[commit]] on the
+  *     [[CommitLog]] that tables and the catalog also commit through: the
+  *     claim `commits/v{N+1}` holds the full manifest bytes, and
+  *     `manifest.json` mirrors them. Exactly one writer wins each version;
+  *     the loser gets a [[ConcurrentCommitException]], so no record is ever
+  *     dropped. [[snapshot]] rolls forward past a lost mirror write;
   *   - a crash before the claim leaves files that a retry overwrites; a
   *     retry after it is a no-op, matched by fingerprint.
   * The reference makes a transaction durable the same way: one commit
@@ -51,17 +50,17 @@ final case class Snapshot(version: Long, records: ListMap[String, StageRecord],
 final class Manifest(val indexDir: String) {
   private val io = Manifest.io(indexDir)
   private val mirror = s"$indexDir/manifest.json"
-  private def claim(v: Long): String = s"$indexDir/commits/v$v"
+  private val log = new CommitLog(io, s"index $indexDir",
+    v => s"$indexDir/commits/v$v", mirror, (_, bytes) => bytes)
 
   /** The latest committed version. */
   def snapshot(): Snapshot = {
     val m = if (io.exists(mirror)) Manifest.parse(indexDir, io.readBytes(mirror))
       else Snapshot(0L, ListMap.empty)
-    var v = m.version
-    while (io.exists(claim(v + 1))) v += 1
+    val v = log.rollForward(m.version)
     if (v == m.version) m
     else {
-      val bytes = io.readBytes(claim(v))
+      val bytes = io.readBytes(log.claimPath(v))
       // emptied by a newer commit since the scan above: look again
       if (bytes.isEmpty) snapshot() else Manifest.parse(indexDir, bytes)
     }
@@ -77,20 +76,16 @@ final class Manifest(val indexDir: String) {
 
   /** Publish `records` — the complete record set — as the version after
     * `base`, then delete every directory `base` names and `records` no
-    * longer do. Throws [[Manifest.ConcurrentCommitException]] when another
+    * longer do. Throws [[ConcurrentCommitException]] when another
     * writer committed that version first. */
   def commit(base: Snapshot, records: ListMap[String, StageRecord]): Snapshot = {
     // the dirs base names, plus those base's own commit failed to delete
     val old = Manifest.dirs(base.records) ++
       base.drop.filter(d => io.exists(s"$indexDir/$d"))
     val next = Snapshot(base.version + 1, records, Manifest.obsolete(old, records))
-    val bytes = Manifest.serialize(next)
-    if (!io.createExclusive(claim(next.version), bytes))
-      throw new Manifest.ConcurrentCommitException(
-        s"index $indexDir: version ${next.version} was committed by another " +
-          "writer — reread the index and retry the operation")
-    io.atomicWrite(mirror, bytes)
-    if (base.version > 0) io.atomicWrite(claim(base.version), Array.emptyByteArray)
+    log.commit(next.version, Manifest.serialize(next))
+    if (base.version > 0)
+      io.atomicWrite(log.claimPath(base.version), Array.emptyByteArray)
     next.drop.foreach(d => io.deleteRecursively(s"$indexDir/$d"))
     next
   }
@@ -103,8 +98,6 @@ final class Manifest(val indexDir: String) {
 }
 
 object Manifest {
-  final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
-
   /** Manifest layout version: 2 = commit log + named directories. */
   private val Layout = 2
   private val mapper = new ObjectMapper()

@@ -47,14 +47,6 @@ final case class IndexConfig(
     heavyDfThreshold: Long = 100000L,
     maxHeavyTerms: Int = 4096,
     buildPartitions: Int = 0,
-    // Pack the postings shuffle into delta+VByte runs (~5 B/posting on the
-    // wire vs a ~48 B Tungsten row). Default ON for the target regime —
-    // network-shuffle clusters, where the ~6x byte cut dominates. Turn OFF
-    // for small-core/local-disk layouts (local NVMe shuffle is not
-    // byte-bound, so the pack/merge CPU (~15-25% of the postings stage) is
-    // pure overhead there). Output is bit-identical either way (pinned by
-    // IndexSpec).
-    packRuns: Boolean = true,
     // Unicode tokenizer fold (CodeTokenizer's opt-in mode) for non-ASCII
     // corpora: Unicode letters become token characters after a ROOT-locale
     // full lowercase — identical on pure-ASCII input, where the default
@@ -530,137 +522,106 @@ object IndexBuilder {
       .join(vocabIds, "term")
       .select($"termId", saltExpr.as("salt"), $"docId", $"tf", $"dl")
 
-    // ---- packed-run shuffle ------------------------------------------------
+    // ---- packed-run shuffle: ONE range-placed shuffle, final layout ----
     // The postings shuffle is the build's dominant data movement. Each map
     // partition locally sorts its postings ONCE and packs them into
     // delta+VByte runs of ≤ RunPackCap postings — the shuffle moves ~4-6
     // bytes per posting instead of a ~48-byte row, and the reduce side
-    // k-way-merges run streams instead of sorting rows. cfg.packRuns =
-    // false skips the pack (raw-row shuffle + reduce-side sort) for
-    // local-disk-bound shuffles — see the IndexConfig field doc. Both paths
-    // emit bit-identical blocks (IndexSpec pins it).
+    // k-way-merges run streams instead of sorting rows. 4× tasks per core:
+    // finer skew smoothing — the same sizing rule a cluster deployment
+    // uses; heavy terms are salted so one reducer sees at most
+    // ~df/numShards postings.
     //
-    // 4× tasks per core in both paths: finer skew smoothing — the same
-    // sizing rule a cluster deployment uses; heavy terms are salted so one
-    // reducer sees at most ~df/numShards postings.
-    if (!cfg.packRuns) {
-      val blocks = salted
-        .repartition(encodeParts, $"termId", $"salt")
-        .sortWithinPartitions($"termId", $"salt", $"docId")
-        .as[(Int, Int, Long, Int, Int)]
+    // Range placement on (termId, salt) keeps every reduce group whole
+    // while making each output file a narrow contiguous termId slice — the
+    // file-level IndexScan layout (postingsFilesFor) with no second pass
+    // over the data (a second pass is parallelism-independent IO that
+    // drags the N→4N scaling ratio). blockIdx resets per (termId, salt)
+    // group, so the blocks do not depend on placement. The packed runs are
+    // persisted (executor block-manager cache), so repartitionByRange's
+    // sampling job materializes the explode+join+pack lineage exactly once
+    // and the shuffle re-reads the cache; a single-partition range exchange
+    // runs no sampling job, so the lineage executes exactly once in the
+    // write — persisting it would only add cache churn.
+    val runs0 = salted
+      .sortWithinPartitions($"termId", $"salt", $"docId")
+      .as[(Int, Int, Long, Int, Int)]
+      .mapPartitions(it => packRuns(it, RunPackCap))
+      .toDF("termId", "salt", "firstDocId", "n", "bytes")
+    val runs = if (encodeParts == 1) runs0
+      else runs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      runs
+        .repartitionByRange(encodeParts, $"termId", $"salt")
+        .sortWithinPartitions($"termId", $"salt", $"firstDocId")
+        .as[(Int, Int, Long, Int, Array[Byte])]
         .mapPartitions { it =>
-          encodeSortedPostings(it, nDocs, nShards, blockSize, bm25, avgDlV,
-            metricsAcc)
-        }
-      // ---- final layout: RANGE-partitioned on termId ------------------------
-      // The encode shuffle hash-partitions on (termId, salt), so every
-      // output file would span the whole termId range. One extra pass
-      // rewrites the blocks range-partitioned and sorted on (termId, shard,
-      // blockIdx) — from the written parquet, because repartitionByRange's
-      // sampling of the un-materialized lineage would re-run the whole
-      // explode+join map side.
-      val unranged = s"$outPath.unranged"
-      blocks.write.mode("overwrite").parquet(unranged)
-      spark.read.schema(IndexSchema.postings).parquet(unranged)
-        .repartitionByRange(encodeParts, $"termId", $"shard", $"blockIdx")
-        .sortWithinPartitions($"termId", $"shard", $"blockIdx")
-        .write.mode("overwrite").parquet(outPath)
-      Manifest.io(unranged).deleteRecursively(unranged)
-    } else {
-      // ---- packed path: ONE range-placed shuffle, final layout directly ---
-      // The packed runs are persisted (executor block-manager cache), so
-      // repartitionByRange's sampling job materializes the explode+join+pack
-      // lineage exactly once and the shuffle re-reads the cache. Range
-      // placement on (termId, salt) keeps every reduce group whole while
-      // making each output file a narrow contiguous termId slice — the
-      // file-level IndexScan layout (postingsFilesFor) with no second pass
-      // over the data (a second pass is parallelism-independent IO that
-      // drags the N→4N scaling ratio). blockIdx resets per (termId, salt)
-      // group — placement-independent, so the raw-row path above emits
-      // bit-identical rows (IndexSpec pins it).
-      // a single-partition range exchange runs no sampling job, so the
-      // packed-run lineage executes exactly once in the write — persisting
-      // it would only add cache churn
-      val runs0 = salted
-        .sortWithinPartitions($"termId", $"salt", $"docId")
-        .as[(Int, Int, Long, Int, Int)]
-        .mapPartitions(it => packRuns(it, RunPackCap))
-        .toDF("termId", "salt", "firstDocId", "n", "bytes")
-      val runs = if (encodeParts == 1) runs0
-        else runs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        runs
-          .repartitionByRange(encodeParts, $"termId", $"salt")
-          .sortWithinPartitions($"termId", $"salt", $"firstDocId")
-          .as[(Int, Int, Long, Int, Array[Byte])]
-          .mapPartitions { it =>
-            val pid = TaskContext.getPartitionId()
-            val pt0 = System.nanoTime()
-            var rows = 0L; var bytesOut = 0L
-            // Consume one (termId, salt) group of runs at a time: heap-merge
-            // the group's run cursors (decoded lazily, byte-cursor state
-            // only) and emit full blocks, the group's last one short. A
-            // block's stored shard is its firstDocId's (a heavy term's salt).
-            // Group memory = the group's PACKED bytes (~5 B/posting), bounded
-            // by salting.
-            new Iterator[PostingBlockRow] {
-              private val base = it.buffered
-              private var lastTerm = Int.MinValue
-              private var lastSalt = Int.MinValue
-              private var blockIdx = 0
-              private var termId = 0
-              private var heap: scala.collection.mutable.PriorityQueue[RunCursor] = _
-              private var metricsEmitted = false
+          val pid = TaskContext.getPartitionId()
+          val pt0 = System.nanoTime()
+          var rows = 0L; var bytesOut = 0L
+          // Consume one (termId, salt) group of runs at a time: heap-merge
+          // the group's run cursors (decoded lazily, byte-cursor state
+          // only) and emit full blocks, the group's last one short. A
+          // block's stored shard is its firstDocId's (a heavy term's salt).
+          // Group memory = the group's PACKED bytes (~5 B/posting), bounded
+          // by salting.
+          new Iterator[PostingBlockRow] {
+            private val base = it.buffered
+            private var lastTerm = Int.MinValue
+            private var lastSalt = Int.MinValue
+            private var blockIdx = 0
+            private var termId = 0
+            private var heap: scala.collection.mutable.PriorityQueue[RunCursor] = _
+            private var metricsEmitted = false
 
-              private def groupPending: Boolean = heap != null && heap.nonEmpty
+            private def groupPending: Boolean = heap != null && heap.nonEmpty
 
-              def hasNext: Boolean = {
-                val h = groupPending || base.hasNext
-                if (!h && !metricsEmitted) {
-                  metricsAcc.add(PartitionMetric("postings", pid, rows, rows,
-                    bytesOut, (System.nanoTime() - pt0) / 1000000))
-                  metricsEmitted = true
-                }
-                h
+            def hasNext: Boolean = {
+              val h = groupPending || base.hasNext
+              if (!h && !metricsEmitted) {
+                metricsAcc.add(PartitionMetric("postings", pid, rows, rows,
+                  bytesOut, (System.nanoTime() - pt0) / 1000000))
+                metricsEmitted = true
               }
+              h
+            }
 
-              private def loadGroup(): Unit = {
-                termId = base.head._1
-                val salt = base.head._2
-                if (termId != lastTerm || salt != lastSalt) {
-                  blockIdx = 0; lastTerm = termId; lastSalt = salt
-                }
-                heap = scala.collection.mutable.PriorityQueue.empty[RunCursor](
-                  Ordering.by[RunCursor, Long](_.docId).reverse)
-                while (base.hasNext && base.head._1 == termId &&
-                    base.head._2 == salt) {
-                  val c = new RunCursor(base.next()._5)
-                  if (c.alive) heap.enqueue(c)
-                }
+            private def loadGroup(): Unit = {
+              termId = base.head._1
+              val salt = base.head._2
+              if (termId != lastTerm || salt != lastSalt) {
+                blockIdx = 0; lastTerm = termId; lastSalt = salt
               }
-
-              def next(): PostingBlockRow = {
-                if (!groupPending) loadGroup()
-                val shard = shardOf(heap.head.docId, nDocs, nShards)
-                val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-                while (heap.nonEmpty && buf.length < blockSize) {
-                  val c = heap.dequeue()
-                  buf += ((c.docId, c.tf, c.dl)); rows += 1
-                  c.advance()
-                  if (c.alive) heap.enqueue(c)
-                }
-                val b = PostingCodec.buildBlocks(termId, shard, buf.toSeq,
-                  (tf, dl) => tfNorm(tf, dl, avgDlV, bm25), blockSize)
-                  .head.copy(blockIdx = blockIdx)
-                blockIdx += 1
-                bytesOut += b.bytes.length
-                b
+              heap = scala.collection.mutable.PriorityQueue.empty[RunCursor](
+                Ordering.by[RunCursor, Long](_.docId).reverse)
+              while (base.hasNext && base.head._1 == termId &&
+                  base.head._2 == salt) {
+                val c = new RunCursor(base.next()._5)
+                if (c.alive) heap.enqueue(c)
               }
             }
+
+            def next(): PostingBlockRow = {
+              if (!groupPending) loadGroup()
+              val shard = shardOf(heap.head.docId, nDocs, nShards)
+              val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
+              while (heap.nonEmpty && buf.length < blockSize) {
+                val c = heap.dequeue()
+                buf += ((c.docId, c.tf, c.dl)); rows += 1
+                c.advance()
+                if (c.alive) heap.enqueue(c)
+              }
+              val b = PostingCodec.buildBlocks(termId, shard, buf.toSeq,
+                (tf, dl) => tfNorm(tf, dl, avgDlV, bm25), blockSize)
+                .head.copy(blockIdx = blockIdx)
+              blockIdx += 1
+              bytesOut += b.bytes.length
+              b
+            }
           }
-          .write.mode("overwrite").parquet(outPath)
-      } finally { if (encodeParts > 1) runs.unpersist() }
-    }
+        }
+        .write.mode("overwrite").parquet(outPath)
+    } finally { if (encodeParts > 1) runs.unpersist() }
     if (encodeParts == 1) parquetRowCount(spark, outPath)
     else spark.read.schema(IndexSchema.postings).parquet(outPath).count()
   }
@@ -675,63 +636,6 @@ object IndexBuilder {
     * shuffled instead of risking a driver/executor-memory-sized
     * broadcast. */
   final val LexDeltaBroadcastCap = 1000000L
-
-  /** The packRuns=false reduce side: consume raw posting rows, already
-    * shuffle-sorted by (termId, salt, docId), and stream-emit blocks cut at
-    * blockSize or the group's end — O(blockSize) memory, identical block
-    * boundaries and contents to the packed path's k-way merge (the merged
-    * packed stream is the same docId-sorted sequence). */
-  private def encodeSortedPostings(it0: Iterator[(Int, Int, Long, Int, Int)],
-      nDocs: Long, nShards: Int, blockSize: Int, bm25: BM25Params,
-      avgDl: Double,
-      metricsAcc: CollectionAccumulator[PartitionMetric])
-      : Iterator[PostingBlockRow] = {
-    val pid = TaskContext.getPartitionId()
-    val pt0 = System.nanoTime()
-    val base = it0.buffered
-    new Iterator[PostingBlockRow] {
-      private var lastTerm = Int.MinValue
-      private var lastSalt = Int.MinValue
-      private var blockIdx = 0
-      private var rows = 0L
-      private var bytesOut = 0L
-      private var metricsEmitted = false
-
-      def hasNext: Boolean = {
-        val h = base.hasNext
-        if (!h && !metricsEmitted) {
-          metricsAcc.add(PartitionMetric("postings", pid, rows, rows,
-            bytesOut, (System.nanoTime() - pt0) / 1000000))
-          metricsEmitted = true
-        }
-        h
-      }
-
-      def next(): PostingBlockRow = {
-        val (termId, salt, first, _, _) = base.head
-        // blockIdx resets per (termId, salt) GROUP — placement-independent,
-        // so the packed path emits identical rows under any partitioning
-        if (termId != lastTerm || salt != lastSalt) {
-          blockIdx = 0; lastTerm = termId; lastSalt = salt
-        }
-        val shard = shardOf(first, nDocs, nShards)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-        var continue = true
-        while (continue && base.hasNext && buf.length < blockSize) {
-          val (t, s, d, tf, dl) = base.head
-          if (t == termId && s == salt) {
-            buf += ((d, tf, dl)); rows += 1; base.next()
-          } else continue = false
-        }
-        val b = PostingCodec.buildBlocks(termId, shard, buf.toSeq,
-          (tf, dl) => tfNorm(tf, dl, avgDl, bm25), blockSize)
-          .head.copy(blockIdx = blockIdx)
-        blockIdx += 1
-        bytesOut += b.bytes.length
-        b
-      }
-    }
-  }
 
   /** Map-side run packing for the postings shuffle: consumes a partition
     * locally sorted by (termId, salt, docId) and emits

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.immutable.ListMap
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.checkpoint.{CommitLog, ConcurrentCommitException}
 import graft.io.TableIO
 
 /** Catalog-level snapshots: MULTI-TABLE atomic transactions over TableOps
@@ -12,32 +13,31 @@ import graft.io.TableIO
   * unit).
   *
   * Model (the Iceberg/Nessie multi-table-commit design): a CATALOG version
-  * is a JSON map tableName → tableVersion, committed with the same
-  * claim-file OCC + atomic pointer move as table manifests. A multi-table
-  * transaction stages every table's work through the existing per-table
-  * Transaction machinery, then commits with a REDO-LOG protocol:
+  * is a JSON map tableName → tableVersion, committed on the same
+  * [[graft.checkpoint.CommitLog]] as table manifests (`cat-vN.json` is the
+  * claim, `current` its mirror). A multi-table transaction stages every
+  * table's work through the per-table Transaction machinery, then commits
+  * with the smallest extension of that log:
   *
-  *   1. write a durable INTENT record carrying the transaction id AND the
-  *      full manifest content each table will publish (redo content, not
-  *      just version numbers);
-  *   2. CLAIM every table's target version, all-or-nothing, with the txn id
-  *      as the claim token — once the claims are held no other writer can
-  *      commit those versions, so the transaction can no longer lose;
-  *      a claim conflict here aborts cleanly (own claims released, intent
-  *      deleted, nothing published anywhere);
-  *   3. publish every table's manifest (conflict-free under the claims);
-  *   4. flip the catalog pointer — retried past concurrent register()
-  *      flips, merging per-entry with max() so a mapping never regresses;
+  *   1. write an INTENT record: the transaction id and the version it will
+  *      claim in each table;
+  *   2. CLAIM every table's version with its staged manifest, marked
+  *      pending with the txn id — all-or-nothing: a conflict releases the
+  *      claims already taken, deletes the intent and rethrows, and nothing
+  *      is visible anywhere. Readers and roll-forward stop at a pending
+  *      version, and a single-table writer that meets one fails at once;
+  *   3. PUBLISH every claim (drop the pending mark; the manifest keeps the
+  *      txn id);
+  *   4. flip the catalog — retried past concurrent register() flips,
+  *      merging per-entry with max() so a mapping never regresses;
   *   5. delete the intent.
   *
-  * A crash at ANY point leaves a state `recover()` resolves exactly: before
-  * step 2 completes → roll BACK (release own claims, drop the intent);
-  * after step 2 → roll FORWARD from the intent's redo content (publish the
-  * missing manifests, flip, drop the intent). Identity is verified
-  * everywhere — claims carry the txn id, published manifests carry it in
-  * their props — so recovery can never mistake a foreign writer's commit
-  * at the same version number for its own (and never flips a catalog onto
-  * another transaction's content).
+  * The pending claims hold the redo content, so a crash at ANY point leaves
+  * a state `recover()` resolves exactly: if every intended version is
+  * claimed by this txn, roll FORWARD (publish, flip, drop the intent);
+  * otherwise roll BACK (delete only the pending claims carrying this txn id,
+  * drop the intent). A foreign writer's commit at an intended version
+  * carries no such id, so recovery never adopts it.
   *
   * Declared visibility boundary (not an accident): per-table commits are
   * individually durable, so a reader going DIRECTLY to a table (plain
@@ -68,27 +68,10 @@ final class Catalog(spark: SparkSession, root: String, io: TableIO) {
   private val mapper = new ObjectMapper()
   private def catDir: String = s"$root/_catalog"
   private def catPath(v: Long): String = s"$catDir/cat-v$v.json"
-  private def claimPath(v: Long): String = s"$catDir/commits/v$v"
-  private def marker: String = s"$catDir/current"
+  private val log = new CommitLog(io, s"catalog $root", catPath, s"$catDir/current")
   private def intentPath(id: String): String = s"$catDir/intents/$id.json"
 
-  /** Test-only crash injection: naming a failpoint makes tx() die there
-    * with a SimulatedCrash (no cleanup runs — exactly a process kill), so
-    * the recovery tests exercise the REAL protocol states instead of
-    * fabricated files. Production value: "". */
-  private[graft] var failpoint: String = ""
-  private def crash(p: String): Unit =
-    if (failpoint == p) throw new Catalog.SimulatedCrash(p)
-
-  /** Same claim+roll-forward discipline as TableOps.currentVersion. */
-  def currentCatalogVersion: Long = {
-    var v =
-      if (io.exists(marker))
-        new String(io.readBytes(marker), "UTF-8").trim.toLong
-      else -1L
-    while (io.exists(claimPath(v + 1)) && io.exists(catPath(v + 1))) v += 1
-    v
-  }
+  def currentCatalogVersion: Long = log.latest()
 
   private def readCat(v: Long): ListMap[String, Long] = {
     val p = catPath(v)
@@ -108,15 +91,8 @@ final class Catalog(spark: SparkSession, root: String, io: TableIO) {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node)
   }
 
-  /** One-writer-per-version catalog commit (claim → file → pointer). */
-  private def commitCat(v: Long, m: Map[String, Long]): Unit = {
-    if (!io.createExclusive(claimPath(v), Array.emptyByteArray))
-      throw new TableOps.ConcurrentCommitException(
-        s"catalog version $v was claimed by another writer — " +
-          "reread the catalog and retry the transaction")
-    io.atomicWrite(catPath(v), serializeCat(v, m))
-    io.atomicWrite(marker, v.toString.getBytes("UTF-8"))
-  }
+  private def commitCat(v: Long, m: Map[String, Long]): Unit =
+    log.commit(v, serializeCat(v, m))
 
   /** Snapshot a table's CURRENT version into the catalog (CREATE/REGISTER).
     * Returns the new catalog version. */
@@ -199,7 +175,7 @@ final class Catalog(spark: SparkSession, root: String, io: TableIO) {
     * and throws ConcurrentCommitException: rerun the whole transaction
     * against the new state. Once every claim is held the transaction can
     * no longer fail short of a crash, and a crash from there is rolled
-    * FORWARD by recover() from the intent's redo content. */
+    * FORWARD by recover() from the pending claims. */
   def tx(body: MultiTx => Unit): Long = {
     val t = beginMulti()
     body(t)
@@ -216,56 +192,36 @@ final class Catalog(spark: SparkSession, root: String, io: TableIO) {
     new MultiTx()
   }
 
-  /** Commit a [[beginMulti]] handle: intent → claims → publishes → one
-    * catalog flip (the [[tx]] protocol, steps 1-5). */
+  /** Commit a [[beginMulti]] handle: intent → pending claims → publishes →
+    * one catalog flip (the [[tx]] protocol, steps 1-5). */
   def commitMulti(t: MultiTx): Long = {
-    val cv0 = currentCatalogVersion
     require(t.txs.nonEmpty, "transaction touched no tables")
     val txnId = java.util.UUID.randomUUID.toString
-    // stamp the txn identity into every staged manifest BEFORE serializing:
-    // recovery verifies it to tell our durable commit at version v apart
-    // from a foreign writer's commit at the same version number
-    t.txs.foreach { case (_, tr) => tr.setProp("txn.id", txnId) }
-    val entries: Seq[(String, (Long, Array[Byte]))] = t.txs.toSeq.map {
-      case (name, tr) => name -> (tr.stagedVersion, tables.stagedManifestBytes(tr))
-    }
-    // 1. durable intent = the redo record (id + per-table manifest content)
+    val versions = t.txs.map { case (name, tr) => name -> tr.stagedVersion }
     val node = mapper.createObjectNode()
     node.put("txnId", txnId)
-    node.put("catalogBase", cv0)
     val tn = node.putObject("tables")
-    entries.foreach { case (name, (v, bytes)) =>
-      val e = tn.putObject(name)
-      e.put("version", v)
-      e.set[com.fasterxml.jackson.databind.JsonNode]("manifest", mapper.readTree(bytes))
-    }
+    versions.foreach { case (name, v) => tn.put(name, v) }
     io.atomicWrite(intentPath(txnId),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    crash("intent-written")
-    // 2. claim phase — all-or-nothing: conflict => clean abort
-    var claimed = List.empty[(String, Long)]
-    try entries.foreach { case (name, (v, _)) =>
-      tables.claimVersion(name, v, txnId)
-      claimed ::= (name, v)
-      crash("mid-claims")
-    } catch { case e: TableOps.ConcurrentCommitException =>
-      claimed.foreach { case (n, v) => tables.releaseClaim(n, v, txnId) }
-      io.deleteIfExists(intentPath(txnId))
+    try t.txs.foreach { case (name, tr) => tables.claimStaged(name, tr, txnId) }
+    catch { case e: ConcurrentCommitException =>
+      rollBack(txnId, versions)
       throw e
     }
-    crash("claims-done")
-    // 3. publish phase — conflict-free under the held claims
-    entries.foreach { case (name, (v, bytes)) =>
-      tables.publishManifestBytes(name, v, bytes)
-      crash("mid-publish")
-    }
-    crash("before-flip")
-    // 4. the atomic cut
-    val next = flipCatalog(entries.map { case (n, (v, _)) => n -> v }.toMap)
-    crash("before-intent-delete")
-    // 5. done — the intent has served its purpose
+    rollForward(txnId, versions)
+  }
+
+  private def rollForward(txnId: String, versions: ListMap[String, Long]): Long = {
+    versions.foreach { case (t, v) => tables.log(t).publish(v, txnId) }
+    val cv = flipCatalog(versions)
     io.deleteIfExists(intentPath(txnId))
-    next
+    cv
+  }
+
+  private def rollBack(txnId: String, versions: ListMap[String, Long]): Unit = {
+    versions.foreach { case (t, v) => tables.log(t).release(v, txnId) }
+    io.deleteIfExists(intentPath(txnId))
   }
 
   /** Advance the catalog to cover `intended`, retrying past concurrent
@@ -283,15 +239,15 @@ final class Catalog(spark: SparkSession, root: String, io: TableIO) {
         k -> math.max(cur.getOrElse(k, -1L), v)
       }
       try { commitCat(cv + 1, merged); return cv + 1 }
-      catch { case _: TableOps.ConcurrentCommitException => () /* retry */ }
+      catch { case _: ConcurrentCommitException => () /* retry */ }
     }
     -1L // unreachable
   }
 
   /** Catalog-history expiration (the catalog twin of TableOps.expire):
-    * drop every catalog snapshot older than the newest `keepVersions`
-    * (file + claim). Table manifests and data are NOT touched — run
-    * TableOps.expire per table afterwards, keeping at least the table
+    * drop every catalog snapshot older than the newest `keepVersions`.
+    * Table manifests and data are NOT touched — run TableOps.expire per
+    * table afterwards, keeping at least the table
     * versions the kept catalog window still maps (see the lifecycle
     * caveat above). Returns the expired-snapshot count. */
   def expireCatalog(keepVersions: Int): Int = {
@@ -302,76 +258,31 @@ final class Catalog(spark: SparkSession, root: String, io: TableIO) {
     var n = 0
     (0L until keepFrom).foreach { v =>
       if (io.deleteIfExists(catPath(v))) n += 1
-      io.deleteIfExists(claimPath(v))
     }
     n
   }
 
   /** Resolve every surviving intent record (crash recovery; run with no
-    * live writer that could own them — see the class doc):
-    *
-    *   - every entry is OURS and at least claimed (claim token or published
-    *     manifest props carry the intent's txn id) → roll FORWARD: publish
-    *     the missing manifests from the intent's redo content, flip the
-    *     catalog (max-merge), drop the intent;
-    *   - anything else (an entry was never claimed, or a foreign writer
-    *     holds/committed it — the crash happened before the claim phase
-    *     completed, so nothing of ours is durable anywhere) → roll BACK:
-    *     release only claims that carry our txn id, drop the intent.
-    *
-    * Idempotent: a crash during recovery re-resolves to the same outcome.
-    * Returns (rolledForward, rolledBack). */
+    * live writer that could own them — see the class doc): roll FORWARD
+    * when this txn claimed every version it intended (pending or already
+    * published), else roll BACK. Idempotent: a crash during recovery
+    * re-resolves to the same outcome. Returns (rolledForward, rolledBack). */
   def recover(): (Int, Int) = {
-    val dir = s"$catDir/intents"
     var forward = 0
     var back = 0
-    io.list(dir).filter(_.endsWith(".json")).foreach { name =>
-      val p = s"$dir/$name"
-      val n = mapper.readTree(io.readBytes(p))
-      val txnId = if (n.has("txnId")) n.get("txnId").asText() else ""
-      var entries = ListMap.empty[String, (Long, Array[Byte])]
-      val it = n.get("tables").fieldNames()
-      while (it.hasNext) {
-        val k = it.next()
-        val e = n.get("tables").get(k)
-        entries += k -> (e.get("version").asLong(),
-          mapper.writerWithDefaultPrettyPrinter()
-            .writeValueAsBytes(e.get("manifest")))
-      }
-      def durableOurs(table: String, v: Long): Boolean =
-        tables.manifestExistsAt(table, v) &&
-          tables.versionProps(table, v).get("txn.id").contains(txnId)
-      def claimedOurs(table: String, v: Long): Boolean =
-        !tables.manifestExistsAt(table, v) &&
-          tables.claimToken(table, v).contains(txnId)
-      val allOurs = txnId.nonEmpty && entries.forall { case (t, (v, _)) =>
-        durableOurs(t, v) || claimedOurs(t, v)
-      }
-      if (allOurs) {
-        entries.foreach { case (t, (v, bytes)) =>
-          if (!durableOurs(t, v)) tables.publishManifestBytes(t, v, bytes)
-        }
-        flipCatalog(entries.map { case (t, (v, _)) => t -> v }.toMap)
-        io.deleteIfExists(p)
-        forward += 1
+    io.list(s"$catDir/intents").filter(_.endsWith(".json")).foreach { name =>
+      val n = mapper.readTree(io.readBytes(s"$catDir/intents/$name"))
+      val txnId = n.get("txnId").asText()
+      var versions = ListMap.empty[String, Long]
+      n.get("tables").fieldNames().forEachRemaining(k =>
+        versions += k -> n.get("tables").get(k).asLong())
+      if (versions.forall { case (t, v) =>
+          tables.log(t).holder(v).exists(_._1 == txnId) }) {
+        rollForward(txnId, versions); forward += 1
       } else {
-        // releaseClaim is identity-guarded: a foreign claim or a claim with
-        // a published manifest is never touched; an empty txnId releases
-        // nothing (it would alias plain single-op claims' empty token)
-        if (txnId.nonEmpty) entries.foreach { case (t, (v, _)) =>
-          tables.releaseClaim(t, v, txnId)
-        }
-        io.deleteIfExists(p)
-        back += 1
+        rollBack(txnId, versions); back += 1
       }
     }
     (forward, back)
   }
-}
-
-object Catalog {
-  /** Thrown only by the test failpoints — simulates a process kill at an
-    * exact protocol step (no cleanup runs, like a real crash). */
-  final class SimulatedCrash(point: String)
-    extends RuntimeException(s"simulated crash at $point")
 }

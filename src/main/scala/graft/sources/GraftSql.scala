@@ -62,7 +62,7 @@ import graft.index.IndexSchema
   * session (constructed with a [[Catalog]]) additionally supports
   * `BEGIN CATALOG`: DML may touch ANY registered table, reads follow the
   * per-table staged state, and COMMIT runs the full multi-table protocol
-  * (intent → claims → publishes → ONE catalog flip) — the reference's
+  * (intent → pending claims → publishes → ONE catalog flip) — the reference's
   * one-timestamp-spans-every-table transaction model, SQL-reachable.
   * Without a catalog, a plain BEGIN stays bound to one table and says so
   * loudly on a second.
@@ -343,7 +343,7 @@ final class GraftSql(spark: SparkSession, val ops: TableOps,
       val cur = ops.currentVersion(table)
       require(cur >= 0, s"table $table does not exist")
       // versions that survived expire(): a manifest on disk = readable
-      (0L to cur).filter(v => ops.manifestExistsAt(table, v))
+      (0L to cur).filter(v => ops.log(table).holder(v).isDefined)
         .map(v => (v, ops.dataFiles(table, v).size.toLong))
         .toDF("version", "data_files")
     }

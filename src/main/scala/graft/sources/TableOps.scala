@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.checkpoint.CommitLog
 import graft.io.TableIO
 
 /** Snapshot-style managed parquet tables with FILE-LEVEL commits: create /
@@ -17,7 +18,7 @@ import graft.io.TableIO
   * DESIGN.md:21-76): terrier mutates MVCC version chains under WAL; the
   * Spark-native equivalent is the Iceberg commit model — a table version is
   * a MANIFEST listing immutable parquet files, and every mutation writes
-  * only the files it must, then atomically repoints a `current` marker:
+  * only the files it must, then commits one new manifest:
   *
   *   - insert appends the new rows' files and lists old + new (no rewrite);
   *   - delete/update rewrite ONLY the files containing matches — candidate
@@ -31,11 +32,19 @@ import graft.io.TableIO
   *     layout (migration-on-write).
   *
   * At 100 TB this is the difference between an INSERT costing O(new rows)
-  * and O(table). Readers resolve `current` at read time, so concurrent
-  * readers never observe a torn table; old manifests stay readable (time
-  * travel). Crash-safety: data files are written before their manifest and
-  * the manifest before the pointer move, so a crash at any point leaves at
-  * worst orphaned data dirs, never a torn or inconsistent table.
+  * and O(table).
+  *
+  * Commit: a table is a [[graft.checkpoint.CommitLog]], the same one the
+  * catalog and indexes commit through. Version N is committed the moment
+  * `manifest-vN.json` is claimed with its full bytes (create-exclusive, one
+  * writer wins; the loser gets a `ConcurrentCommitException` and reruns
+  * against the new version). `current` then mirrors N, and readers roll
+  * forward past a mirror a crash left behind, so concurrent readers never
+  * observe a torn table; old manifests stay readable (time travel). Data
+  * files are written before the claim, so a crash at any point leaves at
+  * worst orphaned data dirs (vacuum's business), never an in-doubt
+  * version. Tables written before this layout also hold empty
+  * `commits/vN` claim files; they are ignored.
   *
   * Storage: every path operation goes through the [[graft.io.TableIO]] seam
   * (SURVEY.md §7.4) — java.nio on a bare local root, the Hadoop
@@ -84,95 +93,15 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
   private def manifestPath(table: String, v: Long): String =
     s"$root/$table/manifest-v$v.json"
 
-  def currentVersion(table: String): Long = {
-    val m = currentMarker(table)
-    var v =
-      if (io.exists(m)) new String(io.readBytes(m), "UTF-8").trim.toLong
-      else -1L
-    // roll forward past a crash between claim+manifest and the pointer
-    // move: claim + manifest together mean the commit is durable — the
-    // pointer is only a cache of "highest committed"
-    while (io.exists(claimPath(table, v + 1)) &&
-        io.exists(manifestPath(table, v + 1))) v += 1
-    v
-  }
+  /** A table's commit log: version N is committed by claiming
+    * `manifest-vN.json` with its full bytes; `current` mirrors N. */
+  private[sources] def log(table: String): CommitLog =
+    new CommitLog(io, s"table $table", manifestPath(table, _), currentMarker(table))
 
-  private def claimPath(table: String, v: Long): String =
-    s"$root/$table/commits/v$v"
+  def currentVersion(table: String): Long = log(table).latest()
 
-  /** Optimistic-concurrency claim (the Iceberg catalog-CAS analogue):
-    * exactly ONE writer wins each version number via an atomic create-new
-    * claim file; the loser gets a ConcurrentCommitException and must
-    * recompute against the new current version (its orphaned uuid data dirs
-    * are harmless). The claim stores `token` (a transaction identity) so
-    * crash recovery can tell WHOSE claim it is — see Catalog.recover. */
-  private[sources] def claimVersion(table: String, v: Long,
-      token: String = ""): Unit = {
-    val claim = claimPath(table, v)
-    if (!io.createExclusive(claim, token.getBytes("UTF-8"))) {
-      // The claim may belong to (a) a writer that already committed, (b) a
-      // LIVE writer between claim and manifest, or (c) a crashed writer.
-      // (b) and (c) are indistinguishable from a single observation, so
-      // re-check with backoff before reporting: a live winner lands its
-      // manifest within the wait, and we must never instruct the operator
-      // to delete a claim a live writer still holds (that would let two
-      // writers claim the same version — a silently lost update).
-      var waitMs = 20L
-      var waited = 0L
-      while (!io.exists(manifestPath(table, v)) && waited < 1000L) {
-        Thread.sleep(waitMs); waited += waitMs; waitMs *= 2
-      }
-      if (io.exists(manifestPath(table, v)))
-        throw new TableOps.ConcurrentCommitException(
-          s"table $table: version $v was committed by another writer — " +
-            "reread the table and retry the operation")
-      else {
-        val ageMs = System.currentTimeMillis - io.mtimeMs(claim)
-        throw new TableOps.ConcurrentCommitException(
-          s"table $table: version $v has a claim with no manifest after " +
-            s"${waited} ms of re-checking (claim age ${ageMs} ms) — POSSIBLY " +
-            "an in-flight writer mid-commit. Verify no writer is active " +
-            s"(or that the claim is older than the longest plausible " +
-            s"commit) before removing $claim to recover")
-      }
-    }
-  }
-
-  /** The token a claim was created with ("" for plain single-op commits);
-    * None if no claim exists. */
-  private[sources] def claimToken(table: String, v: Long): Option[String] = {
-    val c = claimPath(table, v)
-    if (io.exists(c)) Some(new String(io.readBytes(c), "UTF-8")) else None
-  }
-
-  /** Release a claim we hold (crash-recovery rollback of a multi-table
-    * transaction that never published this version's manifest). Guarded by
-    * token identity so a foreign writer's claim is never touched. */
-  private[sources] def releaseClaim(table: String, v: Long, token: String): Unit =
-    if (claimToken(table, v).contains(token) &&
-        !io.exists(manifestPath(table, v)))
-      io.deleteIfExists(claimPath(table, v))
-
-  private[sources] def manifestExistsAt(table: String, v: Long): Boolean =
-    io.exists(manifestPath(table, v))
-
-  /** The publish half of a commit: manifest, then pointer. Only call while
-    * holding the version's claim. */
-  private[sources] def finishCommit(table: String, v: Long,
-      m: VersionManifest): Unit = {
-    io.atomicWrite(manifestPath(table, v), serializeManifest(v, m))
-    io.atomicWrite(currentMarker(table), v.toString.getBytes("UTF-8"))
-  }
-
-  /** Claim, then manifest, then pointer — a crash after the claim+manifest
-    * is rolled forward by currentVersion(); a crash between claim and
-    * manifest leaves an in-doubt claim that subsequent commits surface with
-    * a recovery instruction rather than silently losing either write. */
-  private def commitVersion(table: String, v: Long, m: VersionManifest,
-      token: String = ""): Unit = {
-    claimVersion(table, v, token)
-    finishCommit(table, v, m)
-  }
+  private def commitVersion(table: String, v: Long, m: VersionManifest): Unit =
+    log(table).commit(v, serializeManifest(v, m))
 
   private def serializeManifest(v: Long, m: VersionManifest): Array[Byte] = {
     // merge groups with identical fills AND write schema so the manifest
@@ -221,27 +150,6 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
     }
     mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(rootNode)
   }
-
-  /** Serialized manifest a staged transaction would publish — the catalog's
-    * multi-table intent record embeds these bytes so recovery can ROLL
-    * FORWARD an interrupted commit (redo content, not just version ids). */
-  private[sources] def stagedManifestBytes(t: Transaction): Array[Byte] = {
-    require(t.work.groups.nonEmpty, "transaction would leave the table with " +
-      "no files (delete of every row is expressed as create of the empty state)")
-    serializeManifest(t.next, t.work)
-  }
-
-  /** Publish pre-serialized manifest bytes (catalog crash recovery — the
-    * caller must hold the version's claim). */
-  private[sources] def publishManifestBytes(table: String, v: Long,
-      bytes: Array[Byte]): Unit = {
-    io.atomicWrite(manifestPath(table, v), bytes)
-    io.atomicWrite(currentMarker(table), v.toString.getBytes("UTF-8"))
-  }
-
-  /** A committed version's props (empty map when absent). */
-  private[sources] def versionProps(table: String, v: Long): Map[String, String] =
-    readManifest(table, v).props
 
   private def readManifest(table: String, v: Long): VersionManifest = {
     val p = manifestPath(table, v)
@@ -687,7 +595,7 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
       .sorted
   }
 
-  /** DROP TABLE: remove the table's whole directory — manifests, claims,
+  /** DROP TABLE: remove the table's whole directory — manifests, pointer,
     * stats, data, staging. Irreversible (time travel included); views over
     * the table are left dangling and fail on read with "does not exist",
     * the standard late-binding-view behavior. */
@@ -1048,11 +956,6 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
       * catalog's multi-table intent record). */
     private[sources] def stagedVersion: Long = next
 
-    /** Stamp commit-carried metadata (e.g. the catalog transaction id used
-      * by crash recovery to verify WHOSE commit landed at a version). */
-    private[sources] def setProp(k: String, v: String): Unit =
-      work = work.copy(props = work.props + (k -> v))
-
     def insert(rows: DataFrame): Unit =
       work = applyInsert(table, next, work, rows)
 
@@ -1126,12 +1029,20 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
 
   /** Publish a staged transaction as one OCC version (the commit half of
     * tx()); returns the committed version. */
-  private[sources] def commitStaged(table: String, t: Transaction,
-      token: String = ""): Long = {
+  private[sources] def commitStaged(table: String, t: Transaction): Long = {
+    commitVersion(table, t.next, staged(table, t))
+    t.next
+  }
+
+  /** Claim a staged transaction's version for multi-table transaction
+    * `txn` without publishing it (see [[CommitLog.claimPending]]). */
+  private[sources] def claimStaged(table: String, t: Transaction, txn: String): Unit =
+    log(table).claimPending(t.next, serializeManifest(t.next, staged(table, t)), txn)
+
+  private def staged(table: String, t: Transaction): VersionManifest = {
     require(t.work.groups.nonEmpty, s"transaction would leave $table with " +
       "no files (delete of every row is expressed as create of the empty state)")
-    commitVersion(table, t.next, t.work, token)
-    t.next
+    t.work
   }
 
   /** MERGE INTO target USING source ON target.key = source.key
@@ -1490,7 +1401,7 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
   /** Snapshot expiration — the lifecycle half of the commit model (the
     * reference GCs version chains in garbage_collector.cpp; Iceberg's
     * expire_snapshots): drop every version older than the newest
-    * `keepVersions`, delete their manifests / claims / stats, then delete
+    * `keepVersions`, delete their manifests and stats, then delete
     * the data files those EXPIRED manifests referenced and no kept manifest
     * still does. Time travel inside the kept window stays exact (files are
     * refcounted across manifests, so a file shared with a kept version
@@ -1518,7 +1429,6 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
     var expired = 0
     (0L until keepFrom).foreach { v =>
       if (io.deleteIfExists(manifestPath(table, v))) expired += 1
-      io.deleteIfExists(claimPath(table, v))
       io.deleteIfExists(s"$root/$table/stats-v$v.json")
     }
     var deleted = 0
@@ -1789,11 +1699,6 @@ final class TableOps(spark: SparkSession, root: String, val io: TableIO) {
 }
 
 object TableOps {
-  /** Thrown when another writer committed the version this operation tried
-    * to claim (write-write conflict under optimistic concurrency). */
-  final class ConcurrentCommitException(msg: String)
-    extends RuntimeException(msg)
-
   /** Thrown by Transaction.rollback() — unwinds tx() without committing. */
   final class TransactionAborted(table: String)
     extends RuntimeException(s"transaction on $table rolled back")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.sources.{Catalog, TableOps}
+import graft.checkpoint.ConcurrentCommitException
+import graft.sources.Catalog
 
 /** TPC-C-shaped multi-table OLTP workload over [[Catalog.tx]] — the
   * transactional benchmark the reference ships as its integration anchor
@@ -96,7 +97,7 @@ final class Tpcc(spark: SparkSession, val cat: Catalog,
     var attempts = 0
     while (true) {
       try return f
-      catch { case _: TableOps.ConcurrentCommitException =>
+      catch { case _: ConcurrentCommitException =>
         attempts += 1
         retries.incrementAndGet()
         require(attempts <= 50, "transaction retried 50 times — livelock?")

@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.checkpoint.ConcurrentCommitException
+import graft.io.LocalIO
 import graft.sources.{Catalog, TableOps}
 
 /** Multi-table atomic transactions through the catalog-level snapshot
@@ -72,22 +74,27 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   /** A two-table catalog plus the tx body used by every crash test. */
-  private def crashFixture(tag: String): Catalog = {
-    val cat = fresh(tag)
+  private def crashFixture(tag: String): (Catalog, String) = {
+    val root = TestSpark.tmpDir(s"graft-catalog-$tag")
+    val cat = new Catalog(spark, root)
     cat.tables.create("a", Seq((1L, 1.0)).toDF("id", "v"))
     cat.tables.create("b", Seq((1L, 1.0)).toDF("id", "v"))
     cat.register("a"); cat.register("b")
-    cat
+    (cat, root)
   }
 
-  private def crashAt(cat: Catalog, point: String): Unit = {
-    cat.failpoint = point
-    try intercept[Catalog.SimulatedCrash] {
-      cat.tx { t =>
+  /** Run the crash tests' transaction on the catalog at `root`, crashing
+    * at its first storage operation `op` on a path under `root/prefix`. */
+  private def crashAt(root: String, op: String, prefix: String): Unit = {
+    var hit = false
+    val (_, crashed) = FaultInjection.run(root, (_, o, path) =>
+      !hit && o == op && path.startsWith(s"$root/$prefix") && { hit = true; true }) {
+      new Catalog(spark, root, FaultInjection.wrap(LocalIO)).tx { t =>
         t.on("a").update($"id" === 1L, "v", lit(2.0))
         t.on("b").update($"id" === 1L, "v", lit(2.0))
       }
-    } finally cat.failpoint = ""
+    }
+    assert(crashed)
   }
 
   private def bothRead(cat: Catalog): (Double, Double) =
@@ -95,9 +102,9 @@ class CatalogSpec extends AnyFunSuite {
       cat.read("b").select("v").as[Double].head())
 
   test("crash after publish, before the flip: recover() rolls FORWARD") {
-    val cat = crashFixture("crash-before-flip")
+    val (cat, root) = crashFixture("crash-before-flip")
     val cv = cat.currentCatalogVersion
-    crashAt(cat, "before-flip")
+    crashAt(root, "createExclusive", "_catalog/cat-v")
     // the catalog is CONSISTENT at the old snapshot (both tables old)
     assert(cat.currentCatalogVersion == cv)
     assert(bothRead(cat) == ((1.0, 1.0)))
@@ -107,8 +114,8 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("crash mid-publish (one manifest landed): recover() completes the other from redo content") {
-    val cat = crashFixture("crash-mid-publish")
-    crashAt(cat, "mid-publish") // a published, b only claimed
+    val (cat, root) = crashFixture("crash-mid-publish")
+    crashAt(root, "atomicWrite", "b/manifest-v") // a published, b only claimed
     assert(bothRead(cat) == ((1.0, 1.0)))
     assert(cat.recover() == ((1, 0)))
     assert(bothRead(cat) == ((2.0, 2.0)))
@@ -117,8 +124,8 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("crash mid-claims (no manifest published): recover() rolls BACK and frees the claims") {
-    val cat = crashFixture("crash-mid-claims")
-    crashAt(cat, "mid-claims") // a claimed, b not
+    val (cat, root) = crashFixture("crash-mid-claims")
+    crashAt(root, "createExclusive", "b/manifest-v") // a claimed, b not
     assert(cat.recover() == ((0, 1)))
     assert(bothRead(cat) == ((1.0, 1.0)))
     // the released claim doesn't block new writers on either table
@@ -129,9 +136,9 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("crash after the flip, before intent delete: recover() just drops the intent") {
-    val cat = crashFixture("crash-post-flip")
+    val (cat, root) = crashFixture("crash-post-flip")
     val cv = cat.currentCatalogVersion
-    crashAt(cat, "before-intent-delete")
+    crashAt(root, "deleteIfExists", "_catalog/intents/")
     assert(cat.currentCatalogVersion == cv + 1)
     assert(bothRead(cat) == ((2.0, 2.0)))
     assert(cat.recover() == ((1, 0))) // already covered — no second flip
@@ -140,8 +147,8 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("foreign commit at the intended version: recover() never adopts another writer's content") {
-    val cat = crashFixture("crash-foreign")
-    crashAt(cat, "intent-written") // intent durable, NOTHING claimed
+    val (cat, root) = crashFixture("crash-foreign")
+    crashAt(root, "createExclusive", "a/manifest-v") // intent durable, NOTHING claimed
     // an unrelated writer now takes the very version numbers the dead
     // transaction intended — recover must not flip the catalog onto it
     cat.tables.insert("a", Seq((7L, 7.0)).toDF("id", "v"))
@@ -194,7 +201,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.tables.create("b", Seq((1L, 1.0)).toDF("id", "v"))
     cat.register("a"); cat.register("b")
     val cv = cat.currentCatalogVersion
-    intercept[TableOps.ConcurrentCommitException] {
+    intercept[ConcurrentCommitException] {
       cat.tx { t =>
         t.on("a").insert(Seq((2L, 2.0)).toDF("id", "v"))
         t.on("b").insert(Seq((2L, 2.0)).toDF("id", "v"))

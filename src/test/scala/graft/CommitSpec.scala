@@ -8,7 +8,7 @@ import scala.util.Try
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.checkpoint.{Manifest, StageRecord}
+import graft.checkpoint.{ConcurrentCommitException, Manifest, StageRecord}
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig, PositionalIndex, TableIndexer}
 import graft.sources.TableOps
@@ -43,7 +43,7 @@ class CommitSpec extends AnyFunSuite {
       assert(winners.size == 1, s"round $round: winners $winners")
       results.foreach { case (_, r) =>
         r.failed.foreach(e =>
-          assert(e.isInstanceOf[Manifest.ConcurrentCommitException], e.toString))
+          assert(e.isInstanceOf[ConcurrentCommitException], e.toString))
       }
       val w = winners.head
       val after = m.snapshot()
@@ -64,7 +64,7 @@ class CommitSpec extends AnyFunSuite {
     assert(crashed)
     val v2 = m.snapshot()
     assert(v2.version == 2 && v2.records.keySet == Set("one", "two"))
-    intercept[Manifest.ConcurrentCommitException] {
+    intercept[ConcurrentCommitException] {
       m.commit(v1, ListMap("three" -> rec("three")))
     }
     assert(m.commit(rec("three")).records.keySet == Set("one", "two", "three"))

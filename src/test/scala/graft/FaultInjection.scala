@@ -6,14 +6,15 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.checkpoint.Manifest
 import graft.io.TableIO
 
-/** Fault injection at the index layer's storage seam: while [[run]] is
-  * active for `root`, every mutating [[TableIO]] operation under `root` is
-  * counted, and the one `fail` selects throws
-  * [[FaultInjection.InjectedFault]] before it touches storage — the crash
-  * state a process killed at that operation leaves. Reads are not failed:
-  * they change nothing on disk, so a crash at a read leaves the same files
-  * as a crash at the next mutating operation. Runs on distinct roots may
-  * overlap. */
+/** Fault injection at the storage seam: while [[run]] is active for
+  * `root`, every mutating [[TableIO]] operation under `root` is counted,
+  * and the one `fail` selects throws [[FaultInjection.InjectedFault]]
+  * before it touches storage — the crash state a process killed at that
+  * operation leaves. Reads are not failed: they change nothing on disk, so
+  * a crash at a read leaves the same files as a crash at the next mutating
+  * operation. Runs on distinct roots may overlap. The index layer's storage
+  * is wrapped while [[run]] is active; a `TableOps` or `Catalog` takes a
+  * [[wrap]]ped `TableIO`. */
 object FaultInjection {
   final class InjectedFault(op: String, path: String)
     extends RuntimeException(s"injected fault: $op $path")
@@ -36,6 +37,9 @@ object FaultInjection {
       catch { case _: InjectedFault => (n.get, true) }
     } finally active.remove(s"$root/")
   }
+
+  /** `io` with its mutating operations counted and failed under [[run]]. */
+  def wrap(io: TableIO): TableIO = new Faulty(io)
 
   private final class Faulty(io: TableIO) extends TableIO {
     private def mutate[T](op: String, path: String)(f: => T): T = {

@@ -139,29 +139,6 @@ class IndexSpec extends AnyFunSuite {
     assert(crossing > 0, "no block crosses a shard range")
   }
 
-  test("packRuns=false (raw-row shuffle) builds a bit-identical index") {
-    // the per-deployment toggle: packed runs for network-shuffle clusters,
-    // raw rows for local-disk layouts — SAME blocks either way
-    val dirOff = TestSpark.tmpDir("graft-index-nopack")
-    val cfgOff = cfg(dirOff).copy(packRuns = false)
-    IndexBuilder.build(spark, corpusDS, cfgOff)
-    def blocksOf(dir: String) = spark.read.parquet(cfg(dir).postingsPath)
-      .select($"termId", $"shard", $"blockIdx", $"count", $"sumTf",
-        $"maxTfNorm", $"firstDocId", $"lastDocId", md5($"bytes").as("b"))
-    val on = blocksOf(indexDir)
-    val off = blocksOf(dirOff)
-    assert(on.count() == off.count())
-    assert(on.except(off).isEmpty && off.except(on).isEmpty,
-      "packed and raw-row builds emitted different blocks")
-    // and identical ranked results through the full serving path
-    val sOff = new Searcher(spark, cfgOff)
-    refQueries.take(6).foreach { q =>
-      val a = searcher.searchWAND(q, 10).toSeq.map(sd => (sd.docId, sd.score))
-      val b = sOff.searchWAND(q, 10).toSeq.map(sd => (sd.docId, sd.score))
-      assert(a == b, s"pack on/off rank divergence for '$q'")
-    }
-  }
-
   test("salting bounds every reduce group's size (the numShards sizing rule)") {
     // a reduce group in the postings shuffle is one (termId, salt); for a
     // salted heavy term salt == docId shard, so per-(termId, shard) posting

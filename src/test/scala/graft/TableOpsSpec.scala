@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.checkpoint.ConcurrentCommitException
 import graft.sources.TableOps
 
 /** DML parity surface (reference Insert/Update/Delete, SURVEY.md §2.1) via
@@ -158,34 +159,65 @@ class TableOpsSpec extends AnyFunSuite {
     val root = TestSpark.tmpDir("graft-tables-occ")
     val ops = new TableOps(spark, root)
     ops.create("t", Seq((1L, 1.0)).toDF("id", "v"))
-    // another writer claims version 1 and commits it (claim + manifest):
-    // simulate with a second TableOps instance racing ahead
+    // another writer commits version 1 (claims its manifest): simulate
+    // with a second TableOps instance racing ahead
     val other = new TableOps(spark, root)
     other.insert("t", Seq((2L, 2.0)).toDF("id", "v"))
     assert(ops.currentVersion("t") == 1)
     // a writer that computed against the stale base and tries to commit the
-    // same version number must FAIL, not overwrite — here we force the
-    // collision by pre-claiming the next version like an in-flight writer
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "t", "commits"))
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(root, "t", "commits", "v2"))
-    val e = intercept[graft.sources.TableOps.ConcurrentCommitException] {
-      ops.insert("t", Seq((3L, 3.0)).toDF("id", "v"))
+    // same version number must FAIL, not overwrite
+    intercept[ConcurrentCommitException] {
+      ops.tx("t") { tx =>
+        tx.insert(Seq((3L, 3.0)).toDF("id", "v"))
+        other.insert("t", Seq((4L, 4.0)).toDF("id", "v"))
+      }
     }
-    assert(e.getMessage.contains("claim"))
-    // recovery: remove the in-doubt claim, retry succeeds
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(root, "t", "commits", "v2"))
-    ops.insert("t", Seq((3L, 3.0)).toDF("id", "v"))
     assert(ops.read("t").count() == 3)
+    // a version claimed by an unpublished multi-table transaction: the
+    // reader stops before it, a writer fails at once and names it
+    val v3 = java.nio.file.Paths.get(root, "t", "manifest-v3.json")
+    java.nio.file.Files.write(v3, new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "t", "manifest-v2.json")), "UTF-8")
+      .replaceFirst("\\{", "{\"pending\":\"txn-1\",").getBytes("UTF-8"))
+    assert(ops.currentVersion("t") == 2)
+    val e = intercept[ConcurrentCommitException] {
+      ops.insert("t", Seq((5L, 5.0)).toDF("id", "v"))
+    }
+    assert(e.getMessage.contains("txn-1") && e.getMessage.contains("Catalog.recover()"))
+    java.nio.file.Files.delete(v3)
+    ops.insert("t", Seq((5L, 5.0)).toDF("id", "v"))
+    assert(ops.read("t").count() == 4)
 
-    // crash between claim+manifest and pointer move: pointer lags, but the
+    // crash between the claim and the pointer move: pointer lags, but the
     // commit is durable — currentVersion rolls forward
     val marker = java.nio.file.Paths.get(root, "t", "current")
     java.nio.file.Files.write(marker, "1".getBytes("UTF-8"))
-    assert(ops.currentVersion("t") == 2, "roll-forward failed")
-    assert(ops.read("t").count() == 3)
+    assert(ops.currentVersion("t") == 3, "roll-forward failed")
+    assert(ops.read("t").count() == 4)
+  }
+
+  test("a table in the older claim-file layout stays readable and writable") {
+    // that layout committed version N as an empty `commits/vN` claim, then
+    // `manifest-vN.json`, then `current`; the manifests are the same bytes
+    val root = TestSpark.tmpDir("graft-tables-oldlayout")
+    val ops = new TableOps(spark, root)
+    ops.create("t", Seq((1L, 1.0)).toDF("id", "v"))
+    ops.insert("t", Seq((2L, 2.0)).toDF("id", "v"))
+    ops.update("t", $"id" === 1L, "v", lit(10.0))
+    val commits = java.nio.file.Paths.get(root, "t", "commits")
+    java.nio.file.Files.createDirectories(commits)
+    (0 to 2).foreach(v => java.nio.file.Files.createFile(commits.resolve(s"v$v")))
+    val old = new TableOps(spark, root)
+    assert(old.currentVersion("t") == 2)
+    assert(old.read("t").as[(Long, Double)].collect().toMap ==
+      Map(1L -> 10.0, 2L -> 2.0))
+    assert(old.readVersion("t", 1).as[(Long, Double)].collect().toMap ==
+      Map(1L -> 1.0, 2L -> 2.0))
+    assert(old.insert("t", Seq((3L, 3.0)).toDF("id", "v")) == 3)
+    assert(old.read("t").count() == 3)
+    assert(old.expire("t", 2)._1 == 2)
+    assert(old.readVersion("t", 2).count() == 2 && old.read("t").count() == 3)
+    intercept[IllegalArgumentException](old.readVersion("t", 1))
   }
 
   test("expire drops old versions + their files; the kept window stays exact") {
@@ -332,7 +364,7 @@ class TableOpsSpec extends AnyFunSuite {
     val root = TestSpark.tmpDir("graft-tables-txocc")
     val ops = new TableOps(spark, root)
     ops.create("t", Seq((1L, 1.0)).toDF("id", "v"))
-    intercept[TableOps.ConcurrentCommitException] {
+    intercept[ConcurrentCommitException] {
       ops.tx("t") { tx =>
         tx.insert(Seq((2L, 2.0)).toDF("id", "v"))
         // another writer commits the version this tx is targeting
