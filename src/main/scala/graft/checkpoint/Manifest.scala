@@ -42,7 +42,9 @@ final case class Snapshot(version: Long, records: ListMap[String, StageRecord],
   *
   * A commit deletes the directories its base named and the new version no
   * longer does; it records them, and the next commit carries over any
-  * still on disk, which finishes a deletion a crash interrupted. A
+  * still on disk (a dir it names again excepted), which finishes a
+  * deletion a crash interrupted; [[finishDrop]] is the same rule for a
+  * retry that finds its work committed and so commits nothing. A
   * superseded claim keeps its file (it still locks its version number)
   * but not its bytes, so the log costs one manifest plus an empty file per
   * version on disk.
@@ -89,6 +91,12 @@ final class Manifest(val indexDir: String) {
     next.drop.foreach(d => io.deleteRecursively(s"$indexDir/$d"))
     next
   }
+
+  /** Delete what the latest commit dropped and a crash left on disk — the
+    * retry-side half of the carry-over in [[commit]]: a retry that finds
+    * its work committed commits nothing, so no next commit would. */
+  def finishDrop(): Unit = snapshot().drop.map(d => s"$indexDir/$d")
+    .filter(io.exists).foreach(io.deleteRecursively)
 
   /** Commit `recs` on top of the latest version, keeping its other records. */
   def commit(recs: StageRecord*): Snapshot = {

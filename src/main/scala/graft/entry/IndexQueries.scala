@@ -569,7 +569,7 @@ object IndexQueries {
     "q54_postings_roundtrip" -> ((s, d) => {
       import s.implicits._
       val cfg = indexFor(s, d)
-      val sTerms = s.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
+      val sTerms = s.read.schema(IndexSchema.lexicon).parquet(cfg.lexiconPath)
         .filter(col("term").startsWith("s"))
         .select(col("termId"), col("term"))
       val blocks = s.read.schema(IndexSchema.postings).parquet(cfg.postingsPath)

@@ -66,10 +66,12 @@ final case class IndexConfig(
     encodeTargetBytes: Long = 6L * 1024 * 1024) {
   // Each structure's directory as the latest committed manifest names it,
   // so every reader sees the committed state. Each call reads the
-  // manifest: a reader of several structures takes one `paths`.
-  def keymapPath: String = paths().keymap
-  def forwardPath: String = paths().forward
-  def vocabPath: String = paths().vocab
+  // manifest: a reader of several structures takes one `paths`. The
+  // keymap, forward and vocab are build scratch: the lexicon commit
+  // deletes them, so only the build reads them.
+  private[index] def keymapPath: String = paths().keymap
+  private[index] def forwardPath: String = paths().forward
+  private[index] def vocabPath: String = paths().vocab
   def docsPath: String = paths().docs
   def postingsPath: String = paths().postings
   def lexiconPath: String = paths().lexicon
@@ -93,9 +95,9 @@ final case class IndexConfig(
   * names them; a structure not committed yet gets its default name. */
 final class IndexPaths private[index] (indexDir: String,
     records: ListMap[String, StageRecord]) extends Serializable {
-  def keymap: String = path(dir("keymap"))
-  def forward: String = path(dir("forward"))
-  def vocab: String = path(dir("postings", "vocabDir", "vocab"))
+  private[index] def keymap: String = path(dir("keymap"))
+  private[index] def forward: String = path(dir("forward"))
+  private[index] def vocab: String = path(dir("postings", "vocabDir", "vocab"))
   def docs: String = path(dir("docs"))
   def postings: String = path(dir("postings"))
   def lexicon: String = path(dir("lexicon"))
@@ -142,7 +144,9 @@ final case class PartitionMetric(
     rows: Long,
     tokens: Long,
     bytesOut: Long,
-    wallMs: Long)
+    wallMs: Long,
+    // packed runs the partition's k-way merges consumed (postings stage)
+    fanIn: Long = 0L)
 
 /** Distributed inverted-index builder.
   *
@@ -165,18 +169,25 @@ final case class PartitionMetric(
   *                 range exchange of the data is needed at all).
   *   2. docs     — pure projection of forward (terms/tfs columns pruned at
   *                 the parquet reader): per-doc metadata + BM25 norms.
-  *   3. postings — explode forward into (term, docId, tf, dl); assign dense
-  *                 termIds distributively (same offset-rank trick); detect
-  *                 heavy terms (df > threshold) with a map-side-combined
-  *                 count over the pruned terms column; locally sort each
-  *                 map partition by (termId, salt, docId) — salt = docId
-  *                 shard for heavy terms, 0 otherwise — and pack
-  *                 delta+VByte runs (~5 B/posting); shuffle the PACKED
-  *                 runs on (termId, salt); k-way-merge run cursors
-  *                 reduce-side and stream-encode delta+VByte blocks with
-  *                 block-max metadata.
+  *   3. postings — assign dense termIds distributively into the vocab
+  *                 (same offset-rank trick, df from a map-side-combined
+  *                 count over the pruned terms column, which also detects
+  *                 heavy terms, df > threshold); explode forward into
+  *                 (termId, docId, tf, dl) through a join on the vocab;
+  *                 locally sort each map partition by (termId, salt,
+  *                 docId) — salt = docId shard for heavy terms, 0
+  *                 otherwise — and pack delta+VByte runs (~5 B/posting);
+  *                 shuffle the PACKED runs on (termId, salt);
+  *                 k-way-merge run cursors reduce-side and stream-encode
+  *                 delta+VByte blocks with block-max metadata.
   *   4. lexicon  — per-term stats (df, cf, nBlocks, maxTfNorm) aggregated
-  *                 from block metadata.
+  *                 from block metadata, keyed (term, termId). Its commit
+  *                 stops naming the keymap, forward and vocab, which
+  *                 deletes them: they are the build's scratch, the
+  *                 checkpoints between its stages, and no reader needs
+  *                 them once the lexicon holds the term -> termId map.
+  *                 Their records stay (rows, wall time, fingerprint), so a
+  *                 resumed build still skips them.
   *
   * Scale notes (100 TB / 1000 executors): content bytes are read once and
   * never shuffled; the forward join shuffles tokenized digests, the
@@ -189,12 +200,14 @@ object IndexBuilder {
 
   /** Bumped whenever the on-disk index layout or stage semantics change:
     * part of every stage fingerprint, so resume never reuses output written
-    * by an incompatible builder version. (v8: the positional sidecar holds
+    * by an incompatible builder version. (v9: the keymap, forward and vocab
+    * are build scratch, deleted by the lexicon commit, and compaction
+    * encodes from the committed postings; v8: the positional sidecar holds
     * one row per postings block, not per (term, doc); v7: posting blocks
     * are cut only at blockSize or at a (termId, salt) group's end, no
     * longer at every docId shard; v6: one manifest commit per build stage,
     * append and compaction. Older indexes must be rebuilt.) */
-  val FormatVersion = 8
+  val FormatVersion = 9
 
   /** Scale-adaptive partition count (optimization guide §2.2/§6.1): derive
     * the partition count from the DATA size — `ceil(bytes / targetBytes)`,
@@ -400,14 +413,19 @@ object IndexBuilder {
           .as[(String, Long)],
         parts, cfg.vocabPath, baseId = 0L, targetBytes = cfg.rangeTargetBytes)
 
+      val vocab = spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
       // skipped without a job when the vocab's max df (from writeRanked's
       // one agg) can't cross the threshold — every small/micro-batch build
       val heavy =
-        if (maxDf > cfg.heavyDfThreshold) heavyTerms(
-          spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath), cfg)
-        else new java.util.HashSet[Integer]()
+        if (maxDf > cfg.heavyDfThreshold) heavyTerms(vocab, cfg) else Nil
 
-      val nb = encodePostings(spark, forwardWithIds, heavy, numDocs, avgDl,
+      // explode the forward index and join dense termIds on the term string
+      // (AQE broadcasts the vocab when it is small)
+      val postings = forwardWithIds
+        .select($"docId", $"dl", explode(arrays_zip($"terms", $"tfs")).as("tz"))
+        .select(col("tz.terms").as("term"), $"docId", col("tz.tfs").as("tf"), $"dl")
+        .join(vocab.select($"termId", $"term"), "term")
+      val nb = encodePostings(spark, postings, heavy, numDocs, avgDl,
         cfg, parts, totalTokens, metricsAcc, cfg.postingsPath)
       manifest.commit(StageRecord("postings", "complete", fp, nb,
         (System.nanoTime() - t0) / 1000000,
@@ -424,17 +442,27 @@ object IndexBuilder {
     // ---- stage 4: lexicon + stats ------------------------------------------
     if (!manifest.isComplete("lexicon", fp)) {
       val t0 = System.nanoTime()
-      writeLexicon(spark, cfg.postingsPath, cfg.vocabPath,
+      writeLexicon(spark, cfg.postingsPath,
+        spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath),
         cfg.lexiconPath, parts, cfg.rangeTargetBytes)
+      val recs = manifest.read()
       // one lexicon row per vocab term (see writeLexicon) — the count is
       // stage 3's vocabSize, no job needed
-      val vocabN = manifest.get("postings").get.extra("vocabSize").toLong
+      val vocabN = recs("postings").extra("vocabSize").toLong
+      def unnamed(stage: String, key: String) =
+        recs(stage).copy(extra = recs(stage).extra - key)
+      // the same commit stops naming the build's scratch, which deletes it
       manifest.commit(StageRecord("lexicon", "complete", fp, vocabN,
         (System.nanoTime() - t0) / 1000000,
         Map("numDocs" -> numDocs.toString, "avgDl" -> avgDl.toString,
             "totalTokens" -> totalTokens.toString,
-            "dir" -> cfg.dir("lexicon"))))
+            "dir" -> cfg.dir("lexicon"))),
+        unnamed("keymap", "dir"), unnamed("forward", "dir"),
+        unnamed("postings", "vocabDir"))
     }
+    // a crash inside the lexicon commit's deletions leaves scratch that
+    // a retry, which finds every stage complete, must still delete
+    manifest.finishDrop()
 
     writeMetrics(spark, metricsAcc, cfg)
     CorpusStats(numDocs, avgDl, totalTokens, manifest.get("lexicon").get.rows)
@@ -461,27 +489,23 @@ object IndexBuilder {
     * ties at the cutoff break by term (deterministic across parallelism).
     * `terms` is a vocab or a lexicon (both carry term, termId, df). */
   private def heavyTerms(terms: org.apache.spark.sql.DataFrame,
-      cfg: IndexConfig): java.util.HashSet[Integer] = {
+      cfg: IndexConfig): Seq[Int] = {
     import terms.sparkSession.implicits._
-    val s = new java.util.HashSet[Integer]()
     terms
       .filter($"df" > cfg.heavyDfThreshold)
       .orderBy($"df".desc, $"term".asc)
       .limit(cfg.maxHeavyTerms)
-      .select($"termId").as[Int].collect()
-      .foreach(id => s.add(id))
-    s
+      .select($"termId").as[Int].collect().toSeq
   }
 
   /** The salted postings-encode pipeline (build stage 3 and compact share
-    * it): explode the forward index, join dense termIds on the term string
-    * (AQE broadcasts the vocab when it is small), salt heavy terms by docId
-    * shard, shuffle on (termId, salt), and stream-encode delta+VByte blocks
-    * of `blockSize` postings, cut short only at a group's end. Returns the
-    * block count. */
+    * it): salt the `heavyIds` terms of `postings` — rows with (termId,
+    * docId, tf, dl) columns — by docId shard, shuffle on (termId, salt),
+    * and stream-encode delta+VByte blocks of `blockSize` postings, cut
+    * short only at a group's end. Returns the block count. */
   private def encodePostings(spark: SparkSession,
-      forwardDF: org.apache.spark.sql.DataFrame,
-      heavy: java.util.HashSet[Integer], numDocs: Long, avgDl: Double,
+      postings: org.apache.spark.sql.DataFrame,
+      heavyIds: Seq[Int], numDocs: Long, avgDl: Double,
       cfg: IndexConfig, parts: Int, numTokens: Long,
       metricsAcc: CollectionAccumulator[PartitionMetric],
       outPath: String): Long = {
@@ -497,15 +521,11 @@ object IndexBuilder {
     // multiplier (finer skew smoothing at cluster scale)
     val encodeParts = sizedParts(numTokens * 5L, cfg.encodeTargetBytes, parts * 4)
 
-    val vocabIds = spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
-      .select($"termId", $"term")
     // salt as a pure column expression (In/InSet over ≤ maxHeavyTerms ids +
-    // integer-division shard), NOT a typed lambda: the explode → join →
+    // integer-division shard), NOT a typed lambda: the rows' producer →
     // salt → exchange map side stays inside one whole-stage-codegen span —
     // no tuple ser/de per posting row. shardExpr mirrors shardOf exactly
     // (integral DIV, clamped).
-    import scala.jdk.CollectionConverters._
-    val heavyIds: Seq[Int] = heavy.asScala.map(_.intValue).toSeq
     // NB: Column `/` is floating division — DIV keeps it integral like
     // Scala Long division in shardOf
     val shardExpr = least(greatest(
@@ -514,12 +534,7 @@ object IndexBuilder {
     val saltExpr =
       if (heavyIds.isEmpty) lit(0)
       else when($"termId".isin(heavyIds: _*), shardExpr).otherwise(lit(0))
-    val salted = forwardDF
-      .select($"docId", $"dl",
-        explode(arrays_zip($"terms", $"tfs")).as("tz"))
-      .select(col("tz.terms").as("term"), $"docId",
-        col("tz.tfs").as("tf"), $"dl")
-      .join(vocabIds, "term")
+    val salted = postings
       .select($"termId", saltExpr.as("salt"), $"docId", $"tf", $"dl")
 
     // ---- packed-run shuffle: ONE range-placed shuffle, final layout ----
@@ -539,7 +554,7 @@ object IndexBuilder {
     // drags the N→4N scaling ratio). blockIdx resets per (termId, salt)
     // group, so the blocks do not depend on placement. The packed runs are
     // persisted (executor block-manager cache), so repartitionByRange's
-    // sampling job materializes the explode+join+pack lineage exactly once
+    // sampling job materializes the postings+pack lineage exactly once
     // and the shuffle re-reads the cache; a single-partition range exchange
     // runs no sampling job, so the lineage executes exactly once in the
     // write — persisting it would only add cache churn.
@@ -572,6 +587,7 @@ object IndexBuilder {
             private var blockIdx = 0
             private var termId = 0
             private var heap: scala.collection.mutable.PriorityQueue[RunCursor] = _
+            private var runs = 0L
             private var metricsEmitted = false
 
             private def groupPending: Boolean = heap != null && heap.nonEmpty
@@ -580,7 +596,7 @@ object IndexBuilder {
               val h = groupPending || base.hasNext
               if (!h && !metricsEmitted) {
                 metricsAcc.add(PartitionMetric("postings", pid, rows, rows,
-                  bytesOut, (System.nanoTime() - pt0) / 1000000))
+                  bytesOut, (System.nanoTime() - pt0) / 1000000, runs))
                 metricsEmitted = true
               }
               h
@@ -597,6 +613,7 @@ object IndexBuilder {
               while (base.hasNext && base.head._1 == termId &&
                   base.head._2 == salt) {
                 val c = new RunCursor(base.next()._5)
+                runs += 1
                 if (c.alive) heap.enqueue(c)
               }
             }
@@ -690,15 +707,16 @@ object IndexBuilder {
   }
 
   /** Per-term stats aggregated from block metadata → lexicon parquet,
-    * range-partitioned and sorted by termId. Returns nothing: the row
-    * count is the vocab size by construction (every vocab term has >= 1
-    * posting block) and the block total is the caller's postings count. */
+    * range-partitioned and sorted by termId; `terms` (a vocab, or the
+    * lexicon a compaction replaces) names each termId's term. Returns
+    * nothing: the row count is the size of `terms` by construction (every
+    * term has >= 1 posting block) and the block total is the caller's
+    * postings count. */
   private def writeLexicon(spark: SparkSession, postingsPath: String,
-      vocabPath: String, outPath: String, parts: Int,
-      targetBytes: Long = 32L * 1024 * 1024): Unit = {
+      terms: org.apache.spark.sql.DataFrame, outPath: String, parts: Int,
+      targetBytes: Long): Unit = {
     import spark.implicits._
-    val vocab = spark.read.schema(IndexSchema.vocab).parquet(vocabPath)
-      .select($"termId", $"term")
+    val vocab = terms.select($"termId", $"term")
     val agg = spark.read.schema(IndexSchema.postings).parquet(postingsPath)
       .groupBy($"termId")
       .agg(sum($"count").as("df"), sum($"sumTf").as("cf"),
@@ -706,8 +724,8 @@ object IndexBuilder {
         max($"maxTfNorm").as("maxTfNorm"))
       .join(vocab, "termId") // AQE broadcasts when the vocab is small
       .select($"term", $"termId", $"df", $"cf", $"nBlocks", $"maxTfNorm")
-    // one lexicon row per vocab term: size the range exchange from the
-    // vocab's real file bytes (scale-adaptive — see sizedParts), capped at
+    // one lexicon row per term: size the range exchange from the terms'
+    // real file bytes (scale-adaptive — see sizedParts), capped at
     // the old core-derived parts/4
     writeByTermId(agg, sizedParts(planBytes(vocab), targetBytes,
       math.max(parts / 4, 1)), outPath)
@@ -742,11 +760,13 @@ object IndexBuilder {
     * Appends leave (a) per-segment shard ranges — a k-segment index has
     * k×numShards shard groups, so distributed WAND runs k× more shard
     * tasks — and (b) per-term block chains cut at every segment.
-    * Compaction rebuilds docs/postings/lexicon from the UNION of the
-    * segment forward indexes (no source content touched, nothing
-    * re-tokenized): docIds are
-    * unchanged (still the global dense ranks), the shard mapping is
-    * recomputed over the merged doc space, heavy terms are re-detected
+    * Compaction rebuilds docs/postings/lexicon from the committed ones (no
+    * source content touched, nothing re-tokenized, no term joined by its
+    * string): the postings blocks of every segment decode to (termId,
+    * docId, tf) and take dl from the docs table, and those rows re-encode
+    * through the build's postings pipeline. docIds and termIds are
+    * unchanged (segments already store global ones), the docs table is
+    * re-sharded over the merged doc space, heavy terms are re-detected
     * from the authoritative lexicon df, and block-max bounds are recomputed
     * with the merged avgdl. The Lucene/terrier segment-merge shape
     * (SURVEY.md §7.4).
@@ -773,33 +793,40 @@ object IndexBuilder {
       spark.sparkContext.collectionAccumulator[PartitionMetric]("graft.metrics")
     val parts = partitions(spark, cfg)
 
-    // union of forward indexes with global docIds (segment forwards are
-    // 0-based; shift by each segment's recorded docIdBase)
     val segs = recs.values.filter(_.stage.startsWith("append-")).toSeq
-    def forward(c: IndexConfig) =
-      spark.read.schema(IndexSchema.forward).parquet(c.forwardPath)
-    val fw = segs.foldLeft(forward(cfg)) { (df, r) =>
-      df.unionByName(forward(cfg.copy(indexDir = cfg.path(r.extra("dir"))))
-        .withColumn("docId", $"docId" + r.extra("docIdBase").toLong))
-    }
+    val paths = cfg.paths(recs)
+    // the committed rows only: an append moves its segment's files (docIds
+    // from the committed numDocs up) into these directories before it
+    // commits, so a crashed or in-flight one has rows here too; its
+    // postings fall out at the join on these docs below
+    val docs = spark.read.schema(IndexSchema.docs).parquet(paths.docs)
+      .filter($"docId" < st.numDocs)
 
-    // fresh global shard mapping + docs table
+    // the docs table re-sharded over the merged doc space
     val v = base.version + 1
     val (docsDir, postingsDir, lexiconDir) =
       (s"docs-v$v", s"postings-v$v", s"lexicon-v$v")
     val nDocsV = st.numDocs; val nShardsV = cfg.numShards
     val shardUdf = udf((d: Long) => shardOf(d, nDocsV, nShardsV))
-    fw.select($"docId", $"repo", $"path", $"commit", $"lang", $"dl", $"sha",
+    docs.select($"docId", $"repo", $"path", $"commit", $"lang", $"dl", $"sha",
         shardUdf($"docId").as("shard"))
       .write.mode("overwrite").parquet(cfg.path(docsDir))
 
+    // every committed segment's postings, decoded, with dl from the docs
+    val postings = spark.read.schema(IndexSchema.postings).parquet(paths.postings)
+      .select($"termId", $"bytes").as[(Int, Array[Byte])]
+      .flatMap { case (t, bytes) =>
+        PostingCodec.decodeBlock(bytes).map(p => (t, p.docId, p.tf)) }
+      .toDF("termId", "docId", "tf")
+      .join(docs.select($"docId", $"dl"), "docId")
+
     // heavy terms from the authoritative (merged) lexicon df
-    val lexicon = spark.read.schema(IndexSchema.lexicon).parquet(cfg.lexiconPath)
-    val nb = encodePostings(spark, fw, heavyTerms(lexicon, cfg),
+    val lexicon = spark.read.schema(IndexSchema.lexicon).parquet(paths.lexicon)
+    val nb = encodePostings(spark, postings, heavyTerms(lexicon, cfg),
       st.numDocs, st.avgDl, cfg, parts, st.totalTokens, metricsAcc,
       cfg.path(postingsDir))
     // compact never changes the vocabulary: the lexicon's row count stays
-    writeLexicon(spark, cfg.path(postingsDir), cfg.vocabPath,
+    writeLexicon(spark, cfg.path(postingsDir), lexicon,
       cfg.path(lexiconDir), parts, cfg.rangeTargetBytes)
 
     val avgDl = st.avgDl.toString
@@ -812,7 +839,7 @@ object IndexBuilder {
           "PositionalIndex.append the rest before compacting")
       val dir = s"positions-v$v"
       moved(pos, dir).copy(rows = PositionalIndex.repack(spark, cfg,
-        cfg.postingsPath, cfg.positionsPath, cfg.path(postingsDir), cfg.path(dir)))
+        paths.postings, paths.positions, cfg.path(postingsDir), cfg.path(dir)))
     }
     val updated = segs.map(restamp) ++ Seq(
       moved(recs("docs"), docsDir),
@@ -926,17 +953,19 @@ object IndexBuilder {
     *
     * Mechanics: the batch is built as a standalone sub-index under
     * indexDir/segments/segN (full pipeline, stage-checkpointed in its own
-    * manifest), then merged by OFFSET: docIds shift by the current corpus
-    * size (keeping ids dense and deterministic given batch order), stored
-    * shard ids shift into a fresh range (the segment's docs get shards of
-    * their own, and its blocks lie inside the segment's docId range), new
-    * terms extend the vocabulary with ids after the existing ones, and posting
-    * blocks are rebased byte-wise (PostingCodec.shiftBlockBase — no
-    * re-encoding). The segment's vocab/docs/postings rows join those
-    * structures as `segN-` part-files. The lexicon is merged incrementally
-    * from the committed lexicon into a fresh directory; block-max bounds
-    * from older segments stay valid via the avgdl scale correction in
-    * Searcher (the `append-N` record keeps the segment's avgDlAtBuild).
+    * manifest, which keeps its docs, postings and lexicon), then merged by
+    * OFFSET: docIds shift by the current corpus size (keeping ids dense
+    * and deterministic given batch order), stored shard ids shift into a
+    * fresh range (the segment's docs get shards of their own, and its
+    * blocks lie inside the segment's docId range), terms the committed
+    * lexicon lacks get ids after its own, and posting blocks are rebased
+    * byte-wise (PostingCodec.shiftBlockBase — no re-encoding). The
+    * segment's docs/postings rows join those structures as `segN-`
+    * part-files. The lexicon is merged incrementally from the committed
+    * lexicon into a fresh directory — until the commit, the only place the
+    * new terms' ids live; block-max bounds from older segments stay valid
+    * via the avgdl scale correction in Searcher (the `append-N` record
+    * keeps the segment's avgDlAtBuild).
     *
     * Crash safety: ONE manifest commit publishes the `append-N` record, the
     * new global stats and the new lexicon directory together. A crash
@@ -983,23 +1012,22 @@ object IndexBuilder {
     val subCfg = cfg.copy(indexDir = cfg.path(segDir))
     val subStats = build(spark, batch, subCfg, tag)
     val parts = partitions(spark, cfg)
-    val (vocabDir, docsDir, postingsDir) =
-      (cfg.vocabPath, cfg.docsPath, cfg.postingsPath)
-    Seq(vocabDir, docsDir, postingsDir).foreach(dropParts(io, _, prefix))
+    val paths = cfg.paths(recs)
+    Seq(paths.docs, paths.postings).foreach(dropParts(io, _, prefix))
     val stage = s"${subCfg.indexDir}/merge"
-    val subVocab = spark.read.schema(IndexSchema.vocab).parquet(subCfg.vocabPath)
+    val subTerms = spark.read.schema(IndexSchema.lexicon).parquet(subCfg.lexiconPath)
+    val oldLexicon = spark.read.schema(IndexSchema.lexicon).parquet(paths.lexicon)
 
     // 1) new terms (anti-join on term) get dense ids after the committed
-    //    vocabulary — distributed, no driver collect; existing termIds are
+    //    lexicon's — distributed, no driver collect; existing termIds are
     //    immutable. O(new terms) per append.
-    val oldVocab = spark.read.schema(IndexSchema.vocab).parquet(vocabDir)
     val (newTerms, _) = writeRanked(spark,
-      subVocab.select($"term", $"df")
-        .join(oldVocab.select($"term"), Seq("term"), "left_anti")
+      subTerms.select($"term", $"df")
+        .join(oldLexicon.select($"term"), Seq("term"), "left_anti")
         .as[(String, Long)],
-      parts, s"$stage/vocab", baseId = st.vocabSize,
+      parts, s"$stage/terms", baseId = st.vocabSize,
       targetBytes = cfg.rangeTargetBytes)
-    val newVocab = spark.read.schema(IndexSchema.vocab).parquet(s"$stage/vocab")
+    val newVocab = spark.read.schema(IndexSchema.vocab).parquet(s"$stage/terms")
 
     // 2) docs: shift docId + shard
     spark.read.schema(IndexSchema.docs).parquet(subCfg.docsPath)
@@ -1007,13 +1035,13 @@ object IndexBuilder {
       .withColumn("shard", $"shard" + shardBase)
       .write.mode("overwrite").parquet(s"$stage/docs")
 
-    // 3) postings: remap termId via a join on the merged vocabulary (the
+    // 3) postings: remap termId via a join on the merged term set (the
     //    sub→global mapping never lands on the driver), shift shard + doc
     //    base byte-wise
-    val mapping = subVocab
+    val mapping = subTerms
       .select($"termId".as("_1"), $"term")
-      .join(oldVocab.unionByName(newVocab).select($"termId".as("_2"), $"term"),
-        "term")
+      .join(oldLexicon.select($"termId", $"term")
+        .union(newVocab.select($"termId", $"term")).toDF("_2", "term"), "term")
       .select($"_1", $"_2").as[(Int, Int)]
     val sub = spark.read.schema(IndexSchema.postings).parquet(subCfg.postingsPath)
       .as[PostingBlockRow]
@@ -1046,12 +1074,10 @@ object IndexBuilder {
     // AQE's runtime conversion would still run both sides' shuffles)
     val delta = if (subStats.vocabSize <= LexDeltaBroadcastCap)
       broadcast(delta0) else delta0
-    val lexPath = cfg.lexiconPath
     // existing terms: the delta merged into their row (left join); new
     // terms: the staged vocab rows, each with >= 1 block in this segment,
     // so their inner join against the delta is lossless
-    val mergedLex = spark.read.schema(IndexSchema.lexicon).parquet(lexPath)
-      .join(delta, Seq("termId"), "left")
+    val mergedLex = oldLexicon.join(delta, Seq("termId"), "left")
       .select($"term", $"termId",
         ($"df" + coalesce($"dDf", lit(0L))).as("df"),
         ($"cf" + coalesce($"dCf", lit(0L))).as("cf"),
@@ -1063,19 +1089,19 @@ object IndexBuilder {
           $"dBlocks".as("nBlocks"), $"dMax".as("maxTfNorm")))
     // output layout sized from the committed lexicon's own file bytes —
     // no read-and-analyze pass just for sizing
-    val lexBytes = io.list(lexPath).filter(_.endsWith(".parquet"))
-      .map(n => io.size(s"$lexPath/$n")).sum
+    val lexBytes = io.list(paths.lexicon).filter(_.endsWith(".parquet"))
+      .map(n => io.size(s"${paths.lexicon}/$n")).sum
     val lexDir = s"lexicon-v${base.version + 1}"
     writeByTermId(mergedLex, sizedParts(
       if (lexBytes > 0L) lexBytes else Long.MaxValue,
       cfg.rangeTargetBytes, math.max(parts / 4, 1)), cfg.path(lexDir))
 
-    // 5) the segment's rows join the extended structures; cached plans
-    //    rooted here pin the old file listings (Spark's CacheManager
-    //    substitutes them into ANY matching read), so re-list them
-    moveParts(io, s"$stage/vocab", vocabDir, prefix)
-    moveParts(io, s"$stage/docs", docsDir, prefix)
-    moveParts(io, s"$stage/postings", postingsDir, prefix)
+    // 5) the segment's rows join the extended structures (its new terms
+    //    live on in the staged lexicon only); cached plans rooted here pin
+    //    the old file listings (Spark's CacheManager substitutes them into
+    //    ANY matching read), so re-list them
+    moveParts(io, s"$stage/docs", paths.docs, prefix)
+    moveParts(io, s"$stage/postings", paths.postings, prefix)
     io.deleteRecursively(stage)
     spark.catalog.refreshByPath(cfg.indexDir)
 

@@ -23,7 +23,8 @@ object IndexSchema {
   private def of[T <: Product: scala.reflect.runtime.universe.TypeTag] =
     Encoders.product[T].schema
 
-  /** Stage 0: docId per unique (repo, path, commit). */
+  /** Stage 0: docId per unique (repo, path, commit). The keymap, forward
+    * and vocab are build scratch: the lexicon commit deletes them. */
   val keymap: StructType = of[DocMapEntry]
 
   /** Stage 1: per-doc metadata plus the doc's distinct terms and their tfs

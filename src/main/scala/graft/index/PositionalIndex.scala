@@ -23,12 +23,12 @@ final case class PosBlockRow(
 
 /** Opt-in positional sidecar of a built index (phrase / proximity queries).
   *
-  * The main build keeps its content-read-once contract and its forward
-  * schema; positions are a SEPARATE pass over the corpus, built only for
-  * deployments that serve phrase queries (Lucene's optional positions the
-  * same way: an index without them cannot run PhraseQuery). The sidecar
-  * reuses the main index's keymap (docIds) and vocab (termIds), so phrase
-  * and bag-of-words queries agree on every id.
+  * The main build keeps its content-read-once contract; positions are a
+  * SEPARATE pass over the corpus, built only for deployments that serve
+  * phrase queries (Lucene's optional positions the same way: an index
+  * without them cannot run PhraseQuery). The sidecar resolves docIds
+  * through the main index's docs table and termIds through its lexicon,
+  * so phrase and bag-of-words queries agree on every id.
   *
   * Layout: one row per postings block ([[PosBlockRow]]) — Lucene's `.pos`
   * file addressed by the `.doc` file's blocks. The writer takes the block
@@ -44,8 +44,8 @@ final case class PosBlockRow(
   *
   * Scale shape (100 TB): tokenize runs in place (content never shuffled);
   * the wide exchanges move (term, docId, positions) rows bounded by token
-  * count — the keymap join ships 3 short strings + positions per doc-term,
-  * the vocab join is AQE-broadcast for all but web-scale vocabularies, the
+  * count — the docs join ships 3 short strings + positions per doc-term,
+  * the lexicon join is AQE-broadcast for all but web-scale vocabularies, the
   * block join pairs each with its (termId, docId, firstDocId, tf) posting,
   * and the final range exchange moves the packed bytes once. Resumable:
   * the `positions` manifest record skips a completed build with a matching
@@ -68,13 +68,13 @@ final case class PosBlockRow(
 object PositionalIndex {
 
   /** (termId, docId, posBytes) rows for `corpus`, one per (term, doc),
-    * docIds resolved against the index's docs table restricted to
-    * `docId >= baseDocId` — for an appended batch the floor is the
-    * append's docId base, so a key REWRITTEN by an update (its old docId
-    * just died as a tombstone) maps only to its fresh id, never to the
-    * dead twin. */
+    * termIds resolved against the lexicon `paths` names and docIds against
+    * its docs table restricted to `docId >= baseDocId` — for an appended
+    * batch the floor is the append's docId base, so a key REWRITTEN by an
+    * update (its old docId just died as a tombstone) maps only to its
+    * fresh id, never to the dead twin. */
   private def positionRows(spark: SparkSession, corpus: Dataset[SourceFile],
-      cfg: IndexConfig, baseDocId: Long): DataFrame = {
+      cfg: IndexConfig, paths: IndexPaths, baseDocId: Long): DataFrame = {
     import spark.implicits._
     val uniFold = cfg.unicodeFold
     val perTerm = corpus.flatMap { sf =>
@@ -90,13 +90,13 @@ object PositionalIndex {
       }
     }.toDF("repo", "path", "commit", "term", "posBytes")
     perTerm
-      .join(spark.read.schema(IndexSchema.docs).parquet(cfg.docsPath)
+      .join(spark.read.schema(IndexSchema.docs).parquet(paths.docs)
           .filter($"docId" >= baseDocId)
           .select($"docId", $"repo", $"path", $"commit"),
         Seq("repo", "path", "commit"))
-      .join(spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
+      .join(spark.read.schema(IndexSchema.lexicon).parquet(paths.lexicon)
           .select($"termId", $"term"),
-        "term") // AQE broadcasts the vocab when small
+        "term") // AQE broadcasts the lexicon when small
       .select($"termId", $"docId", $"posBytes")
   }
 
@@ -187,7 +187,7 @@ object PositionalIndex {
     // already built, so its token total is in the manifest
     val toks = scala.util.Try(IndexBuilder.stats(cfg).totalTokens)
       .getOrElse(Long.MaxValue / 8)
-    val n = pack(spark, positionRows(spark, corpus, cfg, baseDocId = 0L),
+    val n = pack(spark, positionRows(spark, corpus, cfg, paths, baseDocId = 0L),
       spark.read.schema(IndexSchema.postings).parquet(paths.postings),
       rangeParts(spark, cfg, toks * 4L), paths.positions)
     manifest.commit(StageRecord("positions", "complete", fp, n,
@@ -217,7 +217,8 @@ object PositionalIndex {
     }.getOrElse(throw new IllegalStateException(
       s"no committed append with fingerprint '$fingerprint' at ${cfg.indexDir}"))
     if (pos.extra("segments").toInt > seg) return 0L
-    val rec = stageAppend(spark, batch, cfg, baseDocId, seg, pos)
+    val rec = stageAppend(spark, batch, cfg, cfg.paths(base.records),
+      baseDocId, seg, pos)
     manifest.commit(base, base.records + ("positions" -> rec))
     spark.catalog.refreshByPath(cfg.indexDir)
     rec.rows - pos.rows
@@ -226,13 +227,15 @@ object PositionalIndex {
   /** Write the positions of main segment `seg`'s posting blocks (those at
     * or above `baseDocId`, already in the postings dir) into the positions
     * dir as `possegN-` part-files (replacing a crashed attempt's) and
-    * return the `positions` record to commit with it. */
+    * return the `positions` record to commit with it. `paths` are the
+    * directories the commit will name: before the main append commits,
+    * the batch's new terms are only in its staged lexicon. */
   private[index] def stageAppend(spark: SparkSession, batch: Dataset[SourceFile],
-      cfg: IndexConfig, baseDocId: Long, seg: Int, pos: StageRecord): StageRecord = {
+      cfg: IndexConfig, paths: IndexPaths, baseDocId: Long, seg: Int,
+      pos: StageRecord): StageRecord = {
     import spark.implicits._
     val t0 = System.nanoTime()
     val io = Manifest.io(cfg.indexDir)
-    val paths = cfg.paths()
     val prefix = s"posseg$seg"
     val live = paths.positions
     IndexBuilder.dropParts(io, live, prefix)
@@ -240,12 +243,12 @@ object PositionalIndex {
     // size the segment's range exchange from the batch's estimated bytes
     // (positions are a fraction of content size; the cap keeps the old
     // core-derived behavior when the estimate is unusable)
-    val n = pack(spark, positionRows(spark, batch, cfg, baseDocId),
+    val n = pack(spark, positionRows(spark, batch, cfg, paths, baseDocId),
       spark.read.schema(IndexSchema.postings).parquet(paths.postings)
         .filter($"firstDocId" >= baseDocId),
       rangeParts(spark, cfg, IndexBuilder.planBytes(batch.toDF())), stage)
     IndexBuilder.moveParts(io, stage, live, prefix)
-    io.deleteRecursively(stage)
+    io.deleteRecursively(cfg.path(s"segments/seg$seg/merge"))
     // re-list cached plans rooted here now that the posseg files exist: a
     // live Searcher's persisted positional reads pin the pre-append file
     // listing and would otherwise be substituted — minus this segment —
@@ -259,7 +262,8 @@ object PositionalIndex {
     * `oldPostings`) into the blocks at `newPostings` — the same postings
     * re-cut by [[IndexBuilder.compact]] — writing `out`. Nothing is
     * re-tokenized: each old block's stream is split per posting by the old
-    * block's tfs. Returns the new block count. */
+    * block's tfs. A crashed append's `possegN-` rows have no block at
+    * `newPostings` and are left out. Returns the new block count. */
   private[index] def repack(spark: SparkSession, cfg: IndexConfig,
       oldPostings: String, oldPositions: String, newPostings: String,
       out: String): Long = {

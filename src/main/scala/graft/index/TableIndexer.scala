@@ -134,12 +134,13 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
         // positional sidecar (when built): the batch's position rows land
         // as the same segment, resolved against the just-written docs rows
         // with `docBase` as the docId floor — a key REWRITTEN by an update
-        // maps only to its fresh id, never its dead twin. Deletes need no
-        // positional bookkeeping: phrase df/tf are computed live and
-        // tombstoned docs are skipped at query time.
+        // maps only to its fresh id, never its dead twin — and against the
+        // staged lexicon, the only one holding the batch's new terms.
+        // Deletes need no positional bookkeeping: phrase df/tf are computed
+        // live and tombstoned docs are skipped at query time.
         next.get("positions").foreach { pos =>
           next += "positions" -> PositionalIndex.stageAppend(spark,
-            toCorpus(df), cfg, docBase, seg, pos)
+            toCorpus(df), cfg, cfg.paths(next), docBase, seg, pos)
         }
       }
     }
@@ -184,9 +185,11 @@ final class TableIndexer(spark: SparkSession, ops: TableOps,
         .flatMap(c => CodeTokenizer.tokenize(c, unicode).distinct)
         .toDF("term")
         .groupBy($"term").agg(count(lit(1)).as("delta"))
-      val vocab = spark.read.schema(IndexSchema.vocab).parquet(cfg.vocabPath)
-        .select($"term", $"termId")
-      val newDelta = deadTerms.join(vocab, "term")
+      // a removed row was indexed before this refresh: its terms are all
+      // in the committed lexicon
+      val terms = spark.read.schema(IndexSchema.lexicon)
+        .parquet(cfg.paths(base.records).lexicon).select($"term", $"termId")
+      val newDelta = deadTerms.join(terms, "term")
         .select($"termId", $"delta")
       val prevDelta: DataFrame = prev match {
         case Some(r) => spark.read.schema(IndexSchema.dfdelta)

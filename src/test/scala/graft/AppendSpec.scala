@@ -179,7 +179,7 @@ class AppendSpec extends AnyFunSuite {
       .agg(sum($"count").as("df"), sum($"sumTf").as("cf"),
         count(lit(1)).cast("int").as("nBlocks"),
         max($"maxTfNorm").as("maxTfNorm"))
-      .join(spark.read.parquet(c.vocabPath).select($"termId", $"term"),
+      .join(spark.read.parquet(c.lexiconPath).select($"termId", $"term"),
         "termId"))
     assert(got.nonEmpty && got == want,
       "merged lexicon diverged from the full recompute")
@@ -214,6 +214,39 @@ class AppendSpec extends AnyFunSuite {
     val s = new Searcher(spark, c)
     Seq("if return", "hash join", "def val").foreach { q =>
       assert(s.searchWAND(q, 10).toVector == o.topK(q, 10), s"'$q'")
+    }
+  }
+
+  test("compaction after a crashed append compacts only the committed rows") {
+    // the crashed append's docs and postings files are in the live
+    // directories (moved there before its commit); compaction must leave
+    // them out, or they would be committed with the compacted index
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("graft-append-crash-compact")
+    val c = cfg(dir)
+    IndexBuilder.build(spark, base.toDS(), c, "base")
+    IndexBuilder.append(spark, batch.toDS(), c, "b1")
+    val dirC = TestSpark.tmpDir("graft-append-crash-compact-clean")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(dir), new java.io.File(dirC))
+    val batch2 = (4000L until 4100L)
+      .map(i => { val f = CorpusGen.genFile(i, 42L); f.copy(repo = "e_" + f.repo) })
+    crashAt(dir, mainCommit(dir))(IndexBuilder.append(spark, batch2.toDS(), c, "b2"))
+    assert(spark.read.parquet(c.docsPath).count() == 600, "crash state not set up")
+
+    assert(IndexBuilder.compact(spark, c).numDocs == 500)
+    val cC = cfg(dirC)
+    IndexBuilder.compact(spark, cC)
+    def rows(c: IndexConfig) = Seq(c.docsPath, c.postingsPath, c.lexiconPath)
+      .map(spark.read.parquet(_))
+    rows(c).zip(rows(cC)).zip(Seq("docs", "postings", "lexicon")).foreach {
+      case ((got, want), name) =>
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"compacted $name hold rows of the crashed append")
+    }
+    val s = new Searcher(spark, c)
+    queries.foreach { q =>
+      assert(s.searchWAND(q, 10).toVector == oracle.topK(q, 10), s"'$q'")
     }
   }
 
@@ -261,5 +294,23 @@ class AppendSpec extends AnyFunSuite {
     assert(mPost.get("postings").get.rows ==
       spark.read.parquet(c.postingsPath).count(),
       "postings record stale after compact")
+
+    // compaction re-encodes the committed postings into what a from-scratch
+    // build of the same corpus writes: the same docs rows, and under each
+    // term the same blocks and lexicon stats (an appended index numbers
+    // the terms it did not know after the old ones, so termIds differ)
+    val cS = cfg(TestSpark.tmpDir("graft-append2-scratch"))
+    IndexBuilder.build(spark, (base ++ batch ++ batch2).toDS(), cS, "scratch")
+    def byTerm(c: IndexConfig) = {
+      val lex = spark.read.parquet(c.lexiconPath)
+      Seq(spark.read.parquet(c.docsPath), lex.drop("termId"),
+        spark.read.parquet(c.postingsPath)
+          .join(lex.select($"termId", $"term"), "termId").drop("termId"))
+    }
+    byTerm(c).zip(byTerm(cS)).zip(Seq("docs", "lexicon", "postings")).foreach {
+      case ((got, want), name) =>
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"compacted $name differ from a from-scratch build's")
+    }
   }
 }

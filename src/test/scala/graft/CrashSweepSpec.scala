@@ -17,12 +17,13 @@ import graft.sources.TableOps
 /** Crash-safety sweep for every index mutation: for each n up to the number
   * of mutating storage operations a clean run performs, fail the n-th one
   * (the process "dies" there), retry, and require the index to equal the
-  * one a clean run produces — lexicon, vocab, docs, postings, tombstones
-  * and manifest records: everything a Searcher reads, so the retried
-  * index answers every query exactly as the clean one, whose WAND and TAAT
-  * top-10 are checked against [[SequentialOracle]]. Append and refresh are
-  * also retried under a DIFFERENT fingerprint: the crashed batch is
-  * abandoned (the table moved on) and must leave no trace. */
+  * one a clean run produces — lexicon, docs, postings, tombstones and
+  * manifest records: everything a Searcher reads, so the retried index
+  * answers every query exactly as the clean one, whose WAND and TAAT
+  * top-10 are checked against [[SequentialOracle]] — and to hold none of
+  * a build's scratch (keymap, forward, vocab) anywhere on disk. Append and
+  * refresh are also retried under a DIFFERENT fingerprint: the crashed
+  * batch is abandoned (the table moved on) and must leave no trace. */
 class CrashSweepSpec extends AnyFunSuite {
   // a session of its own: two shuffle partitions and no adaptive
   // re-planning suit the tiny corpus and keep the few hundred operations
@@ -76,10 +77,21 @@ class CrashSweepSpec extends AnyFunSuite {
     }.sorted
   }
 
+  /** The directories under `root` named like a build's scratch. */
+  def scratch(root: String): Seq[String] = {
+    def walk(d: File): Seq[String] = Option(d.listFiles()).toSeq.flatten
+      .filter(_.isDirectory).flatMap { f =>
+        (if (Set("keymap", "forward", "vocab")(f.getName)) Seq(f.getPath)
+         else Nil) ++ walk(f)
+      }
+    walk(new File(root))
+  }
+
   /** Everything a query can observe of an index, as comparable rows. */
   def dump(c: IndexConfig): Map[String, Seq[String]] = {
     val m = new Manifest(c.indexDir).read()
-    Map("lexicon" -> rows(c.lexiconPath), "vocab" -> rows(c.vocabPath),
+    // the lexicon rows include the term -> termId map
+    Map("lexicon" -> rows(c.lexiconPath),
       "docs" -> rows(c.docsPath), "postings" -> rows(c.postingsPath),
       // directory names aside: a compaction retried after its commit
       // compacts again into the next version's fresh directories
@@ -124,12 +136,15 @@ class CrashSweepSpec extends AnyFunSuite {
         val committed = version(d) > version(seed)
         retry(d)
         val got = dump(cfg(index(d)))
+        val left = scratch(index(d))
         FileUtils.deleteDirectory(new File(d))
-        (n, at, crashed, got, if (committed) wantCommitted else wantClean)
+        (n, at, crashed, got, left, if (committed) wantCommitted else wantClean)
       })
     }.foreach { f =>
-      val (n, at, crashed, got, want) = f.get()
+      val (n, at, crashed, got, left, want) = f.get()
       assert(crashed, s"[$name] no fault at op $n of $total")
+      assert(left.isEmpty, s"[$name] crash at op $n of $total ($at): " +
+        s"scratch left after the retry: $left")
       val diff = want.keySet.filter(k => got.get(k) != want.get(k)).map(k =>
         k -> (got.getOrElse(k, Nil).diff(want(k)).take(2),
           want(k).diff(got.getOrElse(k, Nil)).take(2)))
@@ -144,7 +159,9 @@ class CrashSweepSpec extends AnyFunSuite {
   def clean(seed: String, tag: String, index: String => String = identity)(
       op: String => Any): (String, Int) = {
     val d = copy(seed, tag)
-    (d, FaultInjection.run(index(d), never)(op(d))._1)
+    val ops = FaultInjection.run(index(d), never)(op(d))._1
+    assert(scratch(index(d)).isEmpty, s"[$tag] a clean run left scratch")
+    (d, ops)
   }
 
   /** Both ranked regimes return the oracle's top-10 on `c`. */

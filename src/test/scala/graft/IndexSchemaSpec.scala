@@ -15,7 +15,9 @@ import graft.sources.TableOps
   * ([[IndexSchema]]), and under a declared schema a column a file lacks
   * reads as null without an error. So each declaration must equal, in
   * field names and data types, the schema Spark infers from the files
-  * every index operation writes. */
+  * every index operation writes. The build's scratch (keymap, forward,
+  * vocab) is deleted by its lexicon commit, so it is checked on a build
+  * stopped just before that commit. */
 class IndexSchemaSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -73,6 +75,12 @@ class IndexSchemaSpec extends AnyFunSuite {
   test("build, positions, append and IndexBuilder.compact write the " +
       "declared schemas") {
     val c = cfg(TestSpark.tmpDir("graft-schema-idx"))
+    val (_, stopped) = FaultInjection.run(c.indexDir, (_, op, path) =>
+        op == "createExclusive" && path == s"${c.indexDir}/commits/v5") {
+      IndexBuilder.build(spark, files(0 until 200).toDS(), c, "base")
+    }
+    assert(stopped && new Manifest(c.indexDir).get("lexicon").isEmpty)
+    assertDeclared("build-scratch", c.indexDir)
     IndexBuilder.build(spark, files(0 until 200).toDS(), c, "base")
     PositionalIndex.build(spark, files(0 until 200).toDS(), c, "base")
     assertDeclared("build", c.indexDir)

@@ -78,7 +78,7 @@ class IndexSpec extends AnyFunSuite {
   test("heavy terms were salted across shards (skew defusal engaged)") {
     val m = new Manifest(indexDir)
     assert(m.get("postings").get.extra("heavyTerms").toInt > 0)
-    val ifId = spark.read.parquet(cfg(indexDir).vocabPath)
+    val ifId = spark.read.parquet(cfg(indexDir).lexiconPath)
       .filter($"term" === "if").select($"termId").as[Int].head()
     val blocks = spark.read.parquet(cfg(indexDir).postingsPath)
     val shardsOfIf = blocks.filter($"termId" === ifId)
@@ -87,7 +87,7 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("postings round-trip: decoded postings == per-doc term frequencies") {
-    val termOf = spark.read.parquet(cfg(indexDir).vocabPath)
+    val termOf = spark.read.parquet(cfg(indexDir).lexiconPath)
       .select($"termId", $"term").as[(Int, String)].collect().toMap
     val decoded = spark.read.parquet(cfg(indexDir).postingsPath)
       .as[PostingBlockRow]
@@ -287,8 +287,8 @@ class IndexSpec extends AnyFunSuite {
         .select($"term", $"termId").as[(String, Int)].collect().toMap
       assert(got == expected, s"rank drift at parts=$parts")
     }
-    // and the real index's vocab is the dense rank of its term set
-    val v = spark.read.parquet(cfg(indexDir).vocabPath)
+    // and the real index's termIds are the dense rank of its term set
+    val v = spark.read.parquet(cfg(indexDir).lexiconPath)
       .select($"term", $"termId").as[(String, Int)].collect().sortBy(_._2)
     assert(v.map(_._2).toSeq == v.indices)
     assert(v.map(_._1).toSeq == v.map(_._1).sorted.toSeq)
@@ -298,6 +298,11 @@ class IndexSpec extends AnyFunSuite {
     val metrics = spark.read.parquet(cfg(indexDir).metricsPath)
     assert(metrics.filter($"stage" === "forward").count() > 0)
     assert(metrics.filter($"stage" === "postings").count() > 0)
+    // every postings partition that merged postings records its fan-in:
+    // the packed runs its k-way merges consumed
+    val merged = metrics.filter($"stage" === "postings" && $"rows" > 0)
+    assert(merged.count() > 0)
+    assert(merged.filter($"fanIn" < 1).count() == 0, "postings fan-in not recorded")
     assert(metrics.agg(sum($"rows")).as[Long].head() > 0L)
   }
 
@@ -325,7 +330,7 @@ class IndexSpec extends AnyFunSuite {
     // the Searcher's footer index selects ≤ 2 files per term (2 = boundary
     // straddle), and those files hold ALL of the term's blocks (no misses)
     val allBlocks = spark.read.parquet(cfg(indexDir).postingsPath)
-    val someTerms = spark.read.parquet(cfg(indexDir).vocabPath)
+    val someTerms = spark.read.parquet(cfg(indexDir).lexiconPath)
       .select($"termId").as[Int].collect().sorted
       .grouped(math.max(1, built.vocabSize.toInt / 20)).map(_.head).toSeq
     someTerms.foreach { t =>
